@@ -421,7 +421,6 @@ def q_louvain_level0(spark, sf_dir):
         early_stop_limit=_LEVEL0_ROUNDS - 1,
         max_levels=1,
         local_finish_max_edges=0,
-        mode="df",
     )
     return res.labels
 
@@ -454,7 +453,6 @@ def q_louvain_level0_weighted(spark, sf_dir):
         early_stop_limit=_LEVEL0_ROUNDS - 1,
         max_levels=1,
         local_finish_max_edges=0,
-        mode="df",
     )
     return res.labels
 
@@ -4246,14 +4244,15 @@ def _louvain_level0_sql(rounds: int, sym: str = "sym", deg: str = "deg", extra_c
     round-0 fast path + `node < c` guard phaseOptimizationSort.cu:28-158,
     phaseOptimizationUpdate.cu:82-115) into chained CTEs.
 
-    Per round r >= 1, exactly the engine's df plan: frontier semi-join
-    (sources of edges whose dst moved last round into a community
-    different from src's, POST-move state), per-(node, dst-community)
-    weight sum A3, self-community window A5, delta-Q F1 with the same
-    IEEE expression tree as functions/modularity.py::delta_q
+    Per round r >= 1, the same rule the engine's move kernel
+    (louvain_local._round_moves) applies: the frontier (sources of edges
+    whose dst moved last round into a community different from src's,
+    POST-move state — the engine reads it off the edge state's ``dm``
+    column), per-(node, dst-community) weight sum A3, self-community
+    weight A5, delta-Q F1 with the same IEEE expression tree
     ((wnc - selfw)/m + k*(ctot_a - k - ctot_c)/(2.0*m*m), all
-    left-associated like the Python/Catalyst expressions), argmax with
-    the canonical (delta DESC, community ASC) tie-break A6, and the
+    left-associated like the NumPy expression), argmax with the
+    canonical (delta DESC, community ASC) tie-break A6, and the
     positive-gain + changed-community move filter. Round 0 is the fast
     path: each edge is its own candidate, selfw = 0, Σ_tot = k, and only
     node < newc moves apply.
@@ -4541,7 +4540,7 @@ def _louvain_full_sql(
       different summation order than a from-scratch recompute.
 
     For louvain_communities_local the labels under test come from the
-    ADAPTIVE engine Spark-side while the oracle still reads the
+    default run (driver-local tail on) Spark-side while the oracle still reads the
     distributed labels file — the per-row compare then doubles as the
     engines' bit-identity gate (VERDICT r3 gate (b)).
 

@@ -29,7 +29,6 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-LOUVAIN_MODE = os.environ.get("SPARK_GRAFT_LOUVAIN_MODE", "adaptive")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 # driver-local tail threshold (0 = always distributed — used by --scaling
 # so the efficiency number measures the distributed kernel, not NumPy)
@@ -184,7 +183,7 @@ def run_suite(names: list[str] | None, scaling_convs: int | None = None) -> dict
 
     if want("louvain"):
         t0 = time.time()
-        res = louvain(g, mode=LOUVAIN_MODE, local_finish_max_edges=LOCAL_FINISH)
+        res = louvain(g, local_finish_max_edges=LOCAL_FINISH)
         timings["louvain"] = time.time() - t0
         opt_rounds = [mt for mt in res.metrics if mt.get("round", -1) >= 0]
         extra["louvain_spark_rounds"] = sum(
@@ -221,7 +220,7 @@ def run_suite(names: list[str] | None, scaling_convs: int | None = None) -> dict
         sh_before = _shuffle_totals(spark)
         t0 = time.time()
         res = louvain(
-            g, mode=LOUVAIN_MODE, local_finish_max_edges=0, max_levels=1,
+            g, local_finish_max_edges=0, max_levels=1,
             broadcast_moves_max=BCAST_MAX,
             # Σ_tot stays on the default threshold: at level 0 it is
             # vertex-count-sized and broadcasting it OOMs the executors
@@ -249,7 +248,7 @@ def run_suite(names: list[str] | None, scaling_convs: int | None = None) -> dict
             )
         if names is not None and names == {"louvain_lvl0"}:
             # scaling legs parse these two keys; only publish them when
-            # this is the sole query so they can't clobber the adaptive
+            # this is the sole query so they can't clobber the full louvain
             # run's metrics in a full-suite run
             extra["louvain_spark_rounds"] = len(lvl0)
             extra["louvain_spark_edges_per_sec_per_iter"] = extra[
@@ -260,7 +259,7 @@ def run_suite(names: list[str] | None, scaling_convs: int | None = None) -> dict
         # (local tail disabled) — this is the timing that tracks the
         # scale-relevant plan round over round
         t0 = time.time()
-        res = louvain(g, mode=LOUVAIN_MODE, local_finish_max_edges=0)
+        res = louvain(g, local_finish_max_edges=0)
         timings["louvain_distributed"] = time.time() - t0
         opt_rounds = [mt for mt in res.metrics if mt.get("round", -1) >= 0]
         opt_sec = sum(mt["sec"] for mt in opt_rounds)
@@ -670,7 +669,7 @@ def main():
     t0 = time.time()
     r = run_suite(names, scaling_convs)
     total = round(time.time() - t0, 3)
-    # headline value = the round-1-comparable adaptive queries only, so
+    # headline value = the round-1-comparable default-engine queries only, so
     # round-over-round totals stay apples-to-apples; the *_distributed /
     # *_lvl0 timings (the 100 TB plan with the local tail disabled) are
     # reported alongside, not mixed into the total
@@ -689,7 +688,6 @@ def main():
                     if k not in dist},
         "sf": _sf(SF_DIR),
         "cpus": CPUS,
-        "louvain_mode": LOUVAIN_MODE,
     }
     for k, v in r["extra"].items():
         out[k] = v

@@ -93,8 +93,7 @@ def main():
         out["graph_build_sec"] = round(tb, 3)
         sc.setJobDescription("louvain_distributed")
         t0 = time.time()
-        res = louvain(g, mode=os.environ.get("SPARK_GRAFT_LOUVAIN_MODE", "adaptive"),
-                      local_finish_max_edges=0)
+        res = louvain(g, local_finish_max_edges=0)
         out["louvain_distributed_sec"] = round(time.time() - t0, 3)
         out["modularity"] = res.modularity
         out["sched"] = _sched_counts(spark)
@@ -109,8 +108,7 @@ def main():
         out["graph_build_sec"] = round(tb, 3)
         sc.setJobDescription("louvain_lvl0")
         t0 = time.time()
-        res = louvain(g, mode=os.environ.get("SPARK_GRAFT_LOUVAIN_MODE", "adaptive"),
-                      local_finish_max_edges=0, max_levels=1,
+        res = louvain(g, local_finish_max_edges=0, max_levels=1,
                       broadcast_moves_max=5_000_000, broadcast_comm_max=5_000_000)
         out["louvain_lvl0_sec"] = round(time.time() - t0, 3)
         out["modularity"] = res.modularity

@@ -20,29 +20,38 @@ Spark-native re-expression of the CUDA reference's two phases
 
 Scale design (this is where we diverge from a port):
 
-* state lives in ``edges_state = (src, dst, w, k_src, cs, cd)`` — the
+* one move kernel, two placements: every round is scored by
+  ``louvain_local._round_moves``. Distributed rounds run it per ``src``
+  hash partition in one ``mapInArrow`` pass (operators/louvain_arrow.py,
+  the reference's CSR-chunked HASH mode); once a coarsened level fits in
+  one node, the driver-local tail (operators/louvain_local.py) runs it on
+  the whole graph — the reference's own whole-graph-in-one-device model;
+* state lives in ``edges_state = (src, dst, w, k_src, cs, cd, dm)`` — the
   community of both endpoints is *carried on the edge row* and updated by
   joining only against the (small) per-round ``moves`` set, broadcast when
-  it fits, instead of re-joining the full vertex table every round;
-* per-round ``localCheckpoint`` truncates the iterative lineage; ONE
-  driver action per round (move count + both modularity reductions in a
-  single fused collect — the Spark analogue of the reference overlapping
-  its two reductions on two CUDA streams, community.h:72,88);
+  it fits, instead of re-joining the full vertex table every round.
+  ``dm`` ("dst moved last round") carries the frontier, so the kernel
+  picks its active sources partition-locally and no round shuffles a
+  frontier. Broadcast applies keep ``est`` hash-partitioned on ``src``
+  across rounds (vertex state and messages co-partitioned, as in
+  Pregelix), so the kernel's input is never re-shuffled;
+* Σ_tot is read off the edge state too (a community's Σ_tot is its
+  members' summed out-edge weight), so no vertex table is updated per
+  round;
+* per-round ``localCheckpoint`` truncates the iterative lineage; two
+  driver actions per round: the kernel's collect of a broadcastable move
+  set (its count comes free), and ONE observed scan returning both
+  modularity reductions — the Spark analogue of the reference
+  overlapping its two reductions on two CUDA streams,
+  community.h:72,88;
 * optional durable parquet checkpoints per superstep with per-partition
-  metrics enable mid-iteration resume (plans/checkpoint.py);
-* the candidate aggregation is a single shuffle on (src, cd); the argmax
-  ``max(struct(delta, -cd))`` compiles to partial+final SortAggregate —
-  structurally the reference's SORT mode (sort_by_key + reduce_by_key,
-  phaseOptimizationSort.cu:344-352); the arrow kernel is the HASH mode;
-* once the coarsened level fits in one node, the exact-parity local tail
-  (operators/louvain_local.py) takes over — the reference's own
-  whole-graph-in-one-device model.
+  metrics enable mid-iteration resume (plans/checkpoint.py).
 
 Canonical tie-break: highest ΔQ, then **lowest** community id — this is
 the reference's SORT/fast-path rule (reduce_by_key + GetMaxValue over
 (node, community)-sorted candidates keeps the first = lowest community,
-operators.h:30-40), and round 0 always runs that path. Labels are
-therefore deterministic across parallelism levels.
+operators.h:30-40). Labels are therefore deterministic across
+parallelism levels.
 """
 
 from __future__ import annotations
@@ -50,18 +59,17 @@ from __future__ import annotations
 import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, Window
+import numpy as np
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from ..functions.modularity import delta_q, modularity_fused
-from ..plans.skew import salted_sum_by_key, skewed_degree_trigger
 from .louvain_arrow import arrow_round_moves
 from .louvain_local import local_louvain
 from ..sources.edges import GraphTables, assign_contiguous_ids
 
 MODULARITY_CONVERGED_THRESHOLD = 0.001  # constants.h:15
 EARLY_STOP_LIMIT = 10**9  # constants.h:17
-ADAPTIVE_SORT_ROUNDS = 4  # phaseOptimization.cuh:39 (`adaptive = 4`)
 
 
 @dataclass
@@ -73,58 +81,89 @@ class LouvainResult:
     metrics: list[dict] = field(default_factory=list)
 
 
-def _release_local_checkpoint(df: DataFrame) -> None:
-    """Free the cached blocks behind a localCheckpoint'ed DataFrame.
+def _observed(df: DataFrame, name: str, *metrics) -> dict:
+    """Aggregate ``metrics`` over ``df`` in ONE map-only job.
 
-    After ``df.localCheckpoint()`` the plan is a ``LogicalRDD`` wrapping the
-    checkpointed internal RDD; unpersisting that RDD releases its blocks.
-    Best-effort via the JVM handle — on any internal-API mismatch the context
-    cleaner reclaims the blocks eventually, so failure here is harmless.
-    """
-    try:
-        df._jdf.queryExecution().logical().rdd().unpersist(False)
-    except Exception:
-        pass
+    The metrics are observed (``DataFrame.observe``) while a noop write
+    scans ``df`` — no aggregate exchange, so one job instead of a
+    partial+final pair, and every lazy checkpoint under ``df``
+    materializes inside it. The observing scan is the job's result stage,
+    whose per-partition updates Spark merges exactly once even when a
+    task is retried. Every sum the engine observes is integer-valued
+    float64, so the merge order cannot change a bit."""
+    obs = Observation(name)
+    df.observe(obs, *metrics).write.format("noop").mode("overwrite").save()
+    return obs.get
 
 
-def _fused_level_scalars(est: DataFrame, comm_w: DataFrame, verts: DataFrame) -> DataFrame:
-    """One-row DataFrame (win, ne, s, mx): the level's intra-community
-    weight + edge count (over ``est``), ΣΣ_tot² (over ``comm_w``) and max
-    weighted degree (over ``verts``) — three tables tagged and unioned so
-    the whole computation is ONE partial+final aggregate over a single
-    narrow scan chain, not three separate aggregate trees crossJoined
-    (each tree is its own Exchange = its own AQE stage wave). Identical
-    float64 values: conditional sums see exactly the rows the per-table
-    aggregates saw, and every sum is integer-valued (order-proof)."""
+def _scalars(est: DataFrame, comm_w: DataFrame, name: str) -> dict:
+    """{win, ne, s, nc}: the intra-community weight and edge count (over
+    ``est``), ΣΣ_tot² and the community count (over ``comm_w``), both
+    tables tagged and unioned into one observed scan. Identical float64
+    values to the per-table aggregates: conditional sums see exactly the
+    rows those aggregates saw."""
     t = F.col("t")
-    u = (
-        est.select(F.lit(0).alias("t"),
-                   F.when(F.col("cs") == F.col("cd"), F.col("w")).alias("a"))
-        .unionByName(comm_w.select(F.lit(1).alias("t"),
-                                   (F.col("ctot") * F.col("ctot")).alias("a")))
-        .unionByName(verts.select(F.lit(2).alias("t"), F.col("k").alias("a")))
+    u = est.select(
+        F.lit(0).alias("t"), F.when(F.col("cs") == F.col("cd"), F.col("w")).alias("a")
+    ).unionByName(
+        comm_w.select(F.lit(1).alias("t"), (F.col("ctot") * F.col("ctot")).alias("a"))
     )
-    return u.agg(
+    return _observed(
+        u, name,
         F.sum(F.when(t == 0, F.col("a"))).alias("win"),
         F.count(F.when(t == 0, F.lit(1))).alias("ne"),
         F.sum(F.when(t == 1, F.col("a"))).alias("s"),
-        F.max(F.when(t == 2, F.col("a"))).alias("mx"),
+        F.count(F.when(t == 1, F.lit(1))).alias("nc"),
     )
 
 
-def _apply_moves(df: DataFrame, mv: DataFrame, key: str, comm_col: str) -> DataFrame:
-    """comm_col := coalesce(move target, comm_col) for rows whose `key` moved (C5).
+def _q(win, s, m: float) -> float:
+    """Q = W_in/(2m) − ΣΣ_tot²/(4m²)   (community.h:104)."""
+    w_in = float(win) if win is not None else 0.0
+    sq = float(s) if s is not None else 0.0
+    return w_in / (2.0 * m) - sq / (4.0 * m * m)
+
+
+def _comm_weights(est: DataFrame) -> DataFrame:
+    """Σ_tot per community straight from the edge state: a community's
+    Σ_tot is the summed weight of its members' out-edges, so no vertex
+    table has to be kept current round by round. Communities whose every
+    member is isolated (Σ_tot = 0) have no row; they add nothing to Q and
+    never survive the relabel."""
+    return est.groupBy(F.col("cs").alias("comm")).agg(F.sum("w").alias("ctot"))
+
+
+def _level_edge_state(edges: DataFrame, npart: int) -> DataFrame:
+    """A level's starting edge state from its (src, dst, w) edges:
+    identity communities, every ``dst`` counted as moved (so round 0
+    scores every vertex), hash-partitioned on ``src`` — the CSR-block
+    layout the move kernel reads. ``k_src`` is a window sum over the
+    ``src`` partition: a vertex's edges are already colocated, so the
+    degree costs a sort, not a join or another exchange."""
+    return edges.repartition(npart, "src").select(
+        "src", "dst", "w",
+        F.sum("w").over(Window.partitionBy("src")).alias("k_src"),
+        F.col("src").alias("cs"), F.col("dst").alias("cd"), F.lit(True).alias("dm"),
+    )
+
+
+def _apply_moves(
+    df: DataFrame, mv: DataFrame, key: str, comm_col: str, moved_col: str | None = None
+) -> DataFrame:
+    """comm_col := coalesce(move target, comm_col) for rows whose `key` moved (C5);
+    ``moved_col``, when given, := whether `key` moved this round.
 
     ``mv`` is the caller-shared ``(node, _newc)`` projection, pre-wrapped in
     ``F.broadcast`` when the move set fits. All per-round applies join the
     IDENTICAL subplan (a join condition instead of a per-call rename), so
     Spark's exchange reuse builds/ships the move set ONCE per round instead
     of once per apply (guide §2.4: shared exchanges)."""
-    return (
-        df.join(mv, F.col(key) == F.col("node"), "left")
-        .withColumn(comm_col, F.coalesce(F.col("_newc"), F.col(comm_col)))
-        .drop("node", "_newc")
+    out = df.join(mv, F.col(key) == F.col("node"), "left").withColumn(
+        comm_col, F.coalesce(F.col("_newc"), F.col(comm_col))
     )
+    if moved_col is not None:
+        out = out.withColumn(moved_col, F.col("_newc").isNotNull())
+    return out.drop("node", "_newc")
 
 
 def _refine_result(graph: GraphTables, res: LouvainResult) -> LouvainResult:
@@ -236,47 +275,23 @@ def louvain(
     checkpointer=None,
     broadcast_moves_max: int = 5_000_000,
     shuffle_partitions: int | None = None,
-    mode: str = "adaptive",
     local_finish_max_edges: int = 5_000_000,
-    skew_salt_buckets: int | None = None,
     max_levels: int | None = None,
-    memory_budget_rows: int = 50_000_000,
     refine: bool = False,
     broadcast_comm_max: int | None = None,
     min_rows_per_partition: int = 8192,
 ) -> LouvainResult:
     """Run Louvain to convergence. ``graph`` from sources.edges.build_graph.
 
+    Every round is scored by the one move kernel
+    (``louvain_local._round_moves``): distributed rounds run it per
+    ``src`` partition in a single mapInArrow pass
+    (operators/louvain_arrow.py), the driver-local tail on the whole
+    coarsened graph. ``metrics`` holds one record per round, tagged
+    ``"engine": "arrow"`` or ``"local"``.
+
     ``checkpointer``: optional plans.checkpoint.SuperstepCheckpointer for
     durable per-superstep state + resume.
-
-    ``mode``: ``"df"`` scores rounds with the pure-DataFrame plan
-    (groupBy pre-agg + max(struct) argmax — the reference's SORT mode);
-    ``"arrow"`` with the CSR-blocked mapInPandas kernel
-    (operators/louvain_arrow.py — the HASH mode) — two fewer shuffles
-    per round. ``"adaptive"`` re-expresses the reference's
-    ADAPTIVE_SPEED policy (phaseOptimization.cuh:125-146): rounds 0..4
-    (the first five — the code's ``rnd > 4`` matches the reference's
-    ``execution_number > adaptive``) of each level run the df plan
-    (early rounds move most vertices, so
-    the shuffle pre-agg's map-side combine wins), later rounds the
-    arrow kernel (small frontiers — partition-local argmax avoids two
-    shuffles of a shrinking candidate set). ``"adaptive_memory"``
-    re-expresses ADAPTIVE_MEMORY (constants.h:13): the reference runs
-    the hash engine from round 1 like HASH mode (phaseOptimization.cuh:
-    135) but keeps the memory-lean sort path for the aggregation phase
-    (phaseAggregation.cuh:51) — its point is to use hashing only where
-    the table fits device memory. Spark analogue: rounds >= 1 run the
-    arrow kernel only while the level's candidate upper bound (its
-    directed edge count) fits ``memory_budget_rows`` (default = the
-    reference's 50M-edge chunk, STEP_ROUND constants.h:18); above the
-    budget the df sort-agg plan runs instead, because it spills to disk
-    gracefully where a single oversized Arrow batch cannot. (Coarsening
-    always uses the groupBy plan — Catalyst's HashAggregateExec already
-    owns the hash-to-sort memory fallback there.) All modes produce
-    bit-identical moves on integer-weight graphs (cross-mode test
-    mirrors the reference's HASH-vs-SORT agreement check,
-    main.cu:20-39).
 
     ``local_finish_max_edges``: once a level's directed edge count fits
     under this bound, the remaining levels run in the driver with the
@@ -291,13 +306,18 @@ def louvain(
     to convergence). Benchmarking hook — lets a scaling leg measure
     exactly the level-0 distributed rounds.
 
+    ``broadcast_moves_max``: broadcast the per-round move set (and the
+    flatten/coarsen relabel tables) while they fit. A broadcast apply
+    keeps the edge state hash-partitioned on ``src``; above the bound
+    the applies shuffle and the edge state is repartitioned on ``src``
+    again before the next round.
+
     ``broadcast_comm_max``: separate broadcast threshold for the
     Σ_tot community-weight table (defaults to ``broadcast_moves_max``).
     Splitting the two matters at ~10^7-vertex scale: a round-0 move set
-    (~40% of vertices × 16 B) broadcasts comfortably and removes three
-    edge-table shuffles per early round, while Σ_tot at level 0 is
-    vertex-count-sized and must stay a shuffle join until coarsening
-    shrinks it.
+    (~40% of vertices × 16 B) broadcasts comfortably, while Σ_tot at
+    level 0 is vertex-count-sized and must stay a shuffle join until
+    coarsening shrinks it.
 
     ``refine``: run the C9 refine phase on the final labels — the
     reference declares it but ships an empty stub (phaseRefine.cuh:1-3);
@@ -314,20 +334,7 @@ def louvain(
     shrink a level's width, never widen it — at cluster scale every
     early level saturates the configured parallelism). Bit-safe by
     design: all float sums in the loop are integer-valued.
-
-    ``skew_salt_buckets``: hub-vertex skew handling for the A3
-    per-(node, community) candidate sum (SURVEY.md §4 item 1 — a
-    power-law hub puts its whole neighborhood on one reducer key).
-    ``None`` = auto: each level salts when its max weighted degree
-    exceeds 4× the average shuffle-partition load (plans/skew.py);
-    ``0`` = never; ``>0`` = always, with that many buckets. Candidate
-    weights are integer-valued float64 sums, so the two-stage plan is
-    bit-identical to the single-stage one.
     """
-    if mode not in ("df", "arrow", "adaptive", "adaptive_memory"):
-        raise ValueError(
-            f"mode must be 'df', 'arrow', 'adaptive' or 'adaptive_memory', got {mode!r}"
-        )
     spark = graph.edges.sparkSession
     m = graph.m
     if m <= 0:
@@ -340,19 +347,23 @@ def louvain(
     q = None
     metrics: list[dict] = []
     resume_round = None
-    resume_frontier = None
     resume_q_level_start = None
     resume_opt_done = False
 
     # --- resume path (mid-iteration, north rule) --------------------------
+    # ``verts`` is the level's vertex table (id, k): it changes only at a
+    # level boundary. Round-to-round community state lives on the edge
+    # rows (cs/cd/dm) and in the Σ_tot table ``comm_w``.
     state = checkpointer.load_latest(spark) if checkpointer is not None else None
     if state is not None:
         est, verts, labels = state.edges_state, state.vertices, state.labels
         level, q = state.level, state.q
         cur_n = verts.count()
+        # the saved edge state carries the frontier in its ``dm`` column
         est = est.repartition(npart, "src").localCheckpoint(eager=True)
         verts = verts.localCheckpoint(eager=True)
         labels = labels.localCheckpoint(eager=True)
+        comm_w = _comm_weights(est).localCheckpoint(eager=False)
         if state.round >= 0:
             # was the checkpointed round the LAST round of its level? If so,
             # resuming must NOT score another round (it would apply moves the
@@ -367,68 +378,36 @@ def louvain(
                 resume_opt_done = True
             else:
                 resume_round = state.round + 1
-                resume_frontier = (
-                    state.frontier.localCheckpoint(eager=True)
-                    if state.frontier is not None
-                    else None
-                )
             resume_q_level_start = state.q_level_start
     else:
         # --- level-0 init (community.h:31-46: identity labels, k as Σ_tot)
-        verts = graph.vertices.select("id", "k", F.col("id").alias("comm"))
-        est = (
-            graph.edges.join(
-                graph.vertices.select(F.col("id").alias("src"), F.col("k").alias("k_src")), "src"
-            )
-            .select(
-                "src", "dst", F.col("weight").alias("w"), "k_src",
-                F.col("src").alias("cs"), F.col("dst").alias("cd"),
-            )
-            .repartition(npart, "src")
-            .localCheckpoint(eager=True)
-        )
-        verts = verts.localCheckpoint(eager=True)
+        verts = graph.vertices.select("id", "k")
+        est = _level_edge_state(
+            graph.edges.select("src", "dst", F.col("weight").alias("w")), npart
+        ).localCheckpoint(eager=True)
         labels = verts.select(F.col("id").alias("orig_id"), F.col("id").alias("community"))
-        labels = labels.localCheckpoint(eager=True)
         cur_n = graph.n_nodes
+        comm_w = _comm_weights(est).localCheckpoint(eager=False)
 
-    comm_w = verts.groupBy("comm").agg(F.sum("k").alias("ctot")).localCheckpoint(
-        eager=False
-    )
-    # per-level max weighted degree for the skew trigger and the level's
-    # directed edge count, both computed inside the SAME fused action as Q
-    # (one collect instead of three jobs); None means "not yet known for
-    # this level" and falls back to its own agg
-    level_max_k = None
+    # the level's directed edge count is computed inside the SAME action
+    # as Q; None means "not yet known for this level" and falls back to
+    # its own count
     level_ne = None
     if q is None:
-        # modularity (community.h:104) + skew scalar + edge count in ONE
-        # action — the same two sums modularity() computes, identical
-        # float64 math. The three tables are UNIONED into one tagged scan
-        # so the whole thing is a single partial+final aggregate (ONE
-        # exchange wave) instead of three crossJoined aggregate trees —
-        # each Exchange is its own AQE stage wave, and these waves are the
-        # round-latency floor of the coarsened tail (guide §2.4).
-        row = _fused_level_scalars(est, comm_w, verts).collect()[0]
-        w_in0 = float(row["win"]) if row["win"] is not None else 0.0
-        sq0 = float(row["s"]) if row["s"] is not None else 0.0
-        q = w_in0 / (2.0 * m) - sq0 / (4.0 * m * m)
-        level_max_k = float(row["mx"]) if row["mx"] is not None else 0.0
+        # modularity (community.h:104) + edge count in ONE map-only job —
+        # the same two sums modularity() computes, identical float64 math
+        row = _scalars(est, comm_w, f"louvain L{level} init")
+        q = _q(row["win"], row["s"], m)
         level_ne = int(row["ne"])
 
-    # local tail is only entered at a clean level start (identity comms)
-    # and never while durable checkpointing is on
+    # the local tail is only entered at a clean level start (identity
+    # comms), which never follows a resume: it is off while durable
+    # checkpointing is on
     use_local = local_finish_max_edges > 0 and checkpointer is None
 
     n_best = None
     while True:
-        if (
-            use_local
-            and resume_round is None
-            and resume_frontier is None
-            and not resume_opt_done
-            and est.count() <= local_finish_max_edges
-        ):
+        if use_local and est.count() <= local_finish_max_edges:
             import pandas as pd
 
             epdf = est.select("src", "dst", "w").toPandas()
@@ -461,13 +440,6 @@ def louvain(
             return _refine_result(graph, res) if refine else res
 
         q_level_start = q if resume_q_level_start is None else resume_q_level_start
-        # ADAPTIVE_MEMORY dispatch (phaseOptimization.cuh:135 + the
-        # memory rationale behind constants.h:13): arrow (hash) only
-        # while this level's candidate upper bound fits the budget; one
-        # cheap count per level against the already-checkpointed est
-        mem_fits = True
-        if mode == "adaptive_memory":
-            mem_fits = est.count() <= memory_budget_rows
         # scale-adaptive per-level parallelism (guide §2.2/§2.4): shuffle
         # width derives from THIS level's edge count instead of a global
         # constant — coarsened tail levels (a few thousand edges) collapse
@@ -481,272 +453,137 @@ def louvain(
             level_ne = est.count()
         level_npart = max(1, min(npart, -(-level_ne // min_rows_per_partition)))
         level_ne = None
-        # per-level skew decision: coarsening concentrates weight, so hub
-        # skew can appear (or vanish) between levels; total degree is the
-        # invariant 2m, max degree is one cheap agg per level
-        level_salt = skew_salt_buckets if mode != "arrow" else 0
-        if level_salt is None:
-            # level_max_k was produced by this level's fused Q action when
-            # available (init / coarsen); a resume-path level computes it here
-            mx = (
-                level_max_k
-                if level_max_k is not None
-                else float(verts.agg(F.max("k")).collect()[0][0] or 0.0)
-            )
-            level_salt = 16 if skewed_degree_trigger(mx, 2.0 * m, level_npart) else 0
-        level_max_k = None
         # community-table row count, tracked round-to-round (free: counted
-        # inside the fused action) — drives the Σ_tot broadcast decision;
-        # at level start communities are singletons so it equals cur_n
+        # inside the round's action) — drives the Σ_tot broadcast decision;
+        # at level start communities are singletons so it is at most cur_n
         n_cw = cur_n
         # ================= optimization phase (one level) =================
-        frontier = resume_frontier  # None => all vertices active (round 0)
         rnd = resume_round if resume_round is not None else 0
         skip_opt = resume_opt_done  # resumed after the level's last round
-        resume_round = resume_frontier = resume_q_level_start = None
+        resume_round = resume_q_level_start = None
         resume_opt_done = False
-        prev_moves = None
         # broadcast-size estimate for the move set: round 0 can move every
         # vertex, later rounds shrink fast — track the previous round's
-        # actual n_moves (known for free from the fused action) instead of
-        # pinning the estimate to the level's vertex count, which forced a
-        # shuffle join for every _apply_moves on levels above the threshold
-        # even when late-round move sets were tiny
+        # actual n_moves (known for free from the round's action) instead
+        # of pinning the estimate to the level's vertex count, which forced
+        # a shuffle join for every _apply_moves on levels above the
+        # threshold even when late-round move sets were tiny
         est_moves = cur_n
         while not skip_opt:
             t0 = time.time()
             spark.sparkContext.setJobDescription(f"louvain L{level} R{rnd}")
             q_old = q
-            cand = est.filter(F.col("src") != F.col("dst"))
-            if frontier is not None:
-                cand = cand.join(frontier, "src", "left_semi")
-
-            bcast_cw = n_cw <= broadcast_comm_max
-            # per-round engine choice (C3): ADAPTIVE_SPEED switches from
-            # SORT to HASH after round `adaptive` within each level
-            # (phaseOptimization.cuh:125-146)
-            use_arrow = (
-                mode == "arrow"
-                or (mode == "adaptive" and rnd > ADAPTIVE_SORT_ROUNDS)
-                # ADAPTIVE_MEMORY swaps to hash at execution_number == 1
-                # (phaseOptimization.cuh:125), budget permitting
-                or (mode == "adaptive_memory" and rnd >= 1 and mem_fits)
+            moves = arrow_round_moves(
+                est, comm_w, m, rnd, level_npart,
+                broadcast_comm_w=n_cw <= broadcast_comm_max,
             )
-            if use_arrow:
-                moves = arrow_round_moves(
-                    cand, comm_w, m, rnd, level_npart,
-                    broadcast_comm_w=bcast_cw,
-                )
-            else:
-                if rnd == 0:
-                    # exact fast path: singleton communities => each edge is
-                    # the (node, community) candidate, self-weight 0
-                    pairs = cand.select(
-                        "src", "cd", F.col("w").alias("wnc"), "k_src", "cs",
-                        F.lit(0.0).alias("selfw"),
-                    )
-                else:
-                    if level_salt:
-                        # A3 with hub-skew salting: two-stage sum splits a
-                        # hot (src, cd) key across level_salt reducers;
-                        # k_src/cs are functions of src so first() is
-                        # deterministic
-                        pairs = salted_sum_by_key(
-                            cand.select("src", "cd", "w", "k_src", "cs"),
-                            ["src", "cd"], "w", "wnc",
-                            salt_buckets=level_salt, carry=["k_src", "cs"],
-                        )
-                    else:
-                        pairs = cand.groupBy("src", "cd").agg(
-                            F.sum("w").alias("wnc"),
-                            F.first("k_src").alias("k_src"),
-                            F.first("cs").alias("cs"),
-                        )
-                    w_self = Window.partitionBy("src")
-                    pairs = pairs.withColumn(
-                        "selfw",
-                        F.coalesce(
-                            F.sum(F.when(F.col("cd") == F.col("cs"), F.col("wnc"))).over(w_self),
-                            F.lit(0.0),
-                        ),
-                    )
-
-                # ONE Σ_tot subplan joined twice via conditions (not two
-                # renamed projections): identical broadcast/shuffle subplans
-                # let exchange reuse ship the community table once per round
-                cw = comm_w.select("comm", "ctot")
-                if bcast_cw:
-                    cw = F.broadcast(cw)
-                scored = (
-                    pairs.join(cw, F.col("cs") == F.col("comm"))
-                    .withColumnRenamed("ctot", "ctot_a")
-                    .drop("comm")
-                    .join(cw, F.col("cd") == F.col("comm"))
-                    .withColumnRenamed("ctot", "ctot_c")
-                    .drop("comm")
-                    .withColumn(
-                        "delta",
-                        delta_q(
-                            F.col("wnc"), F.col("selfw"), F.col("k_src"),
-                            F.col("ctot_a"), F.col("ctot_c"), m,
-                        ),
-                    )
-                )
-                best = scored.groupBy("src").agg(
-                    F.max(F.struct(F.col("delta"), (-F.col("cd")).alias("negc"))).alias("b"),
-                    F.first("cs").alias("cs"),
-                )
-                moves = best.select(
-                    F.col("src").alias("node"),
-                    (-F.col("b.negc")).alias("newc"),
-                    F.col("b.delta").alias("delta"),
-                    "cs",
-                ).filter((F.col("delta") > 0) & (F.col("newc") != F.col("cs")))
-                if rnd == 0:
-                    # asymmetric round-0 guard (phaseOptimizationUpdate.cu:99)
-                    moves = moves.filter(F.col("node") < F.col("newc"))
-            # ONE action per round: the move set is persisted, moves are
-            # applied lazily (identity when the set turns out empty), and a
-            # single collect returns (n_moves, W_in, ΣΣ_tot²) together —
-            # every localCheckpoint materializes inside it. The broadcast
-            # decision uses the previous round's move count (vertex count on
-            # round 0) as the estimate since this round's isn't known yet.
             if rnd <= 1:
                 from ..plans.debug import dump_plan
 
                 dump_plan(moves, f"superstep_louvain_round{rnd}")
-            moves = moves.select("node", "newc").persist()
+            # the kernel runs exactly once per round (the two applies below
+            # would otherwise each recompute it). The broadcast decision
+            # uses the previous round's move count (vertex count on round
+            # 0) as the estimate since this round's isn't known yet.
             bcast = est_moves <= broadcast_moves_max
-            mv = moves.select("node", F.col("newc").alias("_newc"))
             if bcast:
-                mv = F.broadcast(mv)
-            new_verts = _apply_moves(verts, mv, "id", "comm").localCheckpoint(
-                eager=False
-            )
-            new_est = _apply_moves(est, mv, "src", "cs")
-            new_est = _apply_moves(new_est, mv, "dst", "cd")
-            if (
-                mode in ("arrow", "adaptive")
-                or (mode == "adaptive_memory" and mem_fits)
-            ) and not bcast:
-                # the shuffle join on dst broke src-colocation; the Arrow
-                # kernel needs the CSR-block invariant back
-                new_est = new_est.repartition(level_npart, "src")
-            new_est = new_est.localCheckpoint(eager=False)
-            # checkpointed so next round's Σ_tot broadcast reads the cached
-            # rows instead of re-running the groupBy exchange over verts
-            new_comm_w = new_verts.groupBy("comm").agg(
-                F.sum("k").alias("ctot")
-            ).localCheckpoint(eager=False)
-            # the round's three scalar families in ONE tagged-union
-            # aggregate (single partial+final Exchange wave instead of
-            # three crossJoined aggregate trees — see _fused_level_scalars
-            # for the rationale); all sums integer-valued, order-proof
-            _t = F.col("t")
-            fused = (
-                moves.select(F.lit(0).alias("t"), F.lit(0.0).alias("a"))
-                .unionByName(
-                    new_est.select(
-                        F.lit(1).alias("t"),
-                        F.when(F.col("cs") == F.col("cd"), F.col("w")).alias("a"),
-                    )
+                # a move set small enough to broadcast passes through the
+                # driver anyway: collect it in the kernel's one job, count
+                # it there, and hand the planner an exact-size local table
+                # (size estimates carried by checkpoints compound round
+                # over round and stall the planner)
+                tbl = moves.toArrow()
+                n_moves = tbl.num_rows
+                moves = spark.createDataFrame(tbl) if n_moves else None
+            else:
+                moves = moves.persist()
+                n_moves = int(
+                    _observed(moves, f"louvain L{level} R{rnd} moves",
+                              F.count(F.lit(1)).alias("n"))["n"]
                 )
-                .unionByName(
-                    new_comm_w.select(
-                        F.lit(2).alias("t"), (F.col("ctot") * F.col("ctot")).alias("a")
-                    )
-                )
-                .agg(
-                    F.count(F.when(_t == 0, F.lit(1))).alias("nm"),
-                    F.sum(F.when(_t == 1, F.col("a"))).alias("win"),
-                    F.sum(F.when(_t == 2, F.col("a"))).alias("s"),
-                    F.count(F.when(_t == 2, F.lit(1))).alias("nc"),
-                )
-                .collect()[0]
-            )
-            n_moves = int(fused["nm"])
-            # previous round's moves fed this round's lazy frontier; that
-            # semi-join has now been evaluated (inside this action) — safe
-            # to release the old cache
-            if prev_moves is not None:
-                prev_moves.unpersist()
-            prev_moves = moves
-
             if n_moves > 0:
-                verts, est, comm_w = new_verts, new_est, new_comm_w
+                mv = moves.select("node", F.col("newc").alias("_newc"))
+                if bcast:
+                    mv = F.broadcast(mv)
+                # the dst apply also sets dm — the next round's frontier
+                # rides on the edge state instead of a separate shuffled table
+                new_est = _apply_moves(est, mv, "src", "cs")
+                new_est = _apply_moves(new_est, mv, "dst", "cd", moved_col="dm")
+                if not bcast:
+                    # the shuffle joins broke src-colocation; the kernel
+                    # needs the CSR-block invariant back
+                    new_est = new_est.repartition(level_npart, "src")
+                est = new_est.localCheckpoint(eager=False)
+                # checkpointed so next round's Σ_tot broadcast reads the
+                # cached rows instead of re-running the groupBy exchange
+                comm_w = _comm_weights(est).localCheckpoint(eager=False)
+                # ONE observed scan returns W_in and ΣΣ_tot² and
+                # materializes both lazy checkpoints above
+                fused = _scalars(est, comm_w, f"louvain L{level} R{rnd}")
                 est_moves = n_moves
                 n_cw = int(fused["nc"])
-                w_in = float(fused["win"]) if fused["win"] is not None else 0.0
-                sq = float(fused["s"]) if fused["s"] is not None else 0.0
-                q = w_in / (2.0 * m) - sq / (4.0 * m * m)
-                # frontier C6: srcs of edges whose dst moved into a different
-                # community than src's (phaseOptimizationUpdate.cu:117-132).
-                # Kept lazy — it is consumed exactly once, by the next
-                # round's semi-join, over the already-checkpointed est.
-                # no .distinct(): the next round's left-semi join dedupes in
-                # its hash build — an explicit distinct is a wasted shuffle
-                frontier = (
-                    est.join(mv, F.col("dst") == F.col("node"), "left_semi")
-                    .filter(F.col("cs") != F.col("cd"))
-                    .select("src")
-                )
-            else:
-                # the fused action already materialized these localCheckpoints
-                # but they are never adopted — release their cached blocks now
-                # instead of waiting for the context cleaner (terminal round of
-                # every level otherwise leaks one est + one verts snapshot)
-                _release_local_checkpoint(new_verts)
-                _release_local_checkpoint(new_est)
-                _release_local_checkpoint(new_comm_w)
+                q = _q(fused["win"], fused["s"], m)
+            if not bcast:
+                moves.unpersist()
             dq = q - q_old
             metrics.append(
                 {
                     "level": level, "round": rnd, "n_moves": n_moves, "q": q,
-                    "dq": dq, "sec": time.time() - t0,
+                    "dq": dq, "sec": time.time() - t0, "engine": "arrow",
                 }
             )
             if checkpointer is not None:
-                checkpointer.save(
-                    level, rnd, est, verts, labels, frontier, q, q_level_start, metrics[-1]
-                )
+                checkpointer.save(level, rnd, est, verts, labels, q, q_level_start, metrics[-1])
             rnd += 1
             if n_moves == 0 or dq <= threshold or rnd > early_stop_limit:
                 break
-        if prev_moves is not None:
-            prev_moves.unpersist()
 
         # ================= aggregation phase ==============================
         spark.sparkContext.setJobDescription(f"louvain agg L{level}")
         continue_opt = (q - q_level_start) > threshold  # modularityAlgorithms.h:52
         # comm_w is maintained round-to-round (checkpointed inside each
-        # round's fused action) and is exactly groupBy(comm).sum(k) of the
-        # current verts on every path here — re-deriving it was one wasted
-        # exchange + aggregate per level (guide §2.4: don't recompute what
-        # is already partitioned/materialized)
+        # round's action) and is exactly Σ_tot of the current partition on
+        # every path here — re-deriving it would be one wasted exchange +
+        # aggregate per level (guide §2.4: don't recompute what is already
+        # partitioned/materialized)
         surviving = comm_w.filter(F.col("ctot") > 0).select("comm")
-        # surviving is a groupBy output (already distinct) and the relabel's
-        # per-partition counts give the community count for free — no dedup
-        # shuffle, no separate .count() job
-        relabel, n_best = assign_contiguous_ids(
-            surviving, ["comm"], id_col="newid",
-            assume_distinct=True, with_count=True,
-            # the relabel shuffles community-count rows, not edges: size its
-            # range partitioning to that count, same adaptive rule as levels
-            num_partitions=max(1, min(npart, -(-cur_n // min_rows_per_partition))),
-        )
+        if n_cw <= broadcast_moves_max:
+            # a community table that would be broadcast anyway is dense-
+            # ranked on the driver: one collect instead of a range shuffle
+            import pyarrow as pa
+
+            comm_ids = np.sort(surviving.toArrow().column("comm").to_numpy())
+            n_best = len(comm_ids)
+            relabel = spark.createDataFrame(
+                pa.table({"comm": comm_ids, "newid": np.arange(n_best, dtype=np.int64)})
+            )
+        else:
+            # surviving is a groupBy output (already distinct) and the
+            # relabel's per-partition counts give the community count for
+            # free — no dedup shuffle, no separate .count() job
+            relabel, n_best = assign_contiguous_ids(
+                surviving, ["comm"], id_col="newid",
+                assume_distinct=True, with_count=True,
+                # the relabel shuffles community-count rows, not edges: size
+                # its range partitioning to that count, same adaptive rule
+                num_partitions=max(1, min(npart, -(-cur_n // min_rows_per_partition))),
+            )
         # flatten labels (P9 / community.h:48-55): orig label -> comm of its
-        # current-graph vertex -> dense coarse id. Lazy checkpoint: every
-        # input (labels, verts, relabel) is already cached/checkpointed, so
-        # deferring materialization to the first consumer (checkpointer save
-        # or the caller's action on result labels) drops one job per level
-        # without recomputing anything upstream.
+        # current-graph vertex -> dense coarse id. The vertex -> community
+        # map is read off the edge state (every vertex with an edge is a
+        # src there; isolated vertices own Σ_tot = 0 singletons, which the
+        # relabel drops anyway). Lazy checkpoint: every input is already
+        # cached/checkpointed, so deferring materialization to the first
+        # consumer (checkpointer save or the caller's action on result
+        # labels) drops one job per level without recomputing anything
+        # upstream.
         # both flatten joins broadcast their small side when it fits: the
         # vertex map is cur-graph-sized (cur_n rows) and the relabel is
         # n_best rows — at every level past 0 both are community-counts,
         # far under the threshold, so the 10^9-row labels table is never
         # shuffled by the flatten (guide §3.1). The SAME broadcast relabel
-        # subplan feeds the coarsen below (exchange reuse ships it once).
-        vmap = verts.select(F.col("id").alias("community"), "comm")
+        # subplan feeds the coarsen below.
+        vmap = est.groupBy(F.col("src").alias("community")).agg(F.max("cs").alias("comm"))
         if cur_n <= broadcast_moves_max:
             vmap = F.broadcast(vmap)
         rl = relabel  # (comm, newid)
@@ -764,11 +601,10 @@ def louvain(
             break
 
         # coarsen (A8): relabel both endpoints, merge parallel edges. ONE
-        # relabel subplan joined via conditions (exchange reuse ships it
-        # once — shared with the flatten above), and the merged coarse edge
-        # table is checkpointed FIRST so k_new / verts / est all derive
+        # relabel subplan joined via conditions, and the merged coarse edge
+        # table is checkpointed FIRST so verts / est / comm_w all derive
         # from the cached merge instead of re-running the two joins +
-        # groupBy per consumer (was 3x).
+        # groupBy per consumer.
         coarse = (
             est.join(rl, F.col("cs") == F.col("comm"))
             .withColumnRenamed("newid", "nsrc")
@@ -783,44 +619,28 @@ def louvain(
 
         dump_plan(coarse, "louvain_coarsen")
         coarse = coarse.localCheckpoint(eager=False)
-        # materialize the merge with a count (the job an eager checkpoint
-        # would have run anyway, but keeping the number): the count IS the
-        # next level's edge count, which sizes that level's adaptive width
-        level_ne = coarse.count()
+        # materialize the merge with an observed count (the job an eager
+        # checkpoint would have run anyway, but keeping the number): the
+        # count IS the next level's edge count, which sizes that level's
+        # adaptive width
+        level_ne = int(
+            _observed(coarse, f"louvain L{level} coarsen", F.count(F.lit(1)).alias("ne"))["ne"]
+        )
         next_npart = max(1, min(npart, -(-level_ne // min_rows_per_partition)))
-        k_new = coarse.groupBy(F.col("src").alias("id")).agg(F.sum("w").alias("k"))
-        verts = k_new.select("id", "k", F.col("id").alias("comm")).localCheckpoint(
-            eager=False
-        )
-        # k_new has exactly n_best rows — broadcast the degree join when it
-        # fits, like every other small side (a static plan choice instead
-        # of waiting for AQE's runtime conversion = one less shuffle stage)
-        kj = k_new.select(F.col("id").alias("src"), F.col("k").alias("k_src"))
-        if n_best <= broadcast_moves_max:
-            kj = F.broadcast(kj)
-        est = (
-            coarse.join(kj, "src")
-            .select("src", "dst", "w", "k_src", F.col("src").alias("cs"), F.col("dst").alias("cd"))
-            .repartition(next_npart, "src")
-            .localCheckpoint(eager=False)
-        )
-        comm_w = verts.groupBy("comm").agg(F.sum("k").alias("ctot")).localCheckpoint(
-            eager=False
-        )
-        # Q of the fresh level (community.h:64 update()) fused with the next
-        # level's skew scalar in ONE tagged-union action —
-        # est/verts/comm_w materialize their lazy checkpoints inside it.
-        # Identical float64 math to modularity(): same two sums, combined
-        # the same way.
-        row = _fused_level_scalars(est, comm_w, verts).collect()[0]
-        w_in_l = float(row["win"]) if row["win"] is not None else 0.0
-        sq_l = float(row["s"]) if row["s"] is not None else 0.0
-        q = w_in_l / (2.0 * m) - sq_l / (4.0 * m * m)
-        level_max_k = float(row["mx"]) if row["mx"] is not None else 0.0
+        # the coarse level's vertex table stays lazy: only a checkpoint save
+        # or the local tail ever reads it
+        verts = coarse.groupBy(F.col("src").alias("id")).agg(F.sum("w").alias("k"))
+        est = _level_edge_state(coarse, next_npart).localCheckpoint(eager=False)
+        comm_w = _comm_weights(est).localCheckpoint(eager=False)
+        # Q of the fresh level (community.h:64 update()) in ONE map-only
+        # job — est materializes its lazy checkpoint inside it. Identical
+        # float64 math to modularity(): same two sums, combined the same way.
+        row = _scalars(est, comm_w, f"louvain L{level + 1} init")
+        q = _q(row["win"], row["s"], m)
         level += 1
         if checkpointer is not None:
             checkpointer.save(
-                level, -1, est, verts, labels, None, q, q, {"level": level, "round": -1, "q": q}
+                level, -1, est, verts, labels, q, q, {"level": level, "round": -1, "q": q}
             )
         if max_levels is not None and level >= max_levels:
             # benchmarking hook: stop after N levels (labels reflect the

@@ -1,29 +1,28 @@
-"""Arrow-vectorized local-move kernel (the engine's CSR-blocked path).
+"""The Spark placement of the Louvain move kernel (CSR-blocked Arrow pass).
 
 The reference streams CSR-aligned edge chunks through a GPU hash table
 (`/root/reference/hashmap.cuh:14-73` insert+accumulate,
 `phaseOptimizationHash.cu:38-158` per-chunk score+argmax). The Spark
-analogue: hash-partition the edge state by ``src`` so every vertex's
-adjacency is partition-local (the CSR-block invariant — chunk ends never
-split a node, `phaseOptimizationSort.cu:54-60`), then run ONE
-``mapInPandas`` pass per round that does the per-(node, community)
-weight aggregation, ΔQ scoring, and per-node argmax entirely inside the
-Python worker in vectorized numpy/pandas — no per-row Python, and two
-fewer shuffles per round than the pure-DataFrame plan (the
-groupBy(src,cd) pre-aggregation A3 and the groupBy(src) argmax A6
-both become partition-local).
+analogue: the edge state stays hash-partitioned by ``src`` across rounds,
+so every vertex's adjacency is partition-local (the CSR-block invariant —
+chunk ends never split a node, `phaseOptimizationSort.cu:54-60`), and
+ONE ``mapInArrow`` pass per round scores the whole partition. The
+per-(node, community) weight sum, ΔQ, argmax and move filter all happen
+inside the Python worker, so a round has no candidate shuffle at all.
 
-Batch discipline: ``mapInPandas`` hands the partition as an ITERATOR of
-Arrow batches; a batch boundary may split a vertex's adjacency, so the
-kernel accumulates partial (src, cd) sums across batches and finalizes
-only after the iterator is exhausted — the same partial-aggregate
-pattern as the reference's chunk loop.
+The pass concatenates the partition's Arrow batches once and calls
+:func:`louvain_local._round_moves` — the same NumPy function the
+driver-local tail runs on the whole graph — so the move rule exists in
+exactly one place. A batch boundary may split a vertex's adjacency; the
+partition is never split, so concatenating first is all the
+partial-aggregate bookkeeping the kernel needs.
 
-Numeric parity with the DataFrame mode: identical float64 expression
-order; on integer-valued weights (all our graphs — coarsening sums
-1.0-weight edges) the partial sums are exact, so both modes produce
-bit-identical moves (cross-mode agreement test mirrors the reference
-running HASH and SORT per graph, main.cu:20-39).
+The frontier travels on the edge state: ``dm`` marks rows whose ``dst``
+moved in the previous round (every row at a level start). The active
+sources are ``unique(src[dm & (cs != cd)])`` — the sources of edges
+whose dst moved into a community other than src's
+(phaseOptimizationUpdate.cu:117-132) — and, since all of a source's
+rows are partition-local, that set is computed partition-locally too.
 """
 
 from __future__ import annotations
@@ -33,74 +32,38 @@ from collections.abc import Iterator
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .louvain_local import _round_moves
+
 MOVES_SCHEMA = "node long, newc long"
+# the kernel's per-row inputs: _round_moves's arguments plus the frontier flag
+KERNEL_COLUMNS = ("src", "cd", "w", "k_src", "cs", "ctot_cs", "ctot_cd", "dm")
 
 
 def _moves_kernel(m: float, rnd: int):
-    denom = 2.0 * m * m  # same python-float literal the DataFrame mode uses
+    def fn(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:  # noqa: F821
+        import numpy as np
+        import pyarrow as pa
 
-    def fn(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821
-        import pandas as pd
-
-        acc = None
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            part = (
-                pdf.groupby(["src", "cd"], sort=False)
-                .agg(
-                    wnc=("w", "sum"),
-                    k_src=("k_src", "first"),
-                    cs=("cs", "first"),
-                    ctot_cs=("ctot_cs", "first"),
-                    ctot_cd=("ctot_cd", "first"),
-                )
-                .reset_index()
-            )
-            if acc is None:
-                acc = part
-            else:
-                acc = (
-                    pd.concat([acc, part], ignore_index=True)
-                    .groupby(["src", "cd"], sort=False)
-                    .agg(
-                        wnc=("wnc", "sum"),
-                        k_src=("k_src", "first"),
-                        cs=("cs", "first"),
-                        ctot_cs=("ctot_cs", "first"),
-                        ctot_cd=("ctot_cd", "first"),
-                    )
-                    .reset_index()
-                )
-        if acc is None or len(acc) == 0:
-            yield pd.DataFrame({"node": pd.Series(dtype="int64"), "newc": pd.Series(dtype="int64")})
+        batches = [b for b in batches if b.num_rows]
+        if not batches:
             return
-
-        if rnd == 0:
-            selfw = 0.0
-        else:
-            self_map = acc.loc[acc["cd"] == acc["cs"]].set_index("src")["wnc"]
-            selfw = acc["src"].map(self_map).fillna(0.0).to_numpy()
-        wnc = acc["wnc"].to_numpy()
-        k = acc["k_src"].to_numpy()
-        delta = (wnc - selfw) / m + (k * (acc["ctot_cs"].to_numpy() - k - acc["ctot_cd"].to_numpy())) / denom
-        acc = acc.assign(delta=delta)
-        # canonical argmax: highest ΔQ, ties -> lowest community id
-        best = (
-            acc.sort_values(["src", "delta", "cd"], ascending=[True, False, True], kind="mergesort")
-            .drop_duplicates("src", keep="first")
+        t = pa.Table.from_batches(batches)
+        src, cd, w, k_src, cs, ctot_cs, ctot_cd, dm = (
+            t.column(c).to_numpy() for c in KERNEL_COLUMNS
         )
-        keep = (best["delta"].to_numpy() > 0) & (best["cd"].to_numpy() != best["cs"].to_numpy())
-        if rnd == 0:
-            keep &= best["src"].to_numpy() < best["cd"].to_numpy()
-        best = best.loc[keep]
-        yield pd.DataFrame({"node": best["src"].astype("int64"), "newc": best["cd"].astype("int64")})
+        sel = np.isin(src, np.unique(src[dm & (cs != cd)]))
+        nodes, newc = _round_moves(
+            src[sel], cd[sel], w[sel], k_src[sel], cs[sel], ctot_cs[sel], ctot_cd[sel], m, rnd
+        )
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(nodes, pa.int64()), pa.array(newc, pa.int64())], names=["node", "newc"]
+        )
 
     return fn
 
 
 def arrow_round_moves(
-    cand: DataFrame,
+    est: DataFrame,
     comm_w: DataFrame,
     m: float,
     rnd: int,
@@ -109,11 +72,11 @@ def arrow_round_moves(
 ) -> DataFrame:
     """One fast-local-move round as a single CSR-blocked Arrow pass.
 
-    ``cand``: edge state (src, dst, w, k_src, cs, cd), self-loops and
-    inactive sources already filtered. Σ_tot is attached by two joins
-    (broadcast when the community table is small — always true after the
-    first coarsening), then one src-partitioned mapInPandas emits the
-    (node, newc) moves.
+    ``est``: edge state (src, dst, w, k_src, cs, cd, dm), hash-partitioned
+    on ``src``. Σ_tot is attached by two joins (broadcast when the
+    community table is small — always true after the first coarsening),
+    then one mapInArrow over the same partitions emits the (node, newc)
+    moves.
     """
     # ONE Σ_tot subplan joined twice via conditions: identical broadcast
     # subplans let exchange reuse ship the community table once per round
@@ -121,15 +84,16 @@ def arrow_round_moves(
     if broadcast_comm_w:
         cw = F.broadcast(cw)
     joined = (
-        cand.join(cw, F.col("cs") == F.col("comm"))
+        est.filter(F.col("src") != F.col("dst"))
+        .join(cw, F.col("cs") == F.col("comm"))
         .withColumnRenamed("ctot", "ctot_cs")
         .drop("comm")
         .join(cw, F.col("cd") == F.col("comm"))
         .withColumnRenamed("ctot", "ctot_cd")
         .drop("comm")
-        .select("src", "cd", "w", "k_src", "cs", "ctot_cs", "ctot_cd")
+        .select(*KERNEL_COLUMNS)
     )
     if not broadcast_comm_w:
         # shuffle joins destroyed src-colocation; restore the CSR-block invariant
         joined = joined.repartition(npart, "src")
-    return joined.mapInPandas(_moves_kernel(m, rnd), schema=MOVES_SCHEMA)
+    return joined.mapInArrow(_moves_kernel(m, rnd), schema=MOVES_SCHEMA)

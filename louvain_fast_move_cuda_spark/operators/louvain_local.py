@@ -10,23 +10,24 @@ distributed supersteps pay fixed scheduler/shuffle latency per round for
 tiny data; the scale-correct design is the reference's own: once the
 graph fits in one node, run it in one node.
 
-This module is that tail: the same fast-local-move + aggregation
-semantics as operators/louvain.py, vectorized NumPy end-to-end.
+This module is that tail, vectorized NumPy end-to-end. It also owns
+the move rule itself: :func:`_round_moves` scores one round, and the
+distributed rounds run the very same function per ``src`` partition
+inside the Spark kernel (operators/louvain_arrow.py). One kernel, two
+placements: the tail gathers the per-row inputs by vertex index, the
+Spark kernel receives them as Arrow columns.
 
-Exact parity with the distributed plan (tested bit-for-bit):
+Exact parity with the distributed rounds (tested bit-for-bit):
 
 * every weight / degree / Σ_tot on our graphs is an integer-valued
   float64 (coarsening sums 1.0-weight edges), so partial sums are exact
   in any order — groupBy, bincount and reduceat agree bit-for-bit;
-* ΔQ and Q use the identical float64 expression trees as
-  functions/modularity.py (`(wnc - selfw)/m + k*(ctot_a - k - ctot_c)/
-  (2m²)`, `W_in/(2m) − ΣΣ_tot²/(4m²)`);
-* identical canonical argmax tie-break (highest ΔQ, then lowest
-  community id), identical round-0 fast path with the `node < c` guard
-  (phaseOptimizationUpdate.cu:99), identical frontier propagation
-  (phaseOptimizationUpdate.cu:117-132), identical 0.001 thresholds
-  (constants.h:15) — so moves, levels and final labels match the
-  distributed engine exactly, not just approximately.
+* Q uses the identical float64 expression tree as
+  functions/modularity.py (`W_in/(2m) − ΣΣ_tot²/(4m²)`), and ΔQ is
+  computed by the shared :func:`_round_moves` in both placements;
+* identical frontier propagation (phaseOptimizationUpdate.cu:117-132)
+  and 0.001 thresholds (constants.h:15) — so moves, levels and final
+  labels match the distributed engine exactly, not just approximately.
 """
 
 from __future__ import annotations
@@ -51,16 +52,26 @@ def _round_moves(
     src: np.ndarray,
     cd: np.ndarray,
     w: np.ndarray,
-    k: np.ndarray,
-    comm: np.ndarray,
-    ctot: np.ndarray,
+    k_src: np.ndarray,
+    cs: np.ndarray,
+    ctot_cs: np.ndarray,
+    ctot_cd: np.ndarray,
     m: float,
     rnd: int,
 ):
     """One fast-local-move scoring round -> (nodes, new communities).
 
-    ``src``/``cd``/``w``: candidate rows (self-loops and inactive sources
-    already removed); ``cd`` is the dst endpoint's current community.
+    The engine's only copy of the move rule. Both placements call it: the
+    driver-local tail below with the whole graph, and the Spark kernel
+    (operators/louvain_arrow.py) with one ``src`` hash partition at a time.
+
+    One row per candidate edge, in any order: ``src`` the vertex that may
+    move, ``cd`` its neighbour's current community, ``w`` the edge weight.
+    ``k_src`` (weighted degree), ``cs`` (current community) and
+    ``ctot_cs`` (Σ_tot of ``cs``) are functions of ``src``; ``ctot_cd`` is
+    Σ_tot of ``cd``. Self-loops and inactive sources are already removed,
+    and every candidate row of a source must be present (a source's rows
+    are never split between calls).
     """
     if len(src) == 0:
         # empty frontier / self-loop-only level: no candidates, no moves
@@ -72,27 +83,33 @@ def _round_moves(
         # (node, community) candidate with self-weight 0
         # (phaseOptimizationSort.cu:28-158)
         nsrc, ncd, wnc = src, cd, w
+        kk, ncs, ctot_a, ctot_c = k_src, cs, ctot_cs, ctot_cd
         selfw = 0.0
     else:
-        # per-(node, dest-community) weight sum (A3/A4)
+        # per-(node, dest-community) weight sum (A3/A4): one lexsort +
+        # reduceat; the per-source columns come from each group's first row
         key_order = np.lexsort((cd, src))
-        s_src, s_cd, s_w = src[key_order], cd[key_order], w[key_order]
+        s_src, s_cd = src[key_order], cd[key_order]
         boundary = np.empty(len(s_src), dtype=bool)
         boundary[0] = True
         np.not_equal(s_src[1:], s_src[:-1], out=boundary[1:])
+        new_src = boundary.copy()
         boundary[1:] |= s_cd[1:] != s_cd[:-1]
         starts = np.flatnonzero(boundary)
+        head = key_order[starts]
         nsrc, ncd = s_src[starts], s_cd[starts]
-        wnc = np.add.reduceat(s_w, starts)
-        # self-community weight (A5): wnc where cd == comm[node], else 0
-        is_self = ncd == comm[nsrc]
-        self_by_node = np.zeros(len(comm))
-        self_by_node[nsrc[is_self]] = wnc[is_self]
-        selfw = self_by_node[nsrc]
+        wnc = np.add.reduceat(w[key_order], starts)
+        kk, ncs, ctot_a, ctot_c = k_src[head], cs[head], ctot_cs[head], ctot_cd[head]
+        # self-community weight (A5): wnc of the source's own community
+        # group, else 0; groups are source-contiguous, so a running source
+        # ordinal indexes a per-source table without dense vertex ids
+        seg = np.cumsum(new_src[starts]) - 1
+        is_self = ncd == ncs
+        self_by_seg = np.zeros(seg[-1] + 1)
+        self_by_seg[seg[is_self]] = wnc[is_self]
+        selfw = self_by_seg[seg]
 
-    cs = comm[nsrc]
-    kk = k[nsrc]
-    delta = (wnc - selfw) / m + (kk * (ctot[cs] - kk - ctot[ncd])) / denom
+    delta = (wnc - selfw) / m + (kk * (ctot_a - kk - ctot_c)) / denom
 
     # canonical argmax (A6): highest ΔQ, ties -> lowest community id
     order = np.lexsort((ncd, -delta, nsrc))
@@ -102,7 +119,7 @@ def _round_moves(
     np.not_equal(o_src[1:], o_src[:-1], out=first[1:])
     pick = order[first]
 
-    keep = (delta[pick] > 0) & (ncd[pick] != cs[pick])
+    keep = (delta[pick] > 0) & (ncd[pick] != ncs[pick])
     if rnd == 0:
         keep &= nsrc[pick] < ncd[pick]  # phaseOptimizationUpdate.cu:99
     pick = pick[keep]
@@ -158,8 +175,10 @@ def local_louvain(
             sel = not_self
             if active is not None:
                 sel = not_self & active[src]
+            c_src, c_dst = src[sel], dst[sel]
+            cs, cd = comm[c_src], comm[c_dst]
             nodes, newc = _round_moves(
-                src[sel], comm[dst[sel]], w[sel], k, comm, ctot, m, rnd
+                c_src, cd, w[sel], k[c_src], cs, ctot[cs], ctot[cd], m, rnd
             )
             n_moves = len(nodes)
             if n_moves > 0:

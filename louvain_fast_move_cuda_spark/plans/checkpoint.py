@@ -8,8 +8,11 @@ must instead round-trip through a table format. We write parquet
 committed last, so a torn write is never visible to resume).
 
 Layout:
-    <root>/level=<L>/round=<R>/{edges_state,vertices,labels,frontier}/
+    <root>/level=<L>/round=<R>/{edges_state,vertices,labels}/
     <root>/level=<L>/round=<R>/_META.json     (commit marker, written last)
+
+The Louvain frontier needs no table of its own: the edge state's ``dm``
+column ("dst moved in the previous round") carries it.
 
 _META.json records q, q_level_start, timestamps and per-partition row
 counts of the edge state (lineage/metrics per north_rule).
@@ -31,7 +34,6 @@ class SuperstepState:
     edges_state: DataFrame
     vertices: DataFrame
     labels: DataFrame
-    frontier: DataFrame | None
     level: int
     round: int
     q: float
@@ -56,7 +58,6 @@ class SuperstepCheckpointer:
         edges_state: DataFrame,
         vertices: DataFrame,
         labels: DataFrame,
-        frontier: DataFrame | None,
         q: float,
         q_level_start: float,
         metric: dict | None = None,
@@ -65,15 +66,11 @@ class SuperstepCheckpointer:
         edges_state.write.mode("overwrite").parquet(os.path.join(d, "edges_state"))
         vertices.write.mode("overwrite").parquet(os.path.join(d, "vertices"))
         labels.write.mode("overwrite").parquet(os.path.join(d, "labels"))
-        has_frontier = frontier is not None
-        if has_frontier:
-            frontier.write.mode("overwrite").parquet(os.path.join(d, "frontier"))
         meta = {
             "level": level,
             "round": rnd,
             "q": q,
             "q_level_start": q_level_start,
-            "has_frontier": has_frontier,
             "ts": time.time(),
             "metric": metric or {},
         }
@@ -110,14 +107,10 @@ class SuperstepCheckpointer:
         d = self._dir(level, rnd)
         with open(os.path.join(d, "_META.json")) as f:
             meta = json.load(f)
-        frontier = (
-            spark.read.parquet(os.path.join(d, "frontier")) if meta.get("has_frontier") else None
-        )
         return SuperstepState(
             edges_state=spark.read.parquet(os.path.join(d, "edges_state")),
             vertices=spark.read.parquet(os.path.join(d, "vertices")),
             labels=spark.read.parquet(os.path.join(d, "labels")),
-            frontier=frontier,
             level=level,
             round=rnd,
             q=float(meta["q"]),

@@ -4,8 +4,10 @@ The reference's dense GPU arrays make key skew irrelevant; in Spark a
 power-law graph's groupBy/join on vertex id skews (a 10^6-degree hub puts
 10^6 rows in one shuffle partition). Two mitigations are used by the
 engine: AQE skew-join splitting (session.py enables it) and, for the
-pre-aggregations whose keys skew (per-(node, community) candidate sums),
-an explicit two-stage salted partial aggregation.
+pre-aggregations whose keys skew (label propagation's per-(node, label)
+vote sums), an explicit two-stage salted partial aggregation. Louvain's
+per-(node, community) candidate sums need neither: they never leave the
+``src`` partition (operators/louvain_arrow.py).
 """
 
 from __future__ import annotations

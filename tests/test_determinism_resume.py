@@ -34,52 +34,36 @@ def test_louvain_deterministic_across_shuffle_partitions(spark):
     assert math.isclose(results[0][1], results[1][1], abs_tol=1e-12)
 
 
-def test_louvain_arrow_mode_matches_df_mode(spark):
-    """Cross-mode agreement — the Spark analogue of the reference running
-    HASH and SORT per graph (main.cu:20-39): the CSR-blocked mapInPandas
-    kernel and the pure-DataFrame plan must emit identical moves, hence
-    identical labels and bit-identical modularity (integer edge weights
-    make every partial sum exact in both engines)."""
+def test_louvain_shuffle_paths_match_broadcast_paths(spark):
+    """With both broadcast bounds at 0 every round takes the scale path:
+    the move set stays distributed (shuffle-joined applies, edge state
+    repartitioned on src), Σ_tot is shuffle-joined into the kernel input
+    and the level relabel is a range shuffle. Labels and Q must equal the
+    broadcast paths' bit for bit."""
     edges = powerlaw_graph(n=250, m_attach=2, seed=11)
     raw = spark.createDataFrame(edges, "a long, b long")
-    res_df = louvain(build_graph(raw, relabel=False), mode="df", local_finish_max_edges=0)
-    res_ar = louvain(build_graph(raw, relabel=False), mode="arrow", local_finish_max_edges=0)
-    assert _labels(res_df) == _labels(res_ar)
-    assert res_df.modularity == res_ar.modularity
-    # ADAPTIVE_SPEED (C3, phaseOptimization.cuh:125-146): df rounds 1..4
-    # then arrow — a per-level mix of both engines, same exact agreement
-    res_ad = louvain(
-        build_graph(raw, relabel=False), mode="adaptive", local_finish_max_edges=0
+    kw = dict(local_finish_max_edges=0)
+    res_b = louvain(build_graph(raw, relabel=False), **kw)
+    res_s = louvain(
+        build_graph(raw, relabel=False), broadcast_moves_max=0, broadcast_comm_max=0, **kw
     )
-    assert _labels(res_ad) == _labels(res_df)
-    assert res_ad.modularity == res_df.modularity
-    # ADAPTIVE_MEMORY (constants.h:13): hash from round 1 while the
-    # level's candidate bound fits the memory budget, sort-agg above it.
-    # Both budget regimes must agree with the other engines exactly:
-    # a huge budget == HASH dispatch, budget 0 == always the df plan.
-    for budget in (10**9, 0):
-        res_am = louvain(
-            build_graph(raw, relabel=False),
-            mode="adaptive_memory",
-            local_finish_max_edges=0,
-            memory_budget_rows=budget,
-        )
-        assert _labels(res_am) == _labels(res_df), f"budget={budget}"
-        assert res_am.modularity == res_df.modularity, f"budget={budget}"
+    assert _labels(res_s) == _labels(res_b)
+    assert res_s.modularity == res_b.modularity
+    assert [mt["n_moves"] for mt in res_s.metrics] == [mt["n_moves"] for mt in res_b.metrics]
 
 
 def test_local_finish_matches_distributed(spark):
-    """The driver-local NumPy tail (operators/louvain_local.py) is a third
-    engine for the same semantics: on integer-weight graphs every partial
-    sum is exact and the ΔQ/Q expression trees are identical, so labels
-    and modularity must match the distributed plan BIT-FOR-BIT — at full
-    local finish (level 0 already fits) and distributed-only."""
+    """The driver-local NumPy tail (operators/louvain_local.py) runs the
+    same move kernel as the distributed rounds: on integer-weight graphs
+    every partial sum is exact and the Q expression trees are identical,
+    so labels and modularity must match the distributed run BIT-FOR-BIT —
+    at full local finish (level 0 already fits) and distributed-only."""
     edges = powerlaw_graph(n=250, m_attach=2, seed=11)
     raw = spark.createDataFrame(edges, "a long, b long")
     res_dist = louvain(build_graph(raw, relabel=False), local_finish_max_edges=0)
     res_loc = louvain(build_graph(raw, relabel=False))  # default: local tail
     assert any(mt.get("engine") == "local" for mt in res_loc.metrics)
-    assert not any(mt.get("engine") == "local" for mt in res_dist.metrics)
+    assert all(mt["engine"] == "arrow" for mt in res_dist.metrics)
     assert _labels(res_dist) == _labels(res_loc)
     assert res_dist.modularity == res_loc.modularity
     assert res_dist.levels == res_loc.levels

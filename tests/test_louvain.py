@@ -158,11 +158,72 @@ def test_empty_candidate_round_moves_direct():
 
     e = np.empty(0, dtype=np.int64)
     ew = np.empty(0, dtype=np.float64)
-    comm = np.arange(3, dtype=np.int64)
-    ctot = np.ones(3)
     for rnd in (0, 1):
-        nodes, newc = _round_moves(e, e, ew, ctot, comm, ctot, 3.0, rnd)
+        nodes, newc = _round_moves(e, e, ew, ew, e, ew, ew, 3.0, rnd)
         assert len(nodes) == 0 and len(newc) == 0
+
+
+def test_kernel_partitions_match_whole_graph_round_moves():
+    """One move kernel, two placements: the Spark kernel's per-partition
+    pass (Arrow batches of one ``src`` hash partition, frontier read off
+    the ``dm`` column) and the local tail's whole-graph call of
+    _round_moves must emit the same moves, round after round, on a graph
+    whose level 0 needs several frontier rounds."""
+    import numpy as np
+    import pyarrow as pa
+
+    from louvain_fast_move_cuda_spark.operators.louvain_arrow import KERNEL_COLUMNS, _moves_kernel
+    from louvain_fast_move_cuda_spark.operators.louvain_local import _round_moves
+
+    und = np.array(powerlaw_graph(n=400, m_attach=2, seed=5), dtype=np.int64)
+    src = np.concatenate([und[:, 0], und[:, 1]])
+    dst = np.concatenate([und[:, 1], und[:, 0]])
+    w = np.ones(len(src))
+    n, m = int(src.max()) + 1, len(und) * 1.0
+    k = np.bincount(src, weights=w, minlength=n)
+    comm = np.arange(n, dtype=np.int64)
+    dm = np.ones(len(src), dtype=bool)  # level start: every dst "moved"
+    active = np.ones(n, dtype=bool)
+    nparts, batch_rows = 5, 97  # batch boundaries split adjacencies
+    part = src % nparts
+    rounds_moved = []
+    for rnd in range(12):
+        ctot = np.bincount(comm, weights=k, minlength=n)
+        cs, cd = comm[src], comm[dst]
+        # local-tail placement: whole graph, active set by vertex index
+        sel = active[src]
+        want = _round_moves(
+            src[sel], cd[sel], w[sel], k[src[sel]], cs[sel], ctot[cs[sel]],
+            ctot[cd[sel]], m, rnd,
+        )
+        # kernel placement: one call per partition, shuffled row order
+        cols = [src, cd, w, k[src], cs, ctot[cs], ctot[cd], dm]
+        got = []
+        kernel = _moves_kernel(m, rnd)
+        for p in range(nparts):
+            rows = np.random.default_rng(rnd * nparts + p).permutation(np.flatnonzero(part == p))
+            batches = [
+                pa.RecordBatch.from_arrays([pa.array(c[rows[i:i + batch_rows]]) for c in cols],
+                                           names=list(KERNEL_COLUMNS))
+                for i in range(0, len(rows), batch_rows)
+            ]
+            got += [b.to_pydict() for b in kernel(iter(batches))]
+        got_pairs = sorted((a, c) for d in got for a, c in zip(d["node"], d["newc"]))
+        assert got_pairs == sorted(zip(want[0].tolist(), want[1].tolist())), rnd
+        if not len(want[0]):
+            break
+        rounds_moved.append(int(active.sum()))
+        # apply, then the frontier both ways: dm on the edge rows, and the
+        # local tail's per-vertex active mask
+        comm[want[0]] = want[1]
+        moved = np.zeros(n, dtype=bool)
+        moved[want[0]] = True
+        dm = moved[dst]
+        active = np.zeros(n, dtype=bool)
+        active[src[dm & (comm[src] != comm[dst])]] = True
+    # several productive rounds, the later ones on a partial frontier
+    assert len(rounds_moved) >= 4
+    assert min(rounds_moved[1:]) < n
 
 
 def test_refine_splits_disconnected_community(spark):

@@ -14,7 +14,6 @@ scale; these prove Catalyst compiles them to the plans that survive a
 * the hot column expressions stay inside WholeStageCodegen.
 """
 
-import pytest
 from pyspark.sql import functions as F
 
 from conftest import SF_DIR
@@ -121,15 +120,6 @@ def test_coarsen_aggregation_is_shuffle_hash(spark):
     assert "HashAggregate" in plan
 
 
-def test_frontier_semi_join_is_semi(spark):
-    """The frontier filter must compile to a real semi-join (no row
-    multiplication), mirroring TestTupleValue (operatorsCommunity.h:7-19)."""
-    est = spark.createDataFrame([(0, 1), (1, 2)], "src long, dst long")
-    frontier = spark.createDataFrame([(0,)], "src long")
-    plan = _plan(est.join(frontier, "src", "left_semi"), mode="simple")
-    assert "LeftSemi" in plan
-
-
 def test_salted_sum_two_stage_plan_and_identity(spark):
     """SURVEY.md §8 skew row: salted_sum_by_key must (a) equal the plain
     groupBy sum exactly on integer-valued weights and (b) compile to TWO
@@ -172,24 +162,6 @@ def test_lpa_hub_graph_salted_identical_to_unsalted(spark):
     plain = label_propagation(g, max_iter=2, local_max_edges=0, skew_salt_buckets=0)
     salted = label_propagation(g, max_iter=2, local_max_edges=0, skew_salt_buckets=8)
     assert sorted(map(tuple, plain.collect())) == sorted(map(tuple, salted.collect()))
-
-
-def test_louvain_hub_graph_salted_identical_to_unsalted(spark):
-    from louvain_fast_move_cuda_spark.operators.louvain import louvain
-    from louvain_fast_move_cuda_spark.sources.edges import build_graph
-    from oracle import powerlaw_graph
-
-    und = set(powerlaw_graph(n=150, m_attach=2, seed=11))
-    und |= {(0, v) for v in range(1, 120)}  # fatten the hub
-    raw = spark.createDataFrame(sorted(und), "a long, b long")
-    g = build_graph(raw, relabel=False)
-    kw = dict(local_finish_max_edges=0, mode="df")
-    plain = louvain(g, skew_salt_buckets=0, **kw)
-    salted = louvain(g, skew_salt_buckets=8, **kw)
-    assert plain.modularity == pytest.approx(salted.modularity, abs=1e-12)
-    assert sorted(map(tuple, plain.labels.collect())) == sorted(
-        map(tuple, salted.labels.collect())
-    )
 
 
 def test_iceberg_seam_detection(spark):

@@ -41,7 +41,7 @@ def _graph_with_isolates(spark):
         edges=g.edges,
         vertices=g.vertices.unionByName(iso),
         m=g.m,
-        n_nodes=g.n_nodes + len(ISOLATED),
+        n_nodes=max(ISOLATED) + 1,  # GraphTables convention: max id + 1
     )
 
 
@@ -75,7 +75,7 @@ def test_lpa_selfrow_keeps_voteless_vertices_on_own_label(spark):
             spark.createDataFrame([(11, 2.0)], "id long, k double")
         ),
         m=g.m + 1.0,
-        n_nodes=g.n_nodes + 1,
+        n_nodes=11 + 1,  # max id + 1
     )
     dist = {r.id: r.label for r in label_propagation(g, max_iter=5, local_max_edges=0).collect()}
     loc = {r.id: r.label for r in label_propagation(g, max_iter=5).collect()}
