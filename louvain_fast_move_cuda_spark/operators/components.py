@@ -6,43 +6,61 @@ Beyond"), which converges in O(log² n) rounds on any graph — the right
 choice at 10^12-edge scale where min-label flooding's O(diameter) rounds
 is unbounded.
 
-State is a parent pointer table; both stars are one groupBy-min plus a
-join per round, all DataFrame ops.
+State is a symmetric, self-loop-free ``(src, dst)`` edge set. One round
+(:func:`_star_round`, a large star then a small star) is one plan with
+no join: each star reads its per-vertex minimum off a ``min`` window over
+the ``src`` partitioning, emits its new edges from the window's rows
+(the small star both directions of each, from one ``explode``), and
+deduplicates in place after a ``src`` repartition (HashPartitioning(src)
+satisfies the distinct's clustering on (src, dst)). That is three
+shuffles per round: the large star's window (a ``localCheckpoint``-ed
+input reports no partitioning, so the window shuffles the previous
+round's output again), the large star's output and the small star's
+output. One observed noop write then materializes the round's lazy
+checkpoint and returns its (count, xor-hash) set fingerprint, so a
+distributed round is four Spark jobs, all in the JVM.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import warnings
+
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..plans.observe import observed
 from ..sources.edges import GraphTables
 
 
-def _large_star(edges: DataFrame) -> DataFrame:
-    """For each u: connect every strictly-larger neighbor v>u to min(N(u) ∪ {u})."""
-    nbrs = edges.select("src", "dst")  # symmetric: contains both directions
-    mins = (
-        nbrs.groupBy("src")
-        .agg(F.least(F.min("dst"), F.first("src")).alias("mn"))
-    )
-    return (
-        nbrs.join(mins, "src")
+def _star_round(edges: DataFrame, npart: int) -> DataFrame:
+    """One Kiveris round on a symmetric, self-loop-free ``(src, dst)`` set;
+    returns the next such set (lazy, ``src``-partitioned, deduplicated)."""
+    by_src = Window.partitionBy("src")
+    # large star: every strictly larger neighbour v > u joins
+    # m(u) = min(N(u) ∪ {u}). Its output is symmetric, but the small star
+    # reads only the half with dst < src, so only (v, m(u)) is emitted
+    # (v > u >= m(u): never a self-loop)
+    large = (
+        edges.select("src", "dst", F.least(F.min("dst").over(by_src), F.col("src")).alias("m"))
         .filter(F.col("dst") > F.col("src"))
-        .select(F.col("dst").alias("src"), F.col("mn").alias("dst"))
+        .select(F.col("dst").alias("src"), F.col("m").alias("dst"))
+        .repartition(npart, "src")
         .distinct()
     )
-
-
-def _small_star(edges: DataFrame) -> DataFrame:
-    """For each u: connect all neighbors v<=u (and u) to their minimum."""
-    nbrs = edges.select("src", "dst").filter(F.col("dst") < F.col("src"))
-    mins = nbrs.groupBy("src").agg(F.min("dst").alias("mn"))
-    moved = (
-        nbrs.join(mins, "src")
-        .select(F.col("dst").alias("src"), F.col("mn").alias("dst"))
+    # small star: u and every smaller neighbour v < u join
+    # mn(u) = min of those neighbours; one explode emits both directions
+    mn = large.select("src", "dst", F.min("dst").over(by_src).alias("mn"))
+    pairs = [("dst", "mn"), ("mn", "dst"), ("src", "mn"), ("mn", "src")]
+    small = mn.select(
+        F.explode(
+            F.array(*[F.struct(F.col(a).alias("src"), F.col(b).alias("dst")) for a, b in pairs])
+        ).alias("e")
+    ).select("e.src", "e.dst")
+    return (
+        small.filter(F.col("src") != F.col("dst"))
+        .repartition(npart, "src")
+        .distinct()
     )
-    self_edge = mins.select("src", F.col("mn").alias("dst"))
-    return moved.unionByName(self_edge).filter(F.col("src") != F.col("dst")).distinct()
 
 
 def _local_components(graph: GraphTables) -> DataFrame:
@@ -95,71 +113,61 @@ def connected_components(
     set-fingerprint; a fresh call resumes from the latest committed
     round (the stars are deterministic set maps, so resumed output is
     identical). Forces the distributed path.
+
+    If ``max_iter`` rounds pass before the edge set is stable, the labels
+    are parents in a graph that is not yet a union of stars, so they need
+    not be component minima: a ``RuntimeWarning`` says so.
     """
     spark = graph.edges.sparkSession
     npart = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    # decide the local-tail branch BEFORE building the repartitioned +
-    # checkpointed distributed edge table: small graphs shouldn't pay a
-    # full shuffle + materialization the local path never reads
+    # decide the local-tail branch BEFORE building the distributed tables:
+    # small graphs shouldn't pay a materialization the local path never reads
     if checkpointer is None and local_max_edges > 0 and graph.edges.count() <= local_max_edges:
         return _local_components(graph)
-    edges = (
-        graph.edges.select("src", "dst")
-        .filter(F.col("src") != F.col("dst"))
-        .repartition(npart, "src")
-        .localCheckpoint(eager=True)
-    )
+    # no repartition here: the first round's window shuffles on src anyway
+    edges = graph.edges.select("src", "dst").filter(F.col("src") != F.col("dst"))
     all_vertices = graph.vertices.select("id").localCheckpoint(eager=True)
     prev_fp = None
-    start_iter = 0
+    rounds = 0
     converged = False
     if checkpointer is not None:
         state = checkpointer.load_latest(spark)
         if state is not None:
-            it, saved, metric = state
-            edges = saved.repartition(npart, "src").localCheckpoint(eager=True)
+            it, edges, metric = state
             prev_fp = (metric.get("n"), metric.get("h"))
-            start_iter = it + 1
+            rounds = it + 1
             converged = bool(metric.get("converged"))
-    for _it in range(start_iter, max_iter):
-        if converged:
-            break
-        e1 = _large_star(edges)
-        e1 = e1.unionByName(e1.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        e2 = _small_star(e1)
-        # repartition BEFORE the distinct: HashPartitioning(src) satisfies
-        # the dedup's ClusteredDistribution(src, dst) (all rows of one src
-        # land together), so the distinct runs in place and the round does
-        # ONE full exchange instead of two — and the output is already
-        # src-partitioned for the next round's stars (guide §2.4).
-        sym = (
-            e2.unionByName(e2.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-            .repartition(npart, "src")
-            .distinct()
-        )
-        if _it == start_iter:
+    while not converged and rounds < max_iter:
+        sym = _star_round(edges, npart)
+        if rounds == 0:
             from ..plans.debug import dump_plan
 
             dump_plan(sym, "superstep_cc")
-        # lazy: materializes inside the convergence-check agg below
-        sym = sym.localCheckpoint(eager=False)
         # fixpoint test: the alternating stars converge exactly when the edge
         # set stops changing (Kiveris et al. §3); compare an order-invariant
-        # (count, hash-xor) set fingerprint — one agg, vs a full self-join.
-        # XOR (not sum): exact, commutative, cannot overflow under ANSI.
-        row = sym.agg(
-            F.count("*").alias("n"), F.bit_xor(F.xxhash64("src", "dst")).alias("h")
-        ).collect()[0]
-        fp = (row["n"], row["h"])
-        edges = sym
+        # (count, hash-xor) set fingerprint, observed by the same job that
+        # materializes the lazy checkpoint. XOR (not sum): exact,
+        # commutative, cannot overflow under ANSI.
+        edges = sym.localCheckpoint(eager=False)
+        obs = observed(
+            edges, f"cc R{rounds}",
+            F.count(F.lit(1)).alias("n"), F.bit_xor(F.xxhash64("src", "dst")).alias("h"),
+        )
+        fp = (obs["n"], obs["h"])
         converged = fp == prev_fp
         if checkpointer is not None:
             checkpointer.save(
-                _it, edges, {"n": fp[0], "h": fp[1], "converged": converged}
+                rounds, edges, {"n": fp[0], "h": fp[1], "converged": converged}
             )
-        if converged:
-            break
         prev_fp = fp
+        rounds += 1
+    if not converged:
+        warnings.warn(
+            f"connected_components: edge set not stable after {rounds} star rounds "
+            f"(max_iter={max_iter}); labels may not be component minima",
+            RuntimeWarning,
+            stacklevel=2,
+        )
     parents = (
         edges.filter(F.col("dst") < F.col("src"))
         .groupBy(F.col("src").alias("id"))

@@ -60,10 +60,11 @@ import time
 from dataclasses import dataclass, field
 
 import numpy as np
-from pyspark.sql import DataFrame, Observation, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.modularity import delta_q, modularity_fused
+from ..plans.observe import observed
 from .louvain_arrow import arrow_round_moves
 from .louvain_local import local_louvain
 from ..sources.edges import GraphTables, assign_contiguous_ids
@@ -81,21 +82,6 @@ class LouvainResult:
     metrics: list[dict] = field(default_factory=list)
 
 
-def _observed(df: DataFrame, name: str, *metrics) -> dict:
-    """Aggregate ``metrics`` over ``df`` in ONE map-only job.
-
-    The metrics are observed (``DataFrame.observe``) while a noop write
-    scans ``df`` — no aggregate exchange, so one job instead of a
-    partial+final pair, and every lazy checkpoint under ``df``
-    materializes inside it. The observing scan is the job's result stage,
-    whose per-partition updates Spark merges exactly once even when a
-    task is retried. Every sum the engine observes is integer-valued
-    float64, so the merge order cannot change a bit."""
-    obs = Observation(name)
-    df.observe(obs, *metrics).write.format("noop").mode("overwrite").save()
-    return obs.get
-
-
 def _scalars(est: DataFrame, comm_w: DataFrame, name: str) -> dict:
     """{win, ne, s, nc}: the intra-community weight and edge count (over
     ``est``), ΣΣ_tot² and the community count (over ``comm_w``), both
@@ -108,7 +94,7 @@ def _scalars(est: DataFrame, comm_w: DataFrame, name: str) -> dict:
     ).unionByName(
         comm_w.select(F.lit(1).alias("t"), (F.col("ctot") * F.col("ctot")).alias("a"))
     )
-    return _observed(
+    return observed(
         u, name,
         F.sum(F.when(t == 0, F.col("a"))).alias("win"),
         F.count(F.when(t == 0, F.lit(1))).alias("ne"),
@@ -498,8 +484,8 @@ def louvain(
             else:
                 moves = moves.persist()
                 n_moves = int(
-                    _observed(moves, f"louvain L{level} R{rnd} moves",
-                              F.count(F.lit(1)).alias("n"))["n"]
+                    observed(moves, f"louvain L{level} R{rnd} moves",
+                             F.count(F.lit(1)).alias("n"))["n"]
                 )
             if n_moves > 0:
                 mv = moves.select("node", F.col("newc").alias("_newc"))
@@ -624,7 +610,7 @@ def louvain(
         # count IS the next level's edge count, which sizes that level's
         # adaptive width
         level_ne = int(
-            _observed(coarse, f"louvain L{level} coarsen", F.count(F.lit(1)).alias("ne"))["ne"]
+            observed(coarse, f"louvain L{level} coarsen", F.count(F.lit(1)).alias("ne"))["ne"]
         )
         next_npart = max(1, min(npart, -(-level_ne // min_rows_per_partition)))
         # the coarse level's vertex table stays lazy: only a checkpoint save

@@ -4,7 +4,10 @@ oracles are single-process float64 implementations in tests/oracle.py or
 brute force computed inline)."""
 
 import math
+import warnings
 from collections import defaultdict
+
+import pytest
 
 from louvain_fast_move_cuda_spark.operators.components import connected_components
 from louvain_fast_move_cuda_spark.operators.labelprop import label_propagation
@@ -59,13 +62,19 @@ def test_connected_components_exact(spark):
 
 def test_connected_components_long_path(spark):
     """Path graph: worst case for min-flooding; large/small-star must still
-    converge in O(log² n) rounds (Kiveris et al.). Forced distributed."""
+    converge in O(log² n) rounds (Kiveris et al.). Forced distributed.
+    Stopping after one round (not a fixpoint) warns with the round count;
+    the converged call does not warn."""
     n = 64
     g = _graph(spark, [(i, i + 1) for i in range(n - 1)])
-    got = {
-        r.id: r.component
-        for r in connected_components(g, max_iter=20, local_max_edges=0).collect()
-    }
+    with pytest.warns(RuntimeWarning, match="after 1 star rounds"):
+        connected_components(g, max_iter=1, local_max_edges=0)
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", RuntimeWarning)
+        got = {
+            r.id: r.component
+            for r in connected_components(g, max_iter=20, local_max_edges=0).collect()
+        }
     assert got == {i: 0 for i in range(n)}
 
 

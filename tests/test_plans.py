@@ -591,3 +591,26 @@ def test_round5_operator_plans_stay_equi_join_and_jvm_side(spark):
         plan = _plan(df)
         assert "CartesianProduct" not in plan
         assert "BatchEvalPython" not in plan
+
+
+def test_cc_star_round_is_join_free_with_three_exchanges(spark):
+    """One connected-components star round is one plan of windows,
+    explodes and in-place distincts: no join, broadcast or cartesian
+    product, and at most three shuffles (the large star's window over the
+    previous round's checkpoint, and one per star output)."""
+    from louvain_fast_move_cuda_spark.operators.components import _star_round
+    from louvain_fast_move_cuda_spark.sources.edges import build_graph
+    from oracle import powerlaw_graph
+
+    g = build_graph(
+        spark.createDataFrame(powerlaw_graph(n=120, m_attach=2, seed=1), "a long, b long"),
+        relabel=False,
+    )
+    # the round's input is the previous round's checkpoint, as in the loop
+    edges = g.edges.select("src", "dst").localCheckpoint(eager=True)
+    plan = _plan(_star_round(edges, 4), "simple")
+    nodes = [ln.lstrip(" +-:") for ln in plan.splitlines()]
+    for banned in ("Join", "BroadcastExchange", "CartesianProduct"):
+        assert not [n for n in nodes if banned in n.split("(")[0]], (banned, plan)
+    assert 1 <= sum(n.startswith("Exchange ") for n in nodes) <= 3, plan
+    assert "EvalPython" not in plan and "MapInPandas" not in plan
