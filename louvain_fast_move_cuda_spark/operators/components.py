@@ -18,7 +18,9 @@ input reports no partitioning, so the window shuffles the previous
 round's output again), the large star's output and the small star's
 output. One observed noop write then materializes the round's lazy
 checkpoint and returns its (count, xor-hash) set fingerprint, so a
-distributed round is four Spark jobs, all in the JVM.
+distributed round is four Spark jobs, all in the JVM. The loop around the
+rounds (resume, per-round checkpoint, fixpoint stop) is
+plans/superstep.py::supersteps.
 """
 
 from __future__ import annotations
@@ -29,6 +31,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..plans.observe import observed
+from ..plans.superstep import local_arrays, runs_local, supersteps
 from ..sources.edges import GraphTables
 
 
@@ -76,12 +79,9 @@ def _local_components(graph: GraphTables) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    spark = graph.edges.sparkSession
-    epdf = graph.edges.select("src", "dst").filter(F.col("src") != F.col("dst")).toPandas()
-    vpdf = graph.vertices.select("id").toPandas()
-    ids = np.sort(vpdf["id"].to_numpy())
-    src = np.searchsorted(ids, epdf["src"].to_numpy())
-    dst = np.searchsorted(ids, epdf["dst"].to_numpy())
+    ids, src, dst, _, _ = local_arrays(graph)
+    keep = src != dst
+    src, dst = src[keep], dst[keep]
     label = np.arange(len(ids), dtype=np.int64)
     while True:
         old = label
@@ -93,7 +93,7 @@ def _local_components(graph: GraphTables) -> DataFrame:
         if np.array_equal(label, old):
             break
     out = pd.DataFrame({"id": ids, "component": ids[label]})
-    return spark.createDataFrame(out)
+    return graph.edges.sparkSession.createDataFrame(out)
 
 
 def connected_components(
@@ -122,46 +122,31 @@ def connected_components(
     npart = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     # decide the local-tail branch BEFORE building the distributed tables:
     # small graphs shouldn't pay a materialization the local path never reads
-    if checkpointer is None and local_max_edges > 0 and graph.edges.count() <= local_max_edges:
+    if runs_local(graph, local_max_edges, checkpointer):
         return _local_components(graph)
-    # no repartition here: the first round's window shuffles on src anyway
-    edges = graph.edges.select("src", "dst").filter(F.col("src") != F.col("dst"))
     all_vertices = graph.vertices.select("id").localCheckpoint(eager=True)
-    prev_fp = None
-    rounds = 0
-    converged = False
-    if checkpointer is not None:
-        state = checkpointer.load_latest(spark)
-        if state is not None:
-            it, edges, metric = state
-            prev_fp = (metric.get("n"), metric.get("h"))
-            rounds = it + 1
-            converged = bool(metric.get("converged"))
-    while not converged and rounds < max_iter:
-        sym = _star_round(edges, npart)
-        if rounds == 0:
-            from ..plans.debug import dump_plan
 
-            dump_plan(sym, "superstep_cc")
-        # fixpoint test: the alternating stars converge exactly when the edge
-        # set stops changing (Kiveris et al. §3); compare an order-invariant
-        # (count, hash-xor) set fingerprint, observed by the same job that
-        # materializes the lazy checkpoint. XOR (not sum): exact,
-        # commutative, cannot overflow under ANSI.
-        edges = sym.localCheckpoint(eager=False)
-        obs = observed(
-            edges, f"cc R{rounds}",
+    # fixpoint test: the alternating stars converge exactly when the edge
+    # set stops changing (Kiveris et al. §3); compare an order-invariant
+    # (count, hash-xor) set fingerprint, observed by the same job that
+    # materializes the lazy checkpoint. XOR (not sum): exact,
+    # commutative, cannot overflow under ANSI.
+    def fingerprint(edges, job):
+        return observed(
+            edges, job,
             F.count(F.lit(1)).alias("n"), F.bit_xor(F.xxhash64("src", "dst")).alias("h"),
         )
-        fp = (obs["n"], obs["h"])
-        converged = fp == prev_fp
-        if checkpointer is not None:
-            checkpointer.save(
-                rounds, edges, {"n": fp[0], "h": fp[1], "converged": converged}
-            )
-        prev_fp = fp
-        rounds += 1
-    if not converged:
+
+    def stable(fp, prev):
+        return prev is not None and (fp["n"], fp["h"]) == (prev.get("n"), prev.get("h"))
+
+    # no repartition here: the first round's window shuffles on src anyway
+    edges, metric, rounds = supersteps(
+        "cc", graph.edges.select("src", "dst").filter(F.col("src") != F.col("dst")),
+        lambda edges, _metric: _star_round(edges, npart), fingerprint, stable,
+        max_iter, checkpointer,
+    )
+    if not (metric or {}).get("done"):
         warnings.warn(
             f"connected_components: edge set not stable after {rounds} star rounds "
             f"(max_iter={max_iter}); labels may not be component minima",

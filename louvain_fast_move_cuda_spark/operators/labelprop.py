@@ -8,7 +8,9 @@ tie-break as the Louvain argmax — max(struct(weight, -label))).
 
 One round = one join (labels onto edge dst) + one groupBy(node, label)
 + one argmax groupBy(node): the same shuffle skeleton as a Louvain
-superstep (SURVEY.md §2.4 A3/A6).
+superstep (SURVEY.md §2.4 A3/A6). The loop (lazy per-round checkpoint,
+one observed change count, resume, fixpoint stop) is
+plans/superstep.py::supersteps.
 """
 
 from __future__ import annotations
@@ -16,7 +18,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..plans.observe import observed
 from ..plans.skew import salted_sum_by_key, skewed_degree_trigger
+from ..plans.superstep import local_arrays, runs_local, supersteps
 from ..sources.edges import GraphTables
 
 
@@ -31,16 +35,9 @@ def _local_lpa(graph: GraphTables, max_iter: int) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    spark = graph.edges.sparkSession
-    epdf = (
-        graph.edges.select("src", "dst", "weight")
-        .filter(F.col("src") != F.col("dst"))
-        .toPandas()
-    )
-    ids = np.sort(graph.vertices.select("id").toPandas()["id"].to_numpy())
-    src = np.searchsorted(ids, epdf["src"].to_numpy())
-    dst = np.searchsorted(ids, epdf["dst"].to_numpy())
-    w = epdf["weight"].to_numpy()
+    ids, src, dst, w, _ = local_arrays(graph)
+    keep = src != dst
+    src, dst, w = src[keep], dst[keep], w[keep]
     n = len(ids)
     label = np.arange(n, dtype=np.int64)
     for _ in range(max_iter):
@@ -68,7 +65,8 @@ def _local_lpa(graph: GraphTables, max_iter: int) -> DataFrame:
         label = new_label
         if n_changed == 0:
             break
-    return spark.createDataFrame(pd.DataFrame({"id": ids, "label": ids[label]}))
+    out = pd.DataFrame({"id": ids, "label": ids[label]})
+    return graph.edges.sparkSession.createDataFrame(out)
 
 
 def label_propagation(
@@ -100,7 +98,7 @@ def label_propagation(
     """
     spark = graph.edges.sparkSession
     npart = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    if checkpointer is None and local_max_edges > 0 and graph.edges.count() <= local_max_edges:
+    if runs_local(graph, local_max_edges, checkpointer):
         return _local_lpa(graph, max_iter)
     salt_buckets = skew_salt_buckets
     if salt_buckets is None:
@@ -118,25 +116,15 @@ def label_propagation(
         .repartition(npart, "dst")
         .localCheckpoint(eager=True)
     )
-    labels = graph.vertices.select("id", F.col("id").alias("label")).localCheckpoint(eager=True)
-    start_iter = 0
-    if checkpointer is not None:
-        state = checkpointer.load_latest(spark)
-        if state is not None:
-            it, saved, metric = state
-            if metric.get("n_changed") == 0:
-                return saved  # the saved round was already a fixpoint
-            labels = saved.localCheckpoint(eager=True)
-            start_iter = it + 1
     # Round shape (guide §2.4 — three exchanges, down from five/six): a
     # null-vote SELF ROW per vertex (carrying its old label) rides into
     # the argmax aggregate, guaranteeing every vertex a group — the
     # argmax skips the self rows via when(wsum IS NOT NULL, struct(...))
     # (max ignores null structs), voteless vertices coalesce to their own
     # id exactly as the old left join did, and the change count becomes a
-    # filter-count over the new state instead of a join of consecutive
-    # label tables. All-integer values: bit-identical labels.
-    for _it in range(start_iter, max_iter):
+    # count over the new state instead of a join of consecutive label
+    # tables. All-integer values: bit-identical labels.
+    def step(labels, _metric):
         voted = edges.join(labels.select(F.col("id").alias("dst"), "label"), "dst")
         if salt_buckets:
             votes = salted_sum_by_key(
@@ -149,7 +137,7 @@ def label_propagation(
             F.col("id").alias("src"), F.lit(None).cast("long").alias("label"),
             F.lit(None).cast("double").alias("wsum"), F.col("label").alias("old"),
         )
-        st = (
+        return (
             votes.withColumn("old", F.lit(None).cast("long"))
             .unionByName(selfrows)
             .groupBy("src")
@@ -168,15 +156,17 @@ def label_propagation(
                 "old",
             )
         )
-        if _it == start_iter:
-            from ..plans.debug import dump_plan
 
-            dump_plan(st, "superstep_lpa")
-        st = st.localCheckpoint(eager=False)  # materializes inside the change count
-        n_changed = st.filter(F.col("label") != F.col("old")).count()
-        labels = st.select("id", "label")
-        if checkpointer is not None:
-            checkpointer.save(_it, labels, {"n_changed": int(n_changed)})
-        if n_changed == 0:
-            break
-    return labels
+    # the change count is an exact integer, so observing it in the noop
+    # write that materializes the round costs no separate count job
+    def changed(labels, job):
+        obs = observed(
+            labels, job, F.count(F.when(F.col("label") != F.col("old"), 1)).alias("n_changed")
+        )
+        return {"n_changed": int(obs["n_changed"])}
+
+    labels, _, _ = supersteps(
+        "lpa", graph.vertices.select("id", F.col("id").alias("label")), step, changed,
+        lambda m, _prev: m["n_changed"] == 0, max_iter, checkpointer,
+    )
+    return labels.select("id", "label")

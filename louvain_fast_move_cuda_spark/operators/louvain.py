@@ -71,6 +71,15 @@ from ..sources.edges import GraphTables, assign_contiguous_ids
 
 MODULARITY_CONVERGED_THRESHOLD = 0.001  # constants.h:15
 EARLY_STOP_LIMIT = 10**9  # constants.h:17
+# floor for the scale-adaptive per-level shuffle width: each level runs at
+# min(spark.sql.shuffle.partitions, ceil(level_edges / MIN_ROWS_PER_PARTITION))
+# partitions, so coarsened tail levels with a few thousand edges stop
+# paying the configured width in near-empty tasks per stage while any
+# level with real data keeps it (the rule can only shrink a level's
+# width, never widen it — at cluster scale every early level saturates the
+# configured parallelism). Bit-safe by design: all float sums in the loop
+# are integer-valued.
+MIN_ROWS_PER_PARTITION = 8192
 
 
 @dataclass
@@ -157,11 +166,10 @@ def _refine_result(graph: GraphTables, res: LouvainResult) -> LouvainResult:
     Leiden connectivity refinement: split every community into its
     connected parts (operators/refine.py — Q can only rise), dense-
     relabel, and recompute Q/community count over the original graph."""
-    from ..sources.edges import assign_contiguous_ids as _ids
     from .refine import refine_partition
 
     labels = refine_partition(graph, res.labels)
-    rl = _ids(
+    rl = assign_contiguous_ids(
         labels.select(F.col("community").alias("comm")).distinct(),
         ["comm"],
         id_col="newid",
@@ -260,12 +268,10 @@ def louvain(
     early_stop_limit: int = EARLY_STOP_LIMIT,
     checkpointer=None,
     broadcast_moves_max: int = 5_000_000,
-    shuffle_partitions: int | None = None,
     local_finish_max_edges: int = 5_000_000,
     max_levels: int | None = None,
     refine: bool = False,
     broadcast_comm_max: int | None = None,
-    min_rows_per_partition: int = 8192,
 ) -> LouvainResult:
     """Run Louvain to convergence. ``graph`` from sources.edges.build_graph.
 
@@ -310,16 +316,6 @@ def louvain(
     here it is Leiden's connectivity guarantee (operators/refine.py):
     every output community is split into its connected parts, which can
     only raise Q. Off by default to preserve exact reference semantics.
-
-    ``min_rows_per_partition``: floor for the scale-adaptive per-level
-    shuffle width — each level runs at
-    ``min(shuffle_partitions, ceil(level_edges / min_rows_per_partition))``
-    partitions, so coarsened tail levels with a few thousand edges stop
-    paying ``shuffle_partitions`` near-empty tasks per stage while any
-    level with real data keeps the configured width (the rule can only
-    shrink a level's width, never widen it — at cluster scale every
-    early level saturates the configured parallelism). Bit-safe by
-    design: all float sums in the loop are integer-valued.
     """
     spark = graph.edges.sparkSession
     m = graph.m
@@ -327,7 +323,7 @@ def louvain(
         raise ValueError("empty graph")
     if broadcast_comm_max is None:
         broadcast_comm_max = broadcast_moves_max
-    npart = shuffle_partitions or int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    npart = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
 
     level = 0
     q = None
@@ -437,7 +433,7 @@ def louvain(
         # counts est itself (one cheap job against the checkpoint).
         if level_ne is None:
             level_ne = est.count()
-        level_npart = max(1, min(npart, -(-level_ne // min_rows_per_partition)))
+        level_npart = max(1, min(npart, -(-level_ne // MIN_ROWS_PER_PARTITION)))
         level_ne = None
         # community-table row count, tracked round-to-round (free: counted
         # inside the round's action) — drives the Σ_tot broadcast decision;
@@ -552,7 +548,7 @@ def louvain(
                 assume_distinct=True, with_count=True,
                 # the relabel shuffles community-count rows, not edges: size
                 # its range partitioning to that count, same adaptive rule
-                num_partitions=max(1, min(npart, -(-cur_n // min_rows_per_partition))),
+                num_partitions=max(1, min(npart, -(-cur_n // MIN_ROWS_PER_PARTITION))),
             )
         # flatten labels (P9 / community.h:48-55): orig label -> comm of its
         # current-graph vertex -> dense coarse id. The vertex -> community
@@ -612,7 +608,7 @@ def louvain(
         level_ne = int(
             observed(coarse, f"louvain L{level} coarsen", F.count(F.lit(1)).alias("ne"))["ne"]
         )
-        next_npart = max(1, min(npart, -(-level_ne // min_rows_per_partition)))
+        next_npart = max(1, min(npart, -(-level_ne // MIN_ROWS_PER_PARTITION)))
         # the coarse level's vertex table stays lazy: only a checkpoint save
         # or the local tail ever reads it
         verts = coarse.groupBy(F.col("src").alias("id")).agg(F.sum("w").alias("k"))

@@ -3,8 +3,9 @@
 Not in the CUDA reference (SURVEY.md §2.11 — mandated by the north rule);
 semantics from the published algorithm. One superstep is a single
 shuffle: contributions = edges ⋈ ranks on src (rank/out-weight scaled by
-edge weight), then groupBy(dst).sum. Lineage is truncated per iteration
-with localCheckpoint; convergence on L1 delta.
+edge weight), then groupBy(dst).sum. The loop (lazy per-superstep
+checkpoint, one L1 action, resume, stop test) is
+plans/superstep.py::supersteps; convergence on L1 delta.
 
 The symmetric graph has no dangling vertices (every vertex has out-edges),
 so no dangling redistribution term is needed — asserted by construction in
@@ -16,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..plans.superstep import local_arrays, runs_local, supersteps
 from ..sources.edges import GraphTables
 
 
@@ -30,15 +32,8 @@ def _local_pagerank(graph: GraphTables, alpha: float, max_iter: int, tol: float)
     import numpy as np
     import pandas as pd
 
-    spark = graph.edges.sparkSession
-    epdf = graph.edges.select("src", "dst", "weight").toPandas()
-    vpdf = graph.vertices.select("id", "k").toPandas()
-    ids = vpdf["id"].to_numpy()
-    order = np.argsort(ids, kind="stable")
-    ids, k = ids[order], vpdf["k"].to_numpy()[order]
-    src = np.searchsorted(ids, epdf["src"].to_numpy())
-    dst = np.searchsorted(ids, epdf["dst"].to_numpy())
-    share = epdf["weight"].to_numpy() / k[src]
+    ids, src, dst, w, k = local_arrays(graph, with_k=True)
+    share = w / k[src]
     n = len(ids)
     rank = np.full(n, 1.0 / n)
     base = (1.0 - alpha) / n
@@ -50,7 +45,69 @@ def _local_pagerank(graph: GraphTables, alpha: float, max_iter: int, tol: float)
         rank = new_rank
         if l1 < tol:
             break
-    return spark.createDataFrame(pd.DataFrame({"id": ids, "rank": rank}))
+    out = pd.DataFrame({"id": ids, "rank": rank})
+    return graph.edges.sparkSession.createDataFrame(out)
+
+
+def _shares(graph: GraphTables, npart: int) -> DataFrame:
+    """share_(src->dst) = w / k_src: static per edge, so built once,
+    ``src``-partitioned for the superstep's join."""
+    return (
+        graph.edges.join(
+            graph.vertices.select(F.col("id").alias("src"), F.col("k").alias("k_src")), "src"
+        )
+        .select("src", "dst", (F.col("weight") / F.col("k_src")).alias("share"))
+        .repartition(npart, "src")
+        .localCheckpoint(eager=True)
+    )
+
+
+def _step(shares: DataFrame, state: DataFrame, carry: list[str], rank) -> DataFrame:
+    """One PageRank superstep: state (id, rank, *carry) -> (id, *carry,
+    rank, old), with ``rank(in_sum)`` the new rank from the summed
+    contributions (0.0 for a vertex nothing points at).
+
+    Superstep shape (guide §2.4 — two exchanges, down from five): one
+    null-term SELF ROW per vertex rides into the contribution aggregate
+    (null contributes nothing to sum(term); max(old) picks the group's
+    single self row), which guarantees every vertex a group — including
+    isolated k=0 vertices, which keep rank = base exactly as the old
+    left join's coalesce gave them — so the per-iteration join against
+    the vertex table is gone, and the L1 convergence check is a scalar
+    aggregate over the new state instead of a join of consecutive rank
+    tables. The ``carry`` columns (the restart vector, the out-degree)
+    ride the self rows the same way. Values are unchanged: identical
+    per-row float64 ops, and in_sum never sees the self rows (null, not
+    0.0).
+    """
+    types = dict(state.dtypes)
+    terms = shares.join(state.select(F.col("id").alias("src"), "rank"), "src").select(
+        F.col("dst").alias("id"),
+        (F.col("share") * F.col("rank")).alias("term"),
+        F.lit(None).cast("double").alias("old"),
+        *[F.lit(None).cast(types[c]).alias(c) for c in carry],
+    )
+    selfrows = state.select(
+        "id", F.lit(None).cast("double").alias("term"), F.col("rank").alias("old"), *carry
+    )
+    return (
+        terms.unionByName(selfrows)
+        .groupBy("id")
+        .agg(
+            F.sum("term").alias("in_sum"),
+            F.max("old").alias("old"),
+            *[F.max(c).alias(c) for c in carry],
+        )
+        .select("id", *carry, rank(F.coalesce(F.col("in_sum"), F.lit(0.0))).alias("rank"), "old")
+    )
+
+
+def _l1(state: DataFrame, _job: str) -> dict:
+    """The superstep's one action: Σ|rank − old| as a partial+final
+    aggregate. Not ``observed``: that merges partition sums in
+    task-completion order, so the float stop test could move by an ulp."""
+    d = state.agg(F.sum(F.abs(F.col("rank") - F.col("old"))).alias("d")).collect()[0]["d"]
+    return {"l1": float(d) if d is not None else None}
 
 
 def personalized_pagerank(
@@ -88,59 +145,21 @@ def personalized_pagerank(
         graph.vertices.select("id")
         .join(seeds.select("id").withColumn("p", F.lit(p0)), "id", "left")
         .select("id", F.coalesce("p", F.lit(0.0)).alias("p"))
-        .localCheckpoint(eager=True)
     )
-    shares = (
-        graph.edges.join(
-            graph.vertices.select(F.col("id").alias("src"), F.col("k").alias("k_src")), "src"
-        )
-        .select("src", "dst", (F.col("weight") / F.col("k_src")).alias("share"))
-        .repartition(npart, "src")
-        .localCheckpoint(eager=True)
-    )
+    shares = _shares(graph, npart)
+
+    def rank(in_sum):
+        return F.lit(1.0 - alpha) * F.col("p") + F.lit(alpha) * in_sum
+
     # state (id, p, rank): the restart vector rides in the state so the
-    # superstep needs no join against pvec — same two-exchange shape as
-    # :func:`pagerank` (null-term self rows carry p and the old rank into
-    # the contribution aggregate; see the comment there). Identical
-    # float64 expression per row; in_sum never sees the self rows.
-    state = pvec.select("id", "p", F.col("p").alias("rank")).localCheckpoint(eager=True)
-    for _it in range(max_iter):
-        terms = shares.join(state.select(F.col("id").alias("src"), "rank"), "src").select(
-            F.col("dst").alias("id"),
-            (F.col("share") * F.col("rank")).alias("term"),
-            F.lit(None).cast("double").alias("old"),
-            F.lit(None).cast("double").alias("p"),
-        )
-        selfrows = state.select(
-            "id", F.lit(None).cast("double").alias("term"),
-            F.col("rank").alias("old"), "p",
-        )
-        st = (
-            terms.unionByName(selfrows)
-            .groupBy("id")
-            .agg(
-                F.sum("term").alias("in_sum"),
-                F.max("old").alias("old"),
-                F.max("p").alias("p"),
-            )
-            .select(
-                "id",
-                "p",
-                (
-                    F.lit(1.0 - alpha) * F.col("p")
-                    + F.lit(alpha) * F.coalesce(F.col("in_sum"), F.lit(0.0))
-                ).alias("rank"),
-                "old",
-            )
-            .localCheckpoint(eager=False)
-        )
-        # the L1 action doubles as the per-round materialization point
-        # (truncates lineage inside the lazy localCheckpoint), exactly
-        # like the uniform loop — so it runs even when tol=0
-        l1 = st.agg(F.sum(F.abs(F.col("rank") - F.col("old"))).alias("d")).collect()[0]["d"]
-        state = st.select("id", "p", "rank")
-        if tol > 0.0 and l1 is not None and float(l1) < tol:
-            break
+    # superstep needs no join against pvec. The L1 action doubles as the
+    # per-round materialization point, so it runs even when tol=0
+    state, _, _ = supersteps(
+        "ppr", pvec.select("id", "p", F.col("p").alias("rank")),
+        lambda state, _metric: _step(shares, state, ["p"], rank), _l1,
+        lambda m, _prev: tol > 0.0 and m["l1"] is not None and m["l1"] < tol,
+        max_iter,
+    )
     return state.select("id", "rank")
 
 
@@ -164,72 +183,20 @@ def pagerank(
     """
     spark = graph.edges.sparkSession
     npart = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    if checkpointer is None and local_max_edges > 0 and graph.edges.count() <= local_max_edges:
+    if runs_local(graph, local_max_edges, checkpointer):
         return _local_pagerank(graph, alpha, max_iter, tol)
     n = graph.vertices.count()
-    # share_(src->dst) = w / k_src  (static per edge: precompute once)
-    shares = (
-        graph.edges.join(
-            graph.vertices.select(F.col("id").alias("src"), F.col("k").alias("k_src")), "src"
-        )
-        .select("src", "dst", (F.col("weight") / F.col("k_src")).alias("share"))
-        .repartition(npart, "src")
-        .localCheckpoint(eager=True)
-    )
-    ranks = graph.vertices.select("id", F.lit(1.0 / n).alias("rank")).localCheckpoint(eager=True)
+    shares = _shares(graph, npart)
     base = (1.0 - alpha) / n
-    start_iter = 0
-    if checkpointer is not None:
-        state = checkpointer.load_latest(spark)
-        if state is not None:
-            it, saved, metric = state
-            if metric.get("l1") is not None and float(metric["l1"]) < tol:
-                return saved  # the saved iteration had already converged
-            ranks = saved.localCheckpoint(eager=True)
-            start_iter = it + 1
-    # Superstep shape (guide §2.4 — two exchanges, down from five): one
-    # null-term SELF ROW per vertex rides into the contribution aggregate
-    # (null contributes nothing to sum(term); max(old) picks the group's
-    # single self row), which guarantees every vertex a group — including
-    # isolated k=0 vertices, which keep rank = base exactly as the old
-    # left join's coalesce gave them — so the per-iteration join against
-    # the vertex table is gone, and the L1 convergence check is a scalar
-    # aggregate over the new state instead of a join of consecutive rank
-    # tables. Values are unchanged: identical per-row float64 ops, and
-    # in_sum never sees the self rows (null, not 0.0).
-    for _it in range(start_iter, max_iter):
-        terms = shares.join(ranks.select(F.col("id").alias("src"), "rank"), "src").select(
-            F.col("dst").alias("id"),
-            (F.col("share") * F.col("rank")).alias("term"),
-            F.lit(None).cast("double").alias("old"),
-        )
-        selfrows = ranks.select(
-            "id", F.lit(None).cast("double").alias("term"), F.col("rank").alias("old")
-        )
-        st = (
-            terms.unionByName(selfrows)
-            .groupBy("id")
-            .agg(F.sum("term").alias("in_sum"), F.max("old").alias("old"))
-            .select(
-                "id",
-                (F.lit(base) + F.lit(alpha) * F.coalesce(F.col("in_sum"), F.lit(0.0))).alias("rank"),
-                "old",
-            )
-        )
-        if _it == start_iter:
-            from ..plans.debug import dump_plan
-
-            dump_plan(st, "superstep_pagerank")
-        st = st.localCheckpoint(eager=False)  # materializes inside the L1 action
-        l1 = st.agg(F.sum(F.abs(F.col("rank") - F.col("old"))).alias("d")).collect()[0]["d"]
-        ranks = st.select("id", "rank")
-        if checkpointer is not None:
-            checkpointer.save(
-                _it, ranks, {"l1": float(l1) if l1 is not None else None}
-            )
-        if l1 is not None and float(l1) < tol:
-            break
-    return ranks
+    ranks, _, _ = supersteps(
+        "pagerank", graph.vertices.select("id", F.lit(1.0 / n).alias("rank")),
+        lambda ranks, _metric: _step(
+            shares, ranks, [], lambda in_sum: F.lit(base) + F.lit(alpha) * in_sum
+        ),
+        _l1, lambda m, _prev: m["l1"] is not None and m["l1"] < tol,
+        max_iter, checkpointer,
+    )
+    return ranks.select("id", "rank")
 
 
 def directed_pagerank(
@@ -250,8 +217,8 @@ def directed_pagerank(
     Scale: the share table (1/outdeg per distinct link) is built once;
     each superstep is ONE shuffle join + groupBy plus a single scalar
     action that doubles as the round's materialization point: the
-    dangling-mass sum over the od=0 slice of the freshly built ranks
-    (lazy localCheckpoint, the personalized_pagerank discipline).
+    dangling-mass sum over the od=0 slice of the freshly built ranks,
+    which seeds the next superstep (plans/superstep.py).
     Vertices are link endpoints; isolated turns never enter the graph.
     """
     d = (
@@ -275,48 +242,31 @@ def directed_pagerank(
     nf = float(n)
     shares = (
         d.join(vstate.select(F.col("id").alias("a"), "od"), "a")
-        .select("a", "b", (F.lit(1.0) / F.col("od").cast("double")).alias("share"))
+        .select(
+            F.col("a").alias("src"), F.col("b").alias("dst"),
+            (F.lit(1.0) / F.col("od").cast("double")).alias("share"),
+        )
         .localCheckpoint(eager=True)
     )
-    ranks = vstate.select(
-        "id", "od", (F.lit(1.0) / F.lit(nf)).alias("rank")
-    ).localCheckpoint(eager=True)
+    ranks = vstate.select("id", "od", (F.lit(1.0) / F.lit(nf)).alias("rank"))
+
     # dangling mass summed (not multiplied out) so the oracle's SQL sum
     # sees the same accumulation semantics from round 0 onward
-    dang = ranks.filter(F.col("od") == 0).agg(F.sum("rank")).collect()[0][0] or 0.0
-    # same two-exchange superstep as :func:`pagerank`: null-term self rows
-    # carry od (and guarantee every vertex a group), so the per-round
-    # left join against vstate is gone; identical float64 expression
-    for _ in range(max_iter):
-        terms = shares.join(ranks.select(F.col("id").alias("a"), "rank"), "a").select(
-            F.col("b").alias("id"),
-            (F.col("share") * F.col("rank")).alias("term"),
-            F.lit(None).cast("long").alias("od"),
-        )
-        selfrows = ranks.select(
-            "id", F.lit(None).cast("double").alias("term"), F.col("od").cast("long").alias("od")
-        )
-        ranks = (
-            terms.unionByName(selfrows)
-            .groupBy("id")
-            .agg(F.sum("term").alias("insum"), F.max("od").alias("od"))
-            .select(
-                "id",
-                "od",
-                (
-                    F.lit(1.0 - alpha) / F.lit(nf)
-                    + F.lit(alpha)
-                    * (
-                        F.coalesce("insum", F.lit(0.0))
-                        + F.lit(float(dang)) / F.lit(nf)
-                    )
-                ).alias("rank"),
-            )
-            .localCheckpoint(eager=False)
-        )
-        # ONE action per round: materializes the new ranks and yields
-        # the next round's dangling scalar
-        dang = ranks.filter(F.col("od") == 0).agg(F.sum("rank")).collect()[0][0] or 0.0
+    def dangling(ranks, _job=None):
+        return {"dang": ranks.filter(F.col("od") == 0).agg(F.sum("rank")).collect()[0][0] or 0.0}
+
+    # the out-degree rides the self rows, so the per-round left join
+    # against vstate is gone
+    def step(ranks, metric):
+        return _step(shares, ranks, ["od"], lambda in_sum: (
+            F.lit(1.0 - alpha) / F.lit(nf)
+            + F.lit(alpha) * (in_sum + F.lit(float(metric["dang"])) / F.lit(nf))
+        ))
+
+    ranks, _, _ = supersteps(
+        "pagerank_directed", ranks, step, dangling, lambda _m, _prev: False, max_iter,
+        metric=dangling(ranks),
+    )
     return ranks.select("id", F.round("rank", 9).alias("rank_r9"))
 
 

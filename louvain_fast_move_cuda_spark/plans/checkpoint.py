@@ -42,10 +42,20 @@ class SuperstepState:
     # uses it to decide whether the inner loop had already terminated
 
 
+def _commit(d: str, meta: dict, key: str, df: DataFrame) -> None:
+    """Add ``df``'s per-partition row counts to ``meta`` under ``key`` and
+    write it as ``d``'s _META.json, the commit marker written last."""
+    parts = df.groupBy(F.spark_partition_id().alias("pid")).count().collect()
+    meta[key] = {int(r["pid"]): int(r["count"]) for r in parts}
+    tmp = os.path.join(d, "_META.json.tmp")
+    with open(tmp, "w") as f:
+        json.dump(meta, f)
+    os.replace(tmp, os.path.join(d, "_META.json"))  # atomic commit marker
+
+
 class SuperstepCheckpointer:
-    def __init__(self, root: str, record_partition_metrics: bool = True):
+    def __init__(self, root: str):
         self.root = root
-        self.record_partition_metrics = record_partition_metrics
         os.makedirs(root, exist_ok=True)
 
     def _dir(self, level: int, rnd: int) -> str:
@@ -74,17 +84,7 @@ class SuperstepCheckpointer:
             "ts": time.time(),
             "metric": metric or {},
         }
-        if self.record_partition_metrics:
-            parts = (
-                edges_state.groupBy(F.spark_partition_id().alias("pid"))
-                .count()
-                .collect()
-            )
-            meta["edges_state_partitions"] = {int(r["pid"]): int(r["count"]) for r in parts}
-        tmp = os.path.join(d, "_META.json.tmp")
-        with open(tmp, "w") as f:
-            json.dump(meta, f)
-        os.replace(tmp, os.path.join(d, "_META.json"))  # atomic commit marker
+        _commit(d, meta, "edges_state_partitions", edges_state)
 
     def load_latest(self, spark: SparkSession) -> SuperstepState | None:
         best = None
@@ -133,10 +133,9 @@ class VertexIterationCheckpointer:
         <root>/iter=<I>/_META.json
     """
 
-    def __init__(self, root: str, algo: str, record_partition_metrics: bool = True):
+    def __init__(self, root: str, algo: str):
         self.root = root
         self.algo = algo
-        self.record_partition_metrics = record_partition_metrics
         os.makedirs(root, exist_ok=True)
 
     def _dir(self, iteration: int) -> str:
@@ -151,15 +150,7 @@ class VertexIterationCheckpointer:
             "ts": time.time(),
             "metric": metric or {},
         }
-        if self.record_partition_metrics:
-            parts = (
-                state.groupBy(F.spark_partition_id().alias("pid")).count().collect()
-            )
-            meta["state_partitions"] = {int(r["pid"]): int(r["count"]) for r in parts}
-        tmp = os.path.join(d, "_META.json.tmp")
-        with open(tmp, "w") as f:
-            json.dump(meta, f)
-        os.replace(tmp, os.path.join(d, "_META.json"))  # atomic commit marker
+        _commit(d, meta, "state_partitions", state)
 
     def load_latest(self, spark: SparkSession):
         """-> (iteration, state DataFrame, metric dict) or None."""

@@ -26,10 +26,15 @@ def test_louvain_deterministic_across_shuffle_partitions(spark):
     edges = powerlaw_graph(n=250, m_attach=2, seed=11)
     raw = spark.createDataFrame(edges, "a long, b long")
     results = []
+    saved = spark.conf.get("spark.sql.shuffle.partitions")
     for npart in (2, 8):
-        g = build_graph(raw, relabel=False)
-        res = louvain(g, shuffle_partitions=npart, local_finish_max_edges=0)
-        results.append((_labels(res), res.modularity))
+        spark.conf.set("spark.sql.shuffle.partitions", str(npart))
+        try:
+            g = build_graph(raw, relabel=False)
+            res = louvain(g, local_finish_max_edges=0)
+            results.append((_labels(res), res.modularity))
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", saved)
     assert results[0][0] == results[1][0]
     assert math.isclose(results[0][1], results[1][1], abs_tol=1e-12)
 
@@ -142,12 +147,40 @@ def test_pagerank_lpa_cc_resume_mid_iteration(spark, tmp_path):
     for k in fresh:
         assert resumed[k] == pytest.approx(fresh[k], abs=1e-12)
 
+    # resuming a CONVERGED checkpoint (large tol) runs no iteration and
+    # returns the fixpoint
+    ck = VertexIterationCheckpointer(str(tmp_path / "pr_done"), algo="pagerank")
+    done = {r.id: r.rank for r in pagerank(g, max_iter=100, tol=0.05, checkpointer=ck).collect()}
+    n_iters = len(os.listdir(tmp_path / "pr_done"))
+    assert n_iters < 100
+    again = {r.id: r.rank for r in
+             pagerank(g, max_iter=100, tol=0.05, checkpointer=ck).collect()}
+    assert again == done and len(os.listdir(tmp_path / "pr_done")) == n_iters
+    fresh = {r.id: r.rank for r in
+             pagerank(g, max_iter=100, tol=0.05, local_max_edges=0).collect()}
+    for k in fresh:
+        assert done[k] == pytest.approx(fresh[k], abs=1e-12)
+
     # --- lpa: 1 round, then resume to 5 (bit-identical labels) -----------
     ck = VertexIterationCheckpointer(str(tmp_path / "lpa"), algo="lpa")
     label_propagation(g, max_iter=1, checkpointer=ck).collect()
     resumed = sorted(map(tuple, label_propagation(g, max_iter=5, checkpointer=ck).collect()))
     fresh = sorted(map(tuple, label_propagation(g, max_iter=5, local_max_edges=0).collect()))
     assert resumed == fresh
+
+    # resuming a FIXPOINT checkpoint runs no round and returns the fixpoint
+    # (synchronous LPA oscillates on the power-law graph; bridged 5-cliques
+    # settle in a few rounds)
+    cliques = [(a, b) for c in range(0, 40, 5) for a in range(c, c + 5)
+               for b in range(a + 1, c + 5)] + [(c + 4, c + 5) for c in range(0, 35, 5)]
+    gk = build_graph(spark.createDataFrame(cliques, "a long, b long"), relabel=False)
+    ck = VertexIterationCheckpointer(str(tmp_path / "lpa_done"), algo="lpa")
+    done = sorted(map(tuple, label_propagation(gk, max_iter=30, checkpointer=ck).collect()))
+    n_rounds = len(os.listdir(tmp_path / "lpa_done"))
+    assert n_rounds < 30
+    again = sorted(map(tuple, label_propagation(gk, max_iter=30, checkpointer=ck).collect()))
+    assert again == done and len(os.listdir(tmp_path / "lpa_done")) == n_rounds
+    assert done == sorted(map(tuple, label_propagation(gk, max_iter=30).collect()))
 
     # --- cc: 1 star round, then resume (exact labels) --------------------
     ck = VertexIterationCheckpointer(str(tmp_path / "cc"), algo="cc")
