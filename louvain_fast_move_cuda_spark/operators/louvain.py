@@ -8,10 +8,11 @@ Spark-native re-expression of the CUDA reference's two phases
   destination community c among its neighbors using *stale* per-round
   community state (that parallel semantics IS the "fast local move"), then
   applies all positive-gain argmax moves simultaneously.
-* **Round-0 exact fast path** (phaseOptimizationSort.cu:28-158): at the
-  start of each level communities are singletons, so each edge is itself
-  the (node, community) candidate with self-weight 0; the asymmetric
-  guard — only moves to a *higher* community id are applied
+* **Round-0 exact fast path** (phaseOptimizationSort.cu:28-158): the
+  move kernel's ``rnd == 0`` branch. At the start of each level
+  communities are singletons, so each edge is itself the (node,
+  community) candidate with self-weight 0; the asymmetric guard — only
+  moves to a *higher* community id are applied
   (phaseOptimizationUpdate.cu:99 skips node > c) — prevents 2-cycles.
 * **Aggregation phase** (phaseAggregation.cuh:19-175): dense-relabel the
   surviving communities in community-id order, flatten the per-original-
@@ -63,10 +64,9 @@ import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.modularity import delta_q, modularity_fused
 from ..plans.observe import observed
 from .louvain_arrow import arrow_round_moves
-from .louvain_local import local_louvain
+from .louvain_local import local_louvain, q_from_sums
 from ..sources.edges import GraphTables, assign_contiguous_ids
 
 MODULARITY_CONVERGED_THRESHOLD = 0.001  # constants.h:15
@@ -112,13 +112,6 @@ def _scalars(est: DataFrame, comm_w: DataFrame, name: str) -> dict:
     )
 
 
-def _q(win, s, m: float) -> float:
-    """Q = W_in/(2m) − ΣΣ_tot²/(4m²)   (community.h:104)."""
-    w_in = float(win) if win is not None else 0.0
-    sq = float(s) if s is not None else 0.0
-    return w_in / (2.0 * m) - sq / (4.0 * m * m)
-
-
 def _comm_weights(est: DataFrame) -> DataFrame:
     """Σ_tot per community straight from the edge state: a community's
     Σ_tot is the summed weight of its members' out-edges, so no vertex
@@ -142,6 +135,39 @@ def _level_edge_state(edges: DataFrame, npart: int) -> DataFrame:
     )
 
 
+def _start_state(est: DataFrame, eager: bool, m: float, name: str):
+    """(est, comm_w, q, ne) for the edge state a round loop starts from
+    (a level start, or a resumed checkpoint): ``est`` and its Σ_tot
+    table are checkpointed (``est`` eagerly or lazily, as the call site
+    chooses; Σ_tot lazily), then ONE observed scan gives Q
+    (community.h:64 update()) and the directed edge count and
+    materializes whichever checkpoint is still lazy."""
+    est = est.localCheckpoint(eager=eager)
+    comm_w = _comm_weights(est).localCheckpoint(eager=False)
+    row = _scalars(est, comm_w, name)
+    return est, comm_w, q_from_sums(row["win"], row["s"], m), int(row["ne"])
+
+
+def _dense_relabel(comms: DataFrame, n_max: int, broadcast_max: int, npart: int):
+    """((comm, newid), n): dense 0-based ranks of the distinct ``comm``
+    ids in ascending id order (phaseAggregation.cuh:19-52), and their
+    count. ``n_max`` bounds the row count: a table that would be
+    broadcast anyway is ranked on the driver (one collect instead of a
+    range shuffle); above that, :func:`assign_contiguous_ids` ranks it
+    with a range partitioning sized to ``n_max`` rows, and its
+    per-partition counts give ``n`` for free."""
+    if n_max <= broadcast_max:
+        import pyarrow as pa
+
+        ids = np.sort(comms.toArrow().column("comm").to_numpy())
+        table = pa.table({"comm": ids, "newid": np.arange(len(ids), dtype=np.int64)})
+        return comms.sparkSession.createDataFrame(table), len(ids)
+    return assign_contiguous_ids(
+        comms, ["comm"], id_col="newid", assume_distinct=True, with_count=True,
+        num_partitions=max(1, min(npart, -(-n_max // MIN_ROWS_PER_PARTITION))),
+    )
+
+
 def _apply_moves(
     df: DataFrame, mv: DataFrame, key: str, comm_col: str, moved_col: str | None = None
 ) -> DataFrame:
@@ -161,18 +187,20 @@ def _apply_moves(
     return out.drop("node", "_newc")
 
 
-def _refine_result(graph: GraphTables, res: LouvainResult) -> LouvainResult:
+def _refine_result(
+    graph: GraphTables, res: LouvainResult, broadcast_max: int, npart: int
+) -> LouvainResult:
     """C9 refine (the reference's empty stub, phaseRefine.cuh:1-3) as
     Leiden connectivity refinement: split every community into its
     connected parts (operators/refine.py — Q can only rise), dense-
-    relabel, and recompute Q/community count over the original graph."""
+    relabel, and recompute Q/community count over the original graph
+    in one observed scan."""
     from .refine import refine_partition
 
     labels = refine_partition(graph, res.labels)
-    rl = assign_contiguous_ids(
+    rl, _ = _dense_relabel(
         labels.select(F.col("community").alias("comm")).distinct(),
-        ["comm"],
-        id_col="newid",
+        graph.n_nodes, broadcast_max, npart,
     )
     labels = (
         labels.join(rl.withColumnRenamed("comm", "community"), "community")
@@ -192,8 +220,11 @@ def _refine_result(graph: GraphTables, res: LouvainResult) -> LouvainResult:
         .groupBy(F.col("community").alias("comm"))
         .agg(F.sum("k").alias("ctot"))
     )
-    q = modularity_fused(est, ctot, graph.m)
-    n = rl.count()
+    # every labeled vertex is in graph.vertices, so ctot has one row per
+    # community: the scan's row count is the community count
+    row = _scalars(est, ctot, "louvain refine")
+    q = q_from_sums(row["win"], row["s"], graph.m)
+    n = int(row["nc"])
     return LouvainResult(
         labels=labels,
         modularity=q,
@@ -204,40 +235,20 @@ def _refine_result(graph: GraphTables, res: LouvainResult) -> LouvainResult:
 
 
 def round0_moves(graph: GraphTables) -> DataFrame:
-    """The round-0 exact fast path as a standalone, oracle-checkable plan.
-
-    With singleton communities (start of every level) each directed edge is
-    itself the (node, candidate-community) pair with self-weight 0
-    (phaseOptimizationSort.cu:28-158), Σ_tot(c) = k_c, and the asymmetric
-    guard keeps only moves toward a higher id
-    (phaseOptimizationUpdate.cu:99). Pure column arithmetic + one argmax
-    groupBy — the exact plan the first inner round of :func:`louvain` runs.
+    """The first round :func:`louvain` runs, as a standalone,
+    oracle-checkable plan: the level-0 edge state and Σ_tot table, then
+    the move kernel's ``rnd == 0`` branch — singleton communities, each
+    directed edge its own (node, candidate-community) pair with
+    self-weight 0 (phaseOptimizationSort.cu:28-158), moves only toward a
+    higher id (phaseOptimizationUpdate.cu:99).
 
     Returns (node: long, newc: long).
     """
-    m = graph.m
-    k = graph.vertices.select("id", "k")
-    cand = (
-        graph.edges.filter(F.col("src") != F.col("dst"))
-        .join(k.select(F.col("id").alias("src"), F.col("k").alias("k_src")), "src")
-        .join(k.select(F.col("id").alias("dst"), F.col("k").alias("k_dst")), "dst")
-        .withColumn(
-            "delta",
-            delta_q(F.col("weight"), F.lit(0.0), F.col("k_src"), F.col("k_src"), F.col("k_dst"), m),
-        )
+    npart = int(graph.edges.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
+    est = _level_edge_state(
+        graph.edges.select("src", "dst", F.col("weight").alias("w")), npart
     )
-    best = cand.groupBy("src").agg(
-        F.max(F.struct(F.col("delta"), (-F.col("dst")).alias("negc"))).alias("b")
-    )
-    return (
-        best.select(
-            F.col("src").alias("node"),
-            (-F.col("b.negc")).alias("newc"),
-            F.col("b.delta").alias("delta"),
-        )
-        .filter((F.col("delta") > 0) & (F.col("node") < F.col("newc")))
-        .select("node", "newc")
-    )
+    return arrow_round_moves(est, _comm_weights(est), graph.m, 0, npart, broadcast_comm_w=True)
 
 
 def aggregate_graph(edges: DataFrame, labels: DataFrame) -> DataFrame:
@@ -326,7 +337,6 @@ def louvain(
     npart = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
 
     level = 0
-    q = None
     metrics: list[dict] = []
     resume_round = None
     resume_q_level_start = None
@@ -338,14 +348,17 @@ def louvain(
     # rows (cs/cd/dm) and in the Σ_tot table ``comm_w``.
     state = checkpointer.load_latest(spark) if checkpointer is not None else None
     if state is not None:
-        est, verts, labels = state.edges_state, state.vertices, state.labels
+        verts, labels = state.vertices, state.labels
         level, q = state.level, state.q
         cur_n = verts.count()
-        # the saved edge state carries the frontier in its ``dm`` column
-        est = est.repartition(npart, "src").localCheckpoint(eager=True)
+        # the saved edge state carries the frontier in its ``dm`` column.
+        # The scan's Q is dropped: the run goes on with the Q the original
+        # run carried
+        est, comm_w, _, level_ne = _start_state(
+            state.edges_state.repartition(npart, "src"), True, m, f"louvain L{level} resume"
+        )
         verts = verts.localCheckpoint(eager=True)
         labels = labels.localCheckpoint(eager=True)
-        comm_w = _comm_weights(est).localCheckpoint(eager=False)
         if state.round >= 0:
             # was the checkpointed round the LAST round of its level? If so,
             # resuming must NOT score another round (it would apply moves the
@@ -364,23 +377,12 @@ def louvain(
     else:
         # --- level-0 init (community.h:31-46: identity labels, k as Σ_tot)
         verts = graph.vertices.select("id", "k")
-        est = _level_edge_state(
-            graph.edges.select("src", "dst", F.col("weight").alias("w")), npart
-        ).localCheckpoint(eager=True)
         labels = verts.select(F.col("id").alias("orig_id"), F.col("id").alias("community"))
         cur_n = graph.n_nodes
-        comm_w = _comm_weights(est).localCheckpoint(eager=False)
-
-    # the level's directed edge count is computed inside the SAME action
-    # as Q; None means "not yet known for this level" and falls back to
-    # its own count
-    level_ne = None
-    if q is None:
-        # modularity (community.h:104) + edge count in ONE map-only job —
-        # the same two sums modularity() computes, identical float64 math
-        row = _scalars(est, comm_w, f"louvain L{level} init")
-        q = _q(row["win"], row["s"], m)
-        level_ne = int(row["ne"])
+        est, comm_w, q, level_ne = _start_state(
+            _level_edge_state(graph.edges.select("src", "dst", F.col("weight").alias("w")), npart),
+            True, m, f"louvain L{level} init",
+        )
 
     # the local tail is only entered at a clean level start (identity
     # comms), which never follows a resume: it is off while durable
@@ -389,7 +391,9 @@ def louvain(
 
     n_best = None
     while True:
-        if use_local and est.count() <= local_finish_max_edges:
+        # level_ne: this level's directed edge count, observed in the scan
+        # that gave its Q (or in the coarsen step)
+        if use_local and level_ne <= local_finish_max_edges:
             import pandas as pd
 
             epdf = est.select("src", "dst", "w").toPandas()
@@ -419,7 +423,7 @@ def louvain(
                 levels=level + loc.levels_added + 1,
                 metrics=metrics,
             )
-            return _refine_result(graph, res) if refine else res
+            return _refine_result(graph, res, broadcast_moves_max, npart) if refine else res
 
         q_level_start = q if resume_q_level_start is None else resume_q_level_start
         # scale-adaptive per-level parallelism (guide §2.2/§2.4): shuffle
@@ -429,12 +433,8 @@ def louvain(
         # of npart near-empty ones, while any level with real data keeps
         # the configured width (the min() can only shrink, never widen).
         # Bit-safe: every float sum in the loop is integer-valued, so
-        # partition layout cannot change results. A resume-path level
-        # counts est itself (one cheap job against the checkpoint).
-        if level_ne is None:
-            level_ne = est.count()
+        # partition layout cannot change results.
         level_npart = max(1, min(npart, -(-level_ne // MIN_ROWS_PER_PARTITION)))
-        level_ne = None
         # community-table row count, tracked round-to-round (free: counted
         # inside the round's action) — drives the Σ_tot broadcast decision;
         # at level start communities are singletons so it is at most cur_n
@@ -504,7 +504,7 @@ def louvain(
                 fused = _scalars(est, comm_w, f"louvain L{level} R{rnd}")
                 est_moves = n_moves
                 n_cw = int(fused["nc"])
-                q = _q(fused["win"], fused["s"], m)
+                q = q_from_sums(fused["win"], fused["s"], m)
             if not bcast:
                 moves.unpersist()
             dq = q - q_old
@@ -528,28 +528,11 @@ def louvain(
         # every path here — re-deriving it would be one wasted exchange +
         # aggregate per level (guide §2.4: don't recompute what is already
         # partitioned/materialized)
-        surviving = comm_w.filter(F.col("ctot") > 0).select("comm")
-        if n_cw <= broadcast_moves_max:
-            # a community table that would be broadcast anyway is dense-
-            # ranked on the driver: one collect instead of a range shuffle
-            import pyarrow as pa
-
-            comm_ids = np.sort(surviving.toArrow().column("comm").to_numpy())
-            n_best = len(comm_ids)
-            relabel = spark.createDataFrame(
-                pa.table({"comm": comm_ids, "newid": np.arange(n_best, dtype=np.int64)})
-            )
-        else:
-            # surviving is a groupBy output (already distinct) and the
-            # relabel's per-partition counts give the community count for
-            # free — no dedup shuffle, no separate .count() job
-            relabel, n_best = assign_contiguous_ids(
-                surviving, ["comm"], id_col="newid",
-                assume_distinct=True, with_count=True,
-                # the relabel shuffles community-count rows, not edges: size
-                # its range partitioning to that count, same adaptive rule
-                num_partitions=max(1, min(npart, -(-cur_n // MIN_ROWS_PER_PARTITION))),
-            )
+        # the surviving communities are a groupBy output (already
+        # distinct); the relabel counts them for free
+        relabel, n_best = _dense_relabel(
+            comm_w.filter(F.col("ctot") > 0).select("comm"), n_cw, broadcast_moves_max, npart
+        )
         # flatten labels (P9 / community.h:48-55): orig label -> comm of its
         # current-graph vertex -> dense coarse id. The vertex -> community
         # map is read off the edge state (every vertex with an edge is a
@@ -612,13 +595,11 @@ def louvain(
         # the coarse level's vertex table stays lazy: only a checkpoint save
         # or the local tail ever reads it
         verts = coarse.groupBy(F.col("src").alias("id")).agg(F.sum("w").alias("k"))
-        est = _level_edge_state(coarse, next_npart).localCheckpoint(eager=False)
-        comm_w = _comm_weights(est).localCheckpoint(eager=False)
-        # Q of the fresh level (community.h:64 update()) in ONE map-only
-        # job — est materializes its lazy checkpoint inside it. Identical
-        # float64 math to modularity(): same two sums, combined the same way.
-        row = _scalars(est, comm_w, f"louvain L{level + 1} init")
-        q = _q(row["win"], row["s"], m)
+        # Q of the fresh level in ONE map-only job (its edge count is the
+        # level_ne observed above)
+        est, comm_w, q, _ = _start_state(
+            _level_edge_state(coarse, next_npart), False, m, f"louvain L{level + 1} init"
+        )
         level += 1
         if checkpointer is not None:
             checkpointer.save(
@@ -636,4 +617,4 @@ def louvain(
         levels=level + 1,
         metrics=metrics,
     )
-    return _refine_result(graph, res) if refine else res
+    return _refine_result(graph, res, broadcast_moves_max, npart) if refine else res

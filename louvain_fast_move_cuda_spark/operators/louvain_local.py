@@ -22,9 +22,9 @@ Exact parity with the distributed rounds (tested bit-for-bit):
 * every weight / degree / Σ_tot on our graphs is an integer-valued
   float64 (coarsening sums 1.0-weight edges), so partial sums are exact
   in any order — groupBy, bincount and reduceat agree bit-for-bit;
-* Q uses the identical float64 expression tree as
-  functions/modularity.py (`W_in/(2m) − ΣΣ_tot²/(4m²)`), and ΔQ is
-  computed by the shared :func:`_round_moves` in both placements;
+* Q is :func:`q_from_sums` in both placements (the distributed rounds
+  feed it the sums of one observed scan), and ΔQ is computed by the
+  shared :func:`_round_moves`;
 * identical frontier propagation (phaseOptimizationUpdate.cu:117-132)
   and 0.001 thresholds (constants.h:15) — so moves, levels and final
   labels match the distributed engine exactly, not just approximately.
@@ -46,6 +46,18 @@ class LocalLouvainResult:
     n_communities: int
     levels_added: int  # number of aggregation phases run
     metrics: list[dict] = field(default_factory=list)
+
+
+def q_from_sums(w_in, sq, m: float) -> float:
+    """Q = W_in/(2m) − ΣΣ_tot²/(4m²)   (community.h:104).
+
+    The engine's only copy of the formula. ``w_in`` is the summed weight
+    of intra-community directed edges (self-loops included), ``sq`` the
+    sum of squared community weights; a ``None`` sum (no rows) counts as 0.
+    """
+    w_in = float(w_in) if w_in is not None else 0.0
+    sq = float(sq) if sq is not None else 0.0
+    return w_in / (2.0 * m) - sq / (4.0 * m * m)
 
 
 def _round_moves(
@@ -184,9 +196,7 @@ def local_louvain(
             if n_moves > 0:
                 comm[nodes] = newc
                 ctot = np.bincount(comm, weights=k, minlength=n)
-                w_in = float(w[comm[src] == comm[dst]].sum())
-                sq = float((ctot * ctot).sum())
-                q = w_in / (2.0 * m) - sq / (4.0 * m * m)
+                q = q_from_sums(w[comm[src] == comm[dst]].sum(), (ctot * ctot).sum(), m)
                 # frontier C6: srcs of edges whose dst moved into a
                 # community different from src's
                 moved = np.zeros(n, dtype=bool)
@@ -235,9 +245,7 @@ def local_louvain(
         n = n_best
         k = np.bincount(src, weights=w, minlength=n)
         ctot = k.copy()
-        w_in = float(w[src == dst].sum())
-        sq = float((ctot * ctot).sum())
-        q = w_in / (2.0 * m) - sq / (4.0 * m * m)
+        q = q_from_sums(w[src == dst].sum(), (ctot * ctot).sum(), m)
         level += 1
         levels_added += 1
 

@@ -49,8 +49,10 @@ def prefix_sum(
     local = ranged.withColumn(
         "_local_excl", F.coalesce(F.sum(value_col).over(w), F.lit(0)).cast("long")
     )
-    # persist so the totals we collect match the partitioning the join sees
-    local = local.persist()
+    # checkpoint so the totals we collect match the partitioning the join
+    # sees: the totals job materializes it, the join reads the same blocks,
+    # and nothing is left in the session's cache
+    local = local.localCheckpoint(eager=False)
     totals = {
         r["_pid"]: r["tot"]
         for r in local.groupBy("_pid").agg(F.sum(value_col).alias("tot")).collect()

@@ -67,8 +67,10 @@ def assign_contiguous_ids(
     )
     w = Window.partitionBy("_pid").orderBy(*cols)
     local = ranged.withColumn("_rn", F.row_number().over(w) - 1)
-    # persist so the counts we collect match the partitioning the join sees
-    local = local.persist()
+    # checkpoint so the counts we collect match the partitioning the join
+    # sees: the count job materializes it, the join reads the same blocks,
+    # and nothing is left in the session's cache
+    local = local.localCheckpoint(eager=False)
     counts = {r["_pid"]: r["cnt"] for r in local.groupBy("_pid").agg(F.count("*").alias("cnt")).collect()}
     offsets, acc = [], 0
     for pid in sorted(counts):
@@ -102,18 +104,27 @@ def derive_edges_from_transcripts(transcripts: DataFrame) -> DataFrame:
     duplicates; feed to :func:`canonicalize_edges`).
     """
     ids = assign_contiguous_ids(transcripts, ["conv_id", "turn_idx"], id_col="vid")
-    t = transcripts.join(ids, ["conv_id", "turn_idx"])
+    return transcript_links(transcripts.join(ids, ["conv_id", "turn_idx"]))
 
+
+def transcript_links(turns: DataFrame, reply_only: bool = False) -> DataFrame:
+    """The two link kinds of :func:`derive_edges_from_transcripts` as
+    ``a:long, b:long`` pairs, from turns already carrying their ``vid``
+    (and ``conv_id``, ``turn_idx``, ``tool``, ``ts``): reply links by a
+    ``lead()`` over each conversation, tool links by a ``lead()`` over
+    each tool's (ts, conv_id, turn_idx) order. ``reply_only`` drops the
+    tool links."""
     w_conv = Window.partitionBy("conv_id").orderBy("turn_idx")
     reply = (
-        t.withColumn("b", F.lead("vid").over(w_conv))
+        turns.withColumn("b", F.lead("vid").over(w_conv))
         .filter(F.col("b").isNotNull())
         .select(F.col("vid").alias("a"), "b")
     )
-
+    if reply_only:
+        return reply
     w_tool = Window.partitionBy("tool").orderBy("ts", "conv_id", "turn_idx")
     tool = (
-        t.filter(F.col("tool").isNotNull())
+        turns.filter(F.col("tool").isNotNull())
         .withColumn("b", F.lead("vid").over(w_tool))
         .filter(F.col("b").isNotNull())
         .select(F.col("vid").alias("a"), "b")

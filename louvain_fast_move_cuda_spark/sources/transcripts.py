@@ -97,6 +97,7 @@ def transcript_graph(
         assign_contiguous_ids,
         canonicalize_edges,
         symmetrize,
+        transcript_links,
         vertex_weights,
     )
 
@@ -119,31 +120,14 @@ def transcript_graph(
         assume_distinct=True, carry_all=True,
     ).localCheckpoint(eager=True)
     ids = tv.select("conv_id", "turn_idx", "vid")
-
-    w_conv = Window.partitionBy("conv_id").orderBy("turn_idx")
-    reply = (
-        tv.withColumn("b", F.lead("vid").over(w_conv))
-        .filter(F.col("b").isNotNull())
-        .select(F.col("vid").alias("a"), "b")
-    )
-    raw = reply
-    if not reply_only:
-        w_tool = Window.partitionBy("tool").orderBy("ts", "conv_id", "turn_idx")
-        tool = (
-            tv.filter(F.col("tool").isNotNull())
-            .withColumn("b", F.lead("vid").over(w_tool))
-            .filter(F.col("b").isNotNull())
-            .select(F.col("vid").alias("a"), "b")
-        )
-        raw = reply.unionByName(tool)
-
+    raw = transcript_links(tv, reply_only)
     edges = symmetrize(canonicalize_edges(raw).localCheckpoint(eager=True))
     verts = (
         ids.select(F.col("vid").alias("id"))
         .join(vertex_weights(edges), "id", "left")
         .select("id", F.coalesce("k", F.lit(0.0)).alias("k"))
     )
-    # ONE action for both host scalars (the modularity_fused pattern):
+    # ONE action for both host scalars (two 1-row aggregates, crossJoined):
     # m from the edge sum, n from the (checkpointed) vid table — vids are
     # dense over ALL turns, so ids.count() == verts.count() without
     # evaluating the verts join here

@@ -40,6 +40,29 @@ def test_contiguous_ids_order_preserving(spark):
     assert ids == {7: 0, 42: 1, 100: 2, 9001: 3}
 
 
+def test_relabel_and_scan_leave_nothing_cached(spark):
+    """assign_contiguous_ids and prefix_sum hold their per-partition rows
+    in a local checkpoint, not in the session's cache: nothing outlives
+    the call, and a second derive in the same session recomputes from its
+    input and gives the same pairs."""
+    from louvain_fast_move_cuda_spark.operators.scan import prefix_sum
+
+    spark.catalog.clearCache()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    df = spark.createDataFrame([(v, v % 7) for v in range(0, 3000, 3)], "v long, x long")
+    ids = {r.v: r.nid for r in assign_contiguous_ids(df, ["v"], id_col="nid").collect()}
+    assert ids == {v: v // 3 for v in range(0, 3000, 3)}
+    cum = {r.v: r.cum_before for r in prefix_sum(df, "v", "x", num_partitions=5).collect()}
+    assert cum[2997] == sum(v % 7 for v in range(0, 2997, 3))
+    assert cache.isEmpty()
+
+    t = synthesize_transcripts(spark, n_convs=200, seed=7)
+    first = sorted((r.a, r.b) for r in derive_edges_from_transcripts(t).collect())
+    second = sorted((r.a, r.b) for r in derive_edges_from_transcripts(t).collect())
+    assert first == second and len(first) > 200
+    assert cache.isEmpty()
+
+
 def test_build_graph_counts(spark):
     # triangle 10-20-30 plus pendant 40
     raw = spark.createDataFrame(

@@ -226,6 +226,35 @@ def test_kernel_partitions_match_whole_graph_round_moves():
     assert min(rounds_moved[1:]) < n
 
 
+def test_round0_moves_match_python_round0_rule(spark):
+    """round0_moves (the kernel's rnd == 0 branch behind the
+    louvain_round0 query) equals the round-0 rule written out in plain
+    Python: singleton communities, ΔQ = w/m + k_n(k_n − k_n − k_c)/(2m²),
+    the highest ΔQ per node with ties to the lowest community id, kept
+    when ΔQ > 0 and node < newc. Its row count is round 0's n_moves in a
+    distributed louvain() run."""
+    from louvain_fast_move_cuda_spark.operators.louvain import round0_moves
+
+    und = powerlaw_graph()
+    g = build_graph(spark.createDataFrame(und, "a long, b long"), relabel=False)
+    directed = [(a, b) for a, b in und] + [(b, a) for a, b in und]
+    m = float(len(und))
+    k = {}
+    for s, _ in directed:
+        k[s] = k.get(s, 0.0) + 1.0
+    best = {}
+    for s, d in directed:
+        delta = (1.0 - 0.0) / m + (k[s] * (k[s] - k[s] - k[d])) / (2.0 * m * m)
+        if s not in best or delta > best[s][0] or (delta == best[s][0] and d < best[s][1]):
+            best[s] = (delta, d)
+    want = sorted((s, c) for s, (delta, c) in best.items() if delta > 0 and s < c)
+
+    got = sorted((r.node, r.newc) for r in round0_moves(g).collect())
+    assert got == want and len(want) > 0
+    first = louvain(g, local_finish_max_edges=0).metrics[0]
+    assert (first["level"], first["round"], first["n_moves"]) == (0, 0, len(got))
+
+
 def test_refine_splits_disconnected_community(spark):
     """C9 refine (phaseRefine.cuh is an empty stub in the reference;
     semantics: Leiden connectivity guarantee): a community containing
@@ -274,6 +303,14 @@ def test_refine_is_identity_and_monotone_on_louvain_output(spark):
     assert ref.modularity >= plain.modularity - 1e-12
     lab = {r.orig_id: r.community for r in ref.labels.collect()}
     assert set(lab.values()) == set(range(ref.n_communities))  # dense
+    assert ref.n_communities == len(set(lab.values()))
+    # the refined Q is the Q of the emitted labels
+    deg = {r.id: r.k for r in g.vertices.collect()}
+    ctot = {}
+    for v, c in lab.items():
+        ctot[c] = ctot.get(c, 0.0) + deg[v]
+    directed = [(r.src, r.dst, r.weight) for r in g.edges.collect()]
+    assert ref.modularity == pytest.approx(_modularity(directed, lab, ctot, g.m), abs=1e-12)
     # idempotence: refining the refined labels changes nothing (up to
     # the canonical min-id relabel refine_partition uses internally)
     ldf = ref.labels

@@ -8,9 +8,8 @@ scale; these prove Catalyst compiles them to the plans that survive a
   (PushedFilters) — a scan reading all columns for a 2-column
   projection is wrong regardless of local timing;
 * the per-round Louvain joins broadcast the small side (community
-  weights / moves), never cartesian;
-* the per-(node, community) pre-aggregation is hash-based with a
-  map-side partial step;
+  weights / moves), never cartesian, and one Arrow kernel pass scores
+  the round;
 * the hot column expressions stay inside WholeStageCodegen.
 """
 
@@ -51,6 +50,13 @@ def test_events_scan_prunes_to_edge_derivation_columns(spark):
 
 
 def test_louvain_round_joins_broadcast_small_side(spark):
+    """round0_moves is the round louvain() runs first: Σ_tot joins the
+    edge state by broadcast (never cartesian), and ONE mapInArrow pass
+    scores, argmaxes and filters every candidate partition-locally — the
+    reference's HASH mode (phaseOptimizationHash.cu:38-158), with no
+    DataFrame aggregate left for the argmax."""
+    import re
+
     from louvain_fast_move_cuda_spark.operators.louvain import round0_moves
     from louvain_fast_move_cuda_spark.sources.edges import build_graph
 
@@ -60,27 +66,11 @@ def test_louvain_round_joins_broadcast_small_side(spark):
     moves.collect()  # let AQE finalize join strategies
     plan = _plan(moves)
     assert "CartesianProduct" not in plan
-    assert "BroadcastHashJoin" in plan
     assert "isFinalPlan=true" in plan
-    # the per-node argmax max(struct(delta, -cd)) compiles to a partial+final
-    # SortAggregate — structurally the reference's SORT mode (sort_by_key +
-    # reduce_by_key, phaseOptimizationSort.cu:344-352); the HASH-mode
-    # analogue is the arrow kernel, which does the argmax partition-locally
-    assert "partial_max" in _plan(moves, mode="simple")
-
-
-def test_candidate_preagg_is_partial_hash_agg(spark):
-    """groupBy(src, cd).sum(w) — A3/A4 — must compile to partial+final
-    HashAggregate (map-side combine), the built-in equivalent of the
-    reference's per-chunk hash table (hashmap.cuh:14-73)."""
-    est = spark.createDataFrame(
-        [(0, 1, 1.0, 2.0, 0, 1), (1, 0, 1.0, 2.0, 1, 0)],
-        "src long, dst long, w double, k_src double, cs long, cd long",
-    )
-    agg = est.groupBy("src", "cd").agg(F.sum("w").alias("wnc"))
-    plan = _plan(agg, mode="simple")
-    assert plan.count("HashAggregate") == 2  # partial + final
-    assert "partial_sum" in plan
+    final = _plan(moves, mode="simple").split("== Final Plan ==")[1].split("== Initial Plan ==")[0]
+    assert re.search(r"BroadcastHashJoin \[cs#\d+L\], \[comm#\d+L\]", final)
+    assert final.count("MapInArrow") == 1
+    assert "partial_max" not in final
 
 
 def test_textstats_stay_in_wholestage_codegen(spark):
