@@ -222,9 +222,6 @@ def run_suite(names: list[str] | None, scaling_convs: int | None = None) -> dict
         res = louvain(
             g, local_finish_max_edges=0, max_levels=1,
             broadcast_moves_max=BCAST_MAX,
-            # Σ_tot stays on the default threshold: at level 0 it is
-            # vertex-count-sized and broadcasting it OOMs the executors
-            broadcast_comm_max=5_000_000,
         )
         timings["louvain_lvl0"] = time.time() - t0
         sh_after = _shuffle_totals(spark)

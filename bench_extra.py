@@ -109,7 +109,7 @@ def main():
         sc.setJobDescription("louvain_lvl0")
         t0 = time.time()
         res = louvain(g, local_finish_max_edges=0, max_levels=1,
-                      broadcast_moves_max=5_000_000, broadcast_comm_max=5_000_000)
+                      broadcast_moves_max=5_000_000)
         out["louvain_lvl0_sec"] = round(time.time() - t0, 3)
         out["modularity"] = res.modularity
         out["rounds"] = [

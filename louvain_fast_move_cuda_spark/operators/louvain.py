@@ -26,25 +26,36 @@ Scale design (this is where we diverge from a port):
   hash partition in one ``mapInArrow`` pass (operators/louvain_arrow.py,
   the reference's CSR-chunked HASH mode); once a coarsened level fits in
   one node, the driver-local tail (operators/louvain_local.py) runs it on
-  the whole graph — the reference's own whole-graph-in-one-device model;
-* state lives in ``edges_state = (src, dst, w, k_src, cs, cd, dm)`` — the
-  community of both endpoints is *carried on the edge row* and updated by
-  joining only against the (small) per-round ``moves`` set, broadcast when
-  it fits, instead of re-joining the full vertex table every round.
-  ``dm`` ("dst moved last round") carries the frontier, so the kernel
-  picks its active sources partition-locally and no round shuffles a
-  frontier. Broadcast applies keep ``est`` hash-partitioned on ``src``
-  across rounds (vertex state and messages co-partitioned, as in
-  Pregelix), so the kernel's input is never re-shuffled;
-* Σ_tot is read off the edge state too (a community's Σ_tot is its
-  members' summed out-edge weight), so no vertex table is updated per
-  round;
-* per-round ``localCheckpoint`` truncates the iterative lineage; two
-  driver actions per round: the kernel's collect of a broadcastable move
-  set (its count comes free), and ONE observed scan returning both
-  modularity reductions — the Spark analogue of the reference
-  overlapping its two reductions on two CUDA streams,
-  community.h:72,88;
+  the whole graph — the reference's own whole-graph-in-one-device model.
+  Placement is decided at each level start from the level's vertex
+  degrees, gathered once, before any distributed state is built;
+* vertex state on the driver while it is broadcast-sized: while a level's
+  vertex ids lie in ``[0, broadcast_moves_max)`` (and no checkpointer is
+  set), its community, Σ_tot and moved-flag vectors are NumPy arrays on
+  the driver — the reference keeps every per-vertex array resident on
+  one device (community.h) and streams only the edges. The level's
+  static ``(src, dst, w, k_src)`` edges are checkpointed once,
+  ``src``-partitioned, and each round is ONE Spark job (Pregelix's
+  superstep: one dataflow over the edges plus one global aggregate):
+  the state ships as one broadcast, the kernel returns the moves and
+  the partition's W_in, and the driver applies the moves and recomputes
+  Σ_tot with ``bincount``. The relabel is ``flatnonzero(Σ_tot > 0)`` on
+  the driver and the coarsen one broadcast map plus one ``groupBy``;
+* vertex state on the edges above that bound (the 10^12-turn level 0)
+  and under durable checkpoints: ``edges_state = (src, dst, w, k_src,
+  cs, cd, dm)`` carries the community of both endpoints *on the edge
+  row*, updated by joining only against the per-round ``moves`` set,
+  broadcast when it fits. ``dm`` ("dst moved last round") carries the
+  frontier, so the kernel picks its active sources partition-locally.
+  Broadcast applies keep ``est`` hash-partitioned on ``src`` across
+  rounds (vertex state and messages co-partitioned, as in Pregelix), so
+  the kernel's input is never re-shuffled. Σ_tot is read off the edge
+  state too (a community's Σ_tot is its members' summed out-edge
+  weight), a per-round ``localCheckpoint`` truncates the lineage, and
+  one observed scan per round returns both modularity reductions — the
+  Spark analogue of the reference overlapping its two reductions on two
+  CUDA streams, community.h:72,88. Once coarsening brings a level under
+  the bound, the driver takes over;
 * optional durable parquet checkpoints per superstep with per-partition
   metrics enable mid-iteration resume (plans/checkpoint.py).
 
@@ -64,8 +75,9 @@ import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..plans.debug import dump_plan
 from ..plans.observe import observed
-from .louvain_arrow import arrow_round_moves
+from .louvain_arrow import arrow_round_moves, driver_round_moves, relabel_edges
 from .louvain_local import local_louvain, q_from_sums
 from ..sources.edges import GraphTables, assign_contiguous_ids
 
@@ -121,18 +133,154 @@ def _comm_weights(est: DataFrame) -> DataFrame:
     return est.groupBy(F.col("cs").alias("comm")).agg(F.sum("w").alias("ctot"))
 
 
-def _level_edge_state(edges: DataFrame, npart: int) -> DataFrame:
-    """A level's starting edge state from its (src, dst, w) edges:
-    identity communities, every ``dst`` counted as moved (so round 0
-    scores every vertex), hash-partitioned on ``src`` — the CSR-block
-    layout the move kernel reads. ``k_src`` is a window sum over the
-    ``src`` partition: a vertex's edges are already colocated, so the
-    degree costs a sort, not a join or another exchange."""
+def _static_edges(edges: DataFrame, npart: int) -> DataFrame:
+    """A level's (src, dst, w, k_src) edges, hash-partitioned on ``src``
+    — the CSR-block layout the move kernel reads. ``k_src`` is a window
+    sum over the ``src`` partition: a vertex's edges are already
+    colocated, so the degree costs a sort, not a join or another
+    exchange."""
     return edges.repartition(npart, "src").select(
-        "src", "dst", "w",
-        F.sum("w").over(Window.partitionBy("src")).alias("k_src"),
-        F.col("src").alias("cs"), F.col("dst").alias("cd"), F.lit(True).alias("dm"),
+        "src", "dst", "w", F.sum("w").over(Window.partitionBy("src")).alias("k_src")
     )
+
+
+def _level_edge_state(edges: DataFrame, npart: int) -> DataFrame:
+    """A level's starting edge-carried state from its (src, dst, w)
+    edges: the static edges plus identity communities and every ``dst``
+    counted as moved (so round 0 scores every vertex)."""
+    return _static_edges(edges, npart).select(
+        "*", F.col("src").alias("cs"), F.col("dst").alias("cd"), F.lit(True).alias("dm")
+    )
+
+
+def _level_width(ne: int, npart: int) -> int:
+    """A level's shuffle width: ``npart``, shrunk so that no partition
+    holds fewer than MIN_ROWS_PER_PARTITION of its ``ne`` edges."""
+    return max(1, min(npart, -(-ne // MIN_ROWS_PER_PARTITION)))
+
+
+def _vertex_degrees(edges: DataFrame):
+    """(ids, k, ne) of a level's (src, dst, w) edges in one per-vertex
+    gather: the vertex ids in ascending order, their weighted degrees,
+    and the directed edge count (the summed out-degrees)."""
+    t = edges.groupBy("src").agg(
+        F.sum("w").alias("k"), F.count(F.lit(1)).alias("deg")
+    ).toArrow()
+    ids = t.column("src").to_numpy()
+    order = np.argsort(ids, kind="stable")
+    return ids[order], t.column("k").to_numpy()[order], int(t.column("deg").to_numpy().sum())
+
+
+def _round_record(level, rnd, n_moves, q, dq, sec) -> dict:
+    return {
+        "level": level, "round": rnd, "n_moves": n_moves, "q": q,
+        "dq": dq, "sec": sec, "engine": "arrow",
+    }
+
+
+def _driver_rounds(static, k, m, level, threshold, early_stop_limit, metrics):
+    """One level's optimization phase with its vertex state on the driver.
+
+    ``static``: the level's static edges (:func:`_static_edges`); ``k``:
+    weighted degree by vertex id. ``comm``, Σ_tot and the moved flags are
+    NumPy arrays indexed by vertex id. Each round is ONE Spark job: the
+    state goes out as one broadcast, the kernel returns the moves and the
+    W_in of the state it was given, and the driver applies the moves and
+    recomputes Σ_tot with ``bincount``. Q of the state before round r
+    therefore arrives with round r's job: it completes round r−1's record
+    and stop test, and when that test ends the level round r's moves are
+    dropped. Exact: every sum is integer-valued float64.
+
+    Appends one record per round to ``metrics`` (its ``sec`` runs from the
+    round's job start to the next job's start); returns ``(comm, ctot,
+    q_start, q)``: the final state and Q at the level's start and end.
+    """
+    sc = static.sparkSession.sparkContext
+    n = len(k)
+    comm = np.arange(n, dtype=np.int64)
+    ctot = k.copy()
+    moved = np.ones(n, dtype=bool)  # round 0 scores every vertex
+    prev = None  # (round, n_moves, job start, Q before) of the round waiting for its Q
+    rnd = 0
+    while True:
+        t0 = time.time()
+        sc.setJobDescription(f"louvain L{level} R{rnd}")
+        state = sc.broadcast((comm, ctot, moved))
+        try:
+            moves = driver_round_moves(static, state, m, rnd)
+            if rnd <= 1:
+                dump_plan(moves, f"superstep_louvain_round{rnd}")
+            t = moves.toArrow()
+        finally:
+            state.destroy()
+        node = t.column("node").to_numpy()
+        mv = node >= 0
+        q = q_from_sums(t.column("win").to_numpy()[~mv].sum(), (ctot * ctot).sum(), m)
+        if prev is None:
+            q_start = q
+        else:
+            p_rnd, p_moves, p_t0, p_q = prev
+            metrics.append(_round_record(level, p_rnd, p_moves, q, q - p_q, t0 - p_t0))
+            if q - p_q <= threshold or rnd > early_stop_limit:
+                break
+        nodes, newc = node[mv], t.column("newc").to_numpy()[mv]
+        if not len(nodes):
+            # nothing moved: Q is known without another job
+            metrics.append(_round_record(level, rnd, 0, q, 0.0, time.time() - t0))
+            break
+        prev = (rnd, len(nodes), t0, q)
+        rnd += 1
+        comm[nodes] = newc
+        moved = np.zeros(n, dtype=bool)
+        moved[nodes] = True
+        ctot = np.bincount(comm, weights=k, minlength=n)
+    return comm, ctot, q_start, q
+
+
+def _coarsen(static: DataFrame, newid: np.ndarray, name: str):
+    """(coarse, ne): the level's edges with both endpoints mapped through
+    ``newid`` (vertex id -> next-level id, shipped as one broadcast) and
+    parallel edges merged, checkpointed and materialized by one observed
+    count — the next level's directed edge count."""
+    sc = static.sparkSession.sparkContext
+    bc = sc.broadcast(newid)
+    try:
+        coarse = relabel_edges(static, bc).groupBy("src", "dst").agg(F.sum("w").alias("w"))
+        dump_plan(coarse, "louvain_coarsen")
+        coarse = coarse.localCheckpoint(eager=False)
+        ne = int(observed(coarse, name, F.count(F.lit(1)).alias("ne"))["ne"])
+    finally:
+        bc.destroy()
+    return coarse, ne
+
+
+def _flatten(labels, ids, new):
+    """Compose the result labels with one level's vertex map: the vertex
+    ``ids[i]`` of the level goes to ``new[i]`` (−1: dropped, its
+    community has no weight).
+
+    ``labels`` is None while it is level 0's identity, an ``(orig ids,
+    community)`` array pair while every level ran on the driver, else a
+    distributed (orig_id, community) table, joined with the map broadcast.
+    """
+    if isinstance(labels, DataFrame):
+        import pyarrow as pa
+
+        keep = new >= 0
+        map_df = labels.sparkSession.createDataFrame(
+            pa.table({"community": ids[keep], "_final": new[keep]})
+        )
+        return (
+            labels.join(F.broadcast(map_df), "community")
+            .select("orig_id", F.col("_final").alias("community"))
+            .localCheckpoint(eager=False)
+        )
+    if labels is None:
+        orig, lab = ids, new
+    else:
+        orig, lab = labels[0], new[np.searchsorted(ids, labels[1])]
+    keep = lab >= 0
+    return orig[keep], lab[keep]
 
 
 def _start_state(est: DataFrame, eager: bool, m: float, name: str):
@@ -234,6 +382,19 @@ def _refine_result(
     )
 
 
+def _local_finish(labels, src, dst, w, ids, k, m, q, level, threshold, early_stop_limit, metrics):
+    """The remaining levels in the driver (operators/louvain_local.py),
+    from a clean level start: the level's gathered edges, vertex ids and
+    degrees, and its Q. Returns ``(labels, q, n_communities, level)`` at
+    the end: ``labels`` composed with the tail's (see :func:`_flatten`)
+    and the number of the last level."""
+    loc = local_louvain(src, dst, w, ids, k, m, q, level, threshold, early_stop_limit)
+    metrics.extend(loc.metrics)
+    # dropped (isolated) vertices carry label -1, see the kernel
+    labels = _flatten(labels, loc.ids, loc.labels)
+    return labels, loc.modularity, loc.n_communities, level + loc.levels_added
+
+
 def round0_moves(graph: GraphTables) -> DataFrame:
     """The first round :func:`louvain` runs, as a standalone,
     oracle-checkable plan: the level-0 edge state and Σ_tot table, then
@@ -282,7 +443,6 @@ def louvain(
     local_finish_max_edges: int = 5_000_000,
     max_levels: int | None = None,
     refine: bool = False,
-    broadcast_comm_max: int | None = None,
 ) -> LouvainResult:
     """Run Louvain to convergence. ``graph`` from sources.edges.build_graph.
 
@@ -309,18 +469,15 @@ def louvain(
     to convergence). Benchmarking hook — lets a scaling leg measure
     exactly the level-0 distributed rounds.
 
-    ``broadcast_moves_max``: broadcast the per-round move set (and the
-    flatten/coarsen relabel tables) while they fit. A broadcast apply
-    keeps the edge state hash-partitioned on ``src``; above the bound
-    the applies shuffle and the edge state is repartitioned on ``src``
-    again before the next round.
-
-    ``broadcast_comm_max``: separate broadcast threshold for the
-    Σ_tot community-weight table (defaults to ``broadcast_moves_max``).
-    Splitting the two matters at ~10^7-vertex scale: a round-0 move set
-    (~40% of vertices × 16 B) broadcasts comfortably, while Σ_tot at
-    level 0 is vertex-count-sized and must stay a shuffle join until
-    coarsening shrinks it.
+    ``broadcast_moves_max``: the bound on vertex-sized state that may pass
+    through the driver. While a level's vertex ids lie in
+    ``[0, broadcast_moves_max)`` and no checkpointer is set, the level's
+    community, Σ_tot and moved-flag vectors live on the driver and ship
+    to the kernel as one broadcast per round (one Spark job a round).
+    Above it the state is carried on the edge rows, and the per-round
+    move set, the Σ_tot table and the level relabel tables are still
+    broadcast while they fit; an apply that does not fit shuffles, and
+    the edge state is repartitioned on ``src`` before the next round.
 
     ``refine``: run the C9 refine phase on the final labels — the
     reference declares it but ships an empty stub (phaseRefine.cuh:1-3);
@@ -332,8 +489,6 @@ def louvain(
     m = graph.m
     if m <= 0:
         raise ValueError("empty graph")
-    if broadcast_comm_max is None:
-        broadcast_comm_max = broadcast_moves_max
     npart = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
 
     level = 0
@@ -341,6 +496,15 @@ def louvain(
     resume_round = None
     resume_q_level_start = None
     resume_opt_done = False
+    # the level about to start: its (src, dst, w) edges and a bound on its
+    # vertex-id range; ``ids``/``k``/``level_ne`` once they are known on
+    # the driver. ``est`` is set instead while levels run edge-carried.
+    edges = graph.edges.select("src", "dst", F.col("weight").alias("w"))
+    n_range = graph.n_nodes
+    ids = k = est = None
+    # the result labels: None while they are level 0's identity, a driver
+    # array pair or a distributed table after that (see _flatten)
+    labels = None
 
     # --- resume path (mid-iteration, north rule) --------------------------
     # ``verts`` is the level's vertex table (id, k): it changes only at a
@@ -374,15 +538,6 @@ def louvain(
             else:
                 resume_round = state.round + 1
             resume_q_level_start = state.q_level_start
-    else:
-        # --- level-0 init (community.h:31-46: identity labels, k as Σ_tot)
-        verts = graph.vertices.select("id", "k")
-        labels = verts.select(F.col("id").alias("orig_id"), F.col("id").alias("community"))
-        cur_n = graph.n_nodes
-        est, comm_w, q, level_ne = _start_state(
-            _level_edge_state(graph.edges.select("src", "dst", F.col("weight").alias("w")), npart),
-            True, m, f"louvain L{level} init",
-        )
 
     # the local tail is only entered at a clean level start (identity
     # comms), which never follows a resume: it is off while durable
@@ -391,39 +546,75 @@ def louvain(
 
     n_best = None
     while True:
+        if est is None and checkpointer is None and (
+            ids is not None or n_range <= broadcast_moves_max
+        ):
+            # ================= a level with its state on the driver =======
+            if ids is None:
+                ids, k, level_ne = _vertex_degrees(edges)
+            if use_local and level_ne <= local_finish_max_edges:
+                t = edges.toArrow()
+                src, dst, w = (t.column(c).to_numpy() for c in ("src", "dst", "w"))
+                if level == 0:
+                    # Q of the identity partition (community.h:64)
+                    q = q_from_sums(w[src == dst].sum(), (k * k).sum(), m)
+                labels, q, n_best, level = _local_finish(
+                    labels, src, dst, w, ids, k, m, q, level, threshold, early_stop_limit,
+                    metrics,
+                )
+                break
+            if ids[0] >= 0 and ids[-1] < broadcast_moves_max:
+                n = int(ids[-1]) + 1
+                kv = np.zeros(n)
+                kv[ids] = k
+                # round 0's job materializes the checkpoint
+                static = _static_edges(edges, _level_width(level_ne, npart)).localCheckpoint(
+                    eager=False
+                )
+                comm, ctot, q_start, q = _driver_rounds(
+                    static, kv, m, level, threshold, early_stop_limit, metrics
+                )
+                # aggregation: dense relabel of the surviving communities
+                # in id order (phaseAggregation.cuh:19-52), then flatten
+                spark.sparkContext.setJobDescription(f"louvain agg L{level}")
+                surviving = np.flatnonzero(ctot > 0)
+                n_best = len(surviving)
+                newid = np.full(n, -1, dtype=np.int64)
+                newid[surviving] = np.arange(n_best, dtype=np.int64)
+                newid = newid[comm]
+                labels = _flatten(labels, ids, newid[ids])
+                if not (q - q_start) > threshold:  # modularityAlgorithms.h:52
+                    break
+                # coarsen (A8); a coarse vertex's degree is its community's
+                # Σ_tot, and Q carries over unchanged
+                edges, level_ne = _coarsen(static, newid, f"louvain L{level} coarsen")
+                ids, k = np.arange(n_best, dtype=np.int64), ctot[surviving]
+                level += 1
+                if max_levels is not None and level >= max_levels:
+                    break
+                continue
+        if est is None:
+            # level 0 above the bound, with ids outside [0, bound) or under
+            # a checkpointer: the edge-carried state (community.h:31-46:
+            # identity labels, k as Σ_tot)
+            verts = graph.vertices.select("id", "k")
+            labels = verts.select(F.col("id").alias("orig_id"), F.col("id").alias("community"))
+            cur_n = graph.n_nodes
+            est, comm_w, q, level_ne = _start_state(
+                _level_edge_state(edges, npart), True, m, f"louvain L{level} init"
+            )
+
         # level_ne: this level's directed edge count, observed in the scan
         # that gave its Q (or in the coarsen step)
         if use_local and level_ne <= local_finish_max_edges:
-            import pandas as pd
-
-            epdf = est.select("src", "dst", "w").toPandas()
-            vpdf = verts.select("id", "k").toPandas()
-            loc = local_louvain(
-                epdf["src"].to_numpy(), epdf["dst"].to_numpy(),
-                epdf["w"].to_numpy(), vpdf["id"].to_numpy(),
-                vpdf["k"].to_numpy(), m, q, level, threshold,
-                early_stop_limit,
+            et = est.select("src", "dst", "w").toArrow()
+            vt = verts.select("id", "k").toArrow()
+            labels, q, n_best, level = _local_finish(
+                labels, *(et.column(c).to_numpy() for c in ("src", "dst", "w")),
+                vt.column("id").to_numpy(), vt.column("k").to_numpy(), m, q, level,
+                threshold, early_stop_limit, metrics,
             )
-            metrics.extend(loc.metrics)
-            keep = loc.labels >= 0  # dropped (isolated) vertices, see kernel
-            map_df = spark.createDataFrame(
-                pd.DataFrame(
-                    {"community": loc.ids[keep], "_final": loc.labels[keep]}
-                )
-            )
-            labels = (
-                labels.join(F.broadcast(map_df), "community")
-                .select("orig_id", F.col("_final").alias("community"))
-                .localCheckpoint(eager=True)
-            )
-            res = LouvainResult(
-                labels=labels,
-                modularity=loc.modularity,
-                n_communities=loc.n_communities,
-                levels=level + loc.levels_added + 1,
-                metrics=metrics,
-            )
-            return _refine_result(graph, res, broadcast_moves_max, npart) if refine else res
+            break
 
         q_level_start = q if resume_q_level_start is None else resume_q_level_start
         # scale-adaptive per-level parallelism (guide §2.2/§2.4): shuffle
@@ -434,7 +625,7 @@ def louvain(
         # the configured width (the min() can only shrink, never widen).
         # Bit-safe: every float sum in the loop is integer-valued, so
         # partition layout cannot change results.
-        level_npart = max(1, min(npart, -(-level_ne // MIN_ROWS_PER_PARTITION)))
+        level_npart = _level_width(level_ne, npart)
         # community-table row count, tracked round-to-round (free: counted
         # inside the round's action) — drives the Σ_tot broadcast decision;
         # at level start communities are singletons so it is at most cur_n
@@ -457,11 +648,9 @@ def louvain(
             q_old = q
             moves = arrow_round_moves(
                 est, comm_w, m, rnd, level_npart,
-                broadcast_comm_w=n_cw <= broadcast_comm_max,
+                broadcast_comm_w=n_cw <= broadcast_moves_max,
             )
             if rnd <= 1:
-                from ..plans.debug import dump_plan
-
                 dump_plan(moves, f"superstep_louvain_round{rnd}")
             # the kernel runs exactly once per round (the two applies below
             # would otherwise each recompute it). The broadcast decision
@@ -508,12 +697,7 @@ def louvain(
             if not bcast:
                 moves.unpersist()
             dq = q - q_old
-            metrics.append(
-                {
-                    "level": level, "round": rnd, "n_moves": n_moves, "q": q,
-                    "dq": dq, "sec": time.time() - t0, "engine": "arrow",
-                }
-            )
+            metrics.append(_round_record(level, rnd, n_moves, q, dq, time.time() - t0))
             if checkpointer is not None:
                 checkpointer.save(level, rnd, est, verts, labels, q, q_level_start, metrics[-1])
             rnd += 1
@@ -580,8 +764,6 @@ def louvain(
             .groupBy(F.col("nsrc").alias("src"), F.col("ndst").alias("dst"))
             .agg(F.sum("w").alias("w"))
         )
-        from ..plans.debug import dump_plan
-
         dump_plan(coarse, "louvain_coarsen")
         coarse = coarse.localCheckpoint(eager=False)
         # materialize the merge with an observed count (the job an eager
@@ -591,16 +773,23 @@ def louvain(
         level_ne = int(
             observed(coarse, f"louvain L{level} coarsen", F.count(F.lit(1)).alias("ne"))["ne"]
         )
-        next_npart = max(1, min(npart, -(-level_ne // MIN_ROWS_PER_PARTITION)))
+        level += 1
+        if checkpointer is None and n_best <= broadcast_moves_max:
+            # the coarse level fits the driver: it starts there, with the
+            # Q this level ended on (coarsening conserves it)
+            edges, n_range, est, ids = coarse, n_best, None, None
+            if max_levels is not None and level >= max_levels:
+                break
+            continue
         # the coarse level's vertex table stays lazy: only a checkpoint save
         # or the local tail ever reads it
         verts = coarse.groupBy(F.col("src").alias("id")).agg(F.sum("w").alias("k"))
         # Q of the fresh level in ONE map-only job (its edge count is the
         # level_ne observed above)
         est, comm_w, q, _ = _start_state(
-            _level_edge_state(coarse, next_npart), False, m, f"louvain L{level + 1} init"
+            _level_edge_state(coarse, _level_width(level_ne, npart)), False, m,
+            f"louvain L{level} init",
         )
-        level += 1
         if checkpointer is not None:
             checkpointer.save(
                 level, -1, est, verts, labels, q, q, {"level": level, "round": -1, "q": q}
@@ -610,6 +799,10 @@ def louvain(
             # partition found so far; Q is exact for that partition)
             break
 
+    if not isinstance(labels, DataFrame):
+        import pyarrow as pa
+
+        labels = spark.createDataFrame(pa.table({"orig_id": labels[0], "community": labels[1]}))
     res = LouvainResult(
         labels=labels,
         modularity=q,

@@ -17,12 +17,18 @@ exactly one place. A batch boundary may split a vertex's adjacency; the
 partition is never split, so concatenating first is all the
 partial-aggregate bookkeeping the kernel needs.
 
-The frontier travels on the edge state: ``dm`` marks rows whose ``dst``
-moved in the previous round (every row at a level start). The active
-sources are ``unique(src[dm & (cs != cd)])`` — the sources of edges
-whose dst moved into a community other than src's
+The active sources are ``unique(src[dm & (cs != cd)])`` — the sources
+of edges whose dst moved in the previous round (every dst at a level
+start) into a community other than src's
 (phaseOptimizationUpdate.cu:117-132) — and, since all of a source's
 rows are partition-local, that set is computed partition-locally too.
+
+The kernel has two inputs. While the vertex state is broadcast-sized
+(:func:`driver_round_moves`), the pass reads a level's static edges and
+looks ``cs``, ``cd``, Σ_tot and the moved flag up in the driver's
+broadcast arrays, and also returns the partition's W_in. Above that
+bound (:func:`arrow_round_moves`) the state is carried on the edge rows:
+``cs``/``cd``/``dm`` are columns and Σ_tot is joined in.
 """
 
 from __future__ import annotations
@@ -37,29 +43,116 @@ from .louvain_local import _round_moves
 MOVES_SCHEMA = "node long, newc long"
 # the kernel's per-row inputs: _round_moves's arguments plus the frontier flag
 KERNEL_COLUMNS = ("src", "cd", "w", "k_src", "cs", "ctot_cs", "ctot_cd", "dm")
+# a level's static edges when its vertex state lives on the driver
+STATIC_COLUMNS = ("src", "dst", "w", "k_src")
+# driver-state rounds: the moves, plus one row per partition (node -1)
+# carrying that partition's W_in
+DRIVER_MOVES_SCHEMA = "node long, newc long, win double"
+
+
+def _concat(batches):
+    """The partition's non-empty Arrow batches as one table, or None."""
+    import pyarrow as pa
+
+    batches = [b for b in batches if b.num_rows]
+    return pa.Table.from_batches(batches) if batches else None
+
+
+def _frontier_moves(src, cd, w, k_src, cs, ctot_cs, ctot_cd, dm, m, rnd):
+    """_round_moves over the rows of the active sources: those with an
+    edge whose dst moved last round into a community other than the
+    source's. Rows are non-self-loop edges, every row of a source present."""
+    import numpy as np
+
+    sel = np.isin(src, np.unique(src[dm & (cs != cd)]))
+    return _round_moves(
+        src[sel], cd[sel], w[sel], k_src[sel], cs[sel], ctot_cs[sel], ctot_cd[sel], m, rnd
+    )
 
 
 def _moves_kernel(m: float, rnd: int):
     def fn(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:  # noqa: F821
-        import numpy as np
         import pyarrow as pa
 
-        batches = [b for b in batches if b.num_rows]
-        if not batches:
+        t = _concat(batches)
+        if t is None:
             return
-        t = pa.Table.from_batches(batches)
-        src, cd, w, k_src, cs, ctot_cs, ctot_cd, dm = (
-            t.column(c).to_numpy() for c in KERNEL_COLUMNS
-        )
-        sel = np.isin(src, np.unique(src[dm & (cs != cd)]))
-        nodes, newc = _round_moves(
-            src[sel], cd[sel], w[sel], k_src[sel], cs[sel], ctot_cs[sel], ctot_cd[sel], m, rnd
-        )
+        nodes, newc = _frontier_moves(*(t.column(c).to_numpy() for c in KERNEL_COLUMNS), m, rnd)
         yield pa.RecordBatch.from_arrays(
             [pa.array(nodes, pa.int64()), pa.array(newc, pa.int64())], names=["node", "newc"]
         )
 
     return fn
+
+
+def _driver_kernel(state, m: float, rnd: int):
+    def fn(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:  # noqa: F821
+        import numpy as np
+        import pyarrow as pa
+
+        t = _concat(batches)
+        if t is None:
+            return
+        src, dst, w, k_src = (t.column(c).to_numpy() for c in STATIC_COLUMNS)
+        comm, ctot, moved = state.value
+        cs, cd = comm[src], comm[dst]
+        # W_in of the state this round was given (self-loops included)
+        win = w[cs == cd].sum()
+        e = src != dst
+        cs, cd = cs[e], cd[e]
+        nodes, newc = _frontier_moves(
+            src[e], cd, w[e], k_src[e], cs, ctot[cs], ctot[cd], moved[dst[e]], m, rnd
+        )
+        yield pa.RecordBatch.from_arrays(
+            [
+                pa.array(np.append(nodes, -1), pa.int64()),
+                pa.array(np.append(newc, -1), pa.int64()),
+                pa.array(np.append(np.zeros(len(nodes)), win), pa.float64()),
+            ],
+            names=["node", "newc", "win"],
+        )
+
+    return fn
+
+
+def driver_round_moves(static: DataFrame, state, m: float, rnd: int) -> DataFrame:
+    """One fast-local-move round over a level's static edges, its vertex
+    state read from the broadcast ``state = (comm, ctot, moved)``: NumPy
+    arrays indexed by vertex id (community, Σ_tot per community id, moved
+    last round).
+
+    ``static``: (src, dst, w, k_src), hash-partitioned on ``src`` (every
+    vertex's adjacency in one partition, as for :func:`arrow_round_moves`).
+    One mapInArrow, no join and no shuffle: each partition emits its
+    (node, newc) moves with ``win`` 0, then one row with node −1 whose
+    ``win`` is the partition's intra-community weight under ``state``.
+    Vertex ids must be ≥ 0.
+    """
+    return static.select(*STATIC_COLUMNS).mapInArrow(
+        _driver_kernel(state, m, rnd), schema=DRIVER_MOVES_SCHEMA
+    )
+
+
+def relabel_edges(static: DataFrame, newid) -> DataFrame:
+    """(src, dst, w) with both endpoints mapped through the broadcast array
+    ``newid`` (vertex id -> id at the next level): the map half of the
+    coarsen, before its groupBy merges parallel edges."""
+
+    def fn(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:  # noqa: F821
+        import pyarrow as pa
+
+        lab = newid.value
+        for b in batches:
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(lab[b.column(0).to_numpy()], pa.int64()),
+                    pa.array(lab[b.column(1).to_numpy()], pa.int64()),
+                    b.column(2),
+                ],
+                names=["src", "dst", "w"],
+            )
+
+    return static.select("src", "dst", "w").mapInArrow(fn, schema="src long, dst long, w double")
 
 
 def arrow_round_moves(

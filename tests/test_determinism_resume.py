@@ -4,6 +4,7 @@ from durable checkpoints, per-turn text equality under stable ordering."""
 import glob
 import math
 import os
+from dataclasses import replace
 
 from pyspark.sql import functions as F
 
@@ -39,22 +40,61 @@ def test_louvain_deterministic_across_shuffle_partitions(spark):
     assert math.isclose(results[0][1], results[1][1], abs_tol=1e-12)
 
 
+def _assert_same_run(got, want):
+    """Labels, Q, levels and every round's level, round, moves, q and dq
+    equal bit for bit."""
+    rounds = [(mt["level"], mt["round"], mt["n_moves"], mt["q"], mt["dq"]) for mt in want.metrics]
+    assert [(mt["level"], mt["round"], mt["n_moves"], mt["q"], mt["dq"]) for mt in got.metrics] == rounds
+    assert _labels(got) == _labels(want)
+    assert got.modularity == want.modularity
+    assert (got.levels, got.n_communities) == (want.levels, want.n_communities)
+
+
 def test_louvain_shuffle_paths_match_broadcast_paths(spark):
-    """With both broadcast bounds at 0 every round takes the scale path:
-    the move set stays distributed (shuffle-joined applies, edge state
-    repartitioned on src), Σ_tot is shuffle-joined into the kernel input
-    and the level relabel is a range shuffle. Labels and Q must equal the
-    broadcast paths' bit for bit."""
+    """With ``broadcast_moves_max=0`` every level takes the scale path: the
+    vertex state is carried on the edge rows, the move set stays
+    distributed (shuffle-joined applies, edge state repartitioned on
+    src), Σ_tot is shuffle-joined into the kernel input and the level
+    relabel is a range shuffle. At the default bound every level holds
+    its state on the driver instead, one broadcast and one job a round.
+    Both must give the same run bit for bit: at the default threshold,
+    where a level ends on a dropped speculative round after its dq stop,
+    and with the dq stop off and the round cap ending each level."""
     edges = powerlaw_graph(n=250, m_attach=2, seed=11)
     raw = spark.createDataFrame(edges, "a long, b long")
-    kw = dict(local_finish_max_edges=0)
-    res_b = louvain(build_graph(raw, relabel=False), **kw)
-    res_s = louvain(
-        build_graph(raw, relabel=False), broadcast_moves_max=0, broadcast_comm_max=0, **kw
-    )
-    assert _labels(res_s) == _labels(res_b)
-    assert res_s.modularity == res_b.modularity
-    assert [mt["n_moves"] for mt in res_s.metrics] == [mt["n_moves"] for mt in res_b.metrics]
+    for kw in (
+        dict(local_finish_max_edges=0),
+        dict(local_finish_max_edges=0, threshold=-1.0, early_stop_limit=3, max_levels=2),
+    ):
+        res_d = louvain(build_graph(raw, relabel=False), **kw)
+        res_s = louvain(build_graph(raw, relabel=False), broadcast_moves_max=0, **kw)
+        assert res_d.levels > 1
+        _assert_same_run(res_d, res_s)
+
+
+def test_louvain_non_dense_ids_match_edge_carried(spark):
+    """Vertex ids ×7 (``build_graph(relabel=False)`` keeps them): the
+    driver arrays are sized by the id range, not the vertex count. Every
+    placement must equal the edge-carried run: driver state at every
+    level; level 0 edge-carried because its id range exceeds the bound,
+    then the driver from level 1; the same with ``n_nodes`` understated as
+    the vertex count, so only the gathered ids reveal the range; and the
+    driver-local tail."""
+    edges = [(7 * a, 7 * b) for a, b in powerlaw_graph(n=250, m_attach=2, seed=11)]
+    g = build_graph(spark.createDataFrame(edges, "a long, b long"), relabel=False)
+    n_verts = g.vertices.count()
+    assert g.n_nodes > 1000 > n_verts
+    want = louvain(g, broadcast_moves_max=0, local_finish_max_edges=0)
+    assert want.levels > 1 and all(mt["engine"] == "arrow" for mt in want.metrics)
+    for bound, n_nodes in ((5_000_000, g.n_nodes), (1000, g.n_nodes), (1000, n_verts)):
+        got = louvain(
+            replace(g, n_nodes=n_nodes), broadcast_moves_max=bound, local_finish_max_edges=0
+        )
+        _assert_same_run(got, want)
+    loc = louvain(g)
+    assert all(mt["engine"] == "local" for mt in loc.metrics)
+    assert _labels(loc) == _labels(want)
+    assert (loc.modularity, loc.levels) == (want.modularity, want.levels)
 
 
 def test_local_finish_matches_distributed(spark):

@@ -375,3 +375,40 @@ def test_q_of_labels_endpoints(spark):
     ks = {r["id"]: r["k"] for r in g.vertices.collect()}
     m = g.m
     assert q0 == 0.0 / (2.0 * m) - sum(k * k for k in ks.values()) / (4.0 * m * m)
+
+
+def test_driver_state_round_is_one_job_and_louvain_repeats(spark):
+    """Below the broadcast bound a Louvain round is ONE Spark job: every
+    round r ≥ 1 of level 0 (job description ``louvain L0 R{r}``, the
+    dropped speculative round after the cap included) issues exactly one
+    job. Two runs in one session give bit-identical labels, Q and
+    per-round records, and nothing is left in the session's cache."""
+    sc = spark.sparkContext
+    spark.catalog.clearCache()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    g = build_graph(spark.createDataFrame(powerlaw_graph(), "a long, b long"), relabel=False)
+    kw = dict(local_finish_max_edges=0, max_levels=1, early_stop_limit=4, threshold=-1.0)
+    runs = []
+    for i in range(2):
+        group = f"louvain-round-jobs-{i}"
+        sc.setJobGroup(group, "louvain rounds")
+        try:
+            res = louvain(g, **kw)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        rounds = [(mt["level"], mt["round"], mt["n_moves"], mt["q"], mt["dq"]) for mt in res.metrics]
+        labels = sorted((r.orig_id, r.community) for r in res.labels.collect())
+        runs.append((labels, res.modularity, res.levels, res.n_communities, rounds))
+
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        store = sc._jsc.sc().statusStore()
+        per_desc = {}
+        for jid in sc.statusTracker().getJobIdsForGroup(group):
+            desc = store.job(jid).description()
+            d = desc.get() if desc.isDefined() else None
+            per_desc[d] = per_desc.get(d, 0) + 1
+        assert [mt["round"] for mt in res.metrics] == [0, 1, 2, 3, 4]
+        for r in range(1, 6):
+            assert per_desc.get(f"louvain L0 R{r}") == 1, (r, per_desc)
+    assert runs[0] == runs[1]
+    assert cache.isEmpty()
