@@ -311,8 +311,9 @@ def q_triangle_count(spark, sf_dir):
 
 
 def q_cc_reply(spark, sf_dir):
-    # local_max_edges=0: the oracle row certifies the DISTRIBUTED star
-    # rounds, not the driver-local tail (which pytest proves identical)
+    # local_max_edges=0: the oracle row certifies the Spark placement (one
+    # aggregate per round), not the driver-local tail (which pytest proves
+    # identical)
     _, _, g = _graph(spark, sf_dir, reply_only=True)
     return connected_components(g, local_max_edges=0)
 
@@ -463,7 +464,7 @@ def q_refine_buckets(spark, sf_dir):
     an adversarial partition — community = vid % 50, which packs many
     disconnected parts into every community. Output community = min vid
     reachable through intra-bucket edges; local_max_edges=0 certifies
-    the DISTRIBUTED star rounds over the restricted subgraph."""
+    the Spark placement of CC over the restricted subgraph."""
     from louvain_fast_move_cuda_spark.operators.refine import refine_partition
 
     _, ids, g = _graph(spark, sf_dir)
@@ -608,7 +609,7 @@ def q_pagerank_fixed20(spark, sf_dir):
     while any real defect >= 1e-9 — a thousand times finer than the
     north rule's 1e-6 allclose — still fails the hash compare."""
     _, _, g = _graph(spark, sf_dir)
-    # local_max_edges=0: this query checks the DISTRIBUTED plan (the local
+    # local_max_edges=0: this query checks the Spark placement (the local
     # tail agrees to ~1e-15, but the 9-decimal rounding contract is pinned
     # to one engine to keep the hash compare deterministic)
     pr = pagerank(g, max_iter=20, tol=0.0, local_max_edges=0)

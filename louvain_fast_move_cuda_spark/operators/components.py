@@ -1,37 +1,58 @@
-"""Connected components via alternating large-star / small-star.
+"""Connected components: Shiloach–Vishkin min-hooking while the vertex
+state fits the driver, Kiveris large-star / small-star above it.
 
 Not in the CUDA reference (SURVEY.md §2.11); semantics from the published
-algorithm (Kiveris et al., "Connected Components in MapReduce and
-Beyond"), which converges in O(log² n) rounds on any graph — the right
-choice at 10^12-edge scale where min-label flooding's O(diameter) rounds
-is unbounded.
+algorithms. The output, the minimum vertex id of each component, is a
+graph invariant, so every placement returns the same labels.
 
-State is a symmetric, self-loop-free ``(src, dst)`` edge set. One round
-(:func:`_star_round`, a large star then a small star) is one plan with
-no join: each star reads its per-vertex minimum off a ``min`` window over
-the ``src`` partitioning, emits its new edges from the window's rows
-(the small star both directions of each, from one ``explode``), and
-deduplicates in place after a ``src`` repartition (HashPartitioning(src)
-satisfies the distinct's clustering on (src, dst)). That is three
-shuffles per round: the large star's window (a ``localCheckpoint``-ed
-input reports no partitioning, so the window shuffles the previous
-round's output again), the large star's output and the small star's
-output. One observed noop write then materializes the round's lazy
-checkpoint and returns its (count, xor-hash) set fingerprint, so a
-distributed round is four Spark jobs, all in the JVM. The loop around the
-rounds (resume, per-round checkpoint, fixpoint stop) is
-plans/superstep.py::supersteps.
+While the graph runs on the driver (plans/superstep.py::placement) the
+labels are one NumPy array and each round is one min-label gather plus
+the update :func:`_hook_rounds`: every vertex relaxes to its smallest
+neighbouring label and hooks its root to it, then pointer jumping makes
+every tree a star again. The gather is NumPy over the edges in the local
+tail; with vertex state on the driver it is one broadcast of the labels
+joined onto the static self-loop-free ``(src, dst)`` table (``src``-
+partitioned, so ``min(label)`` by ``src`` needs no exchange), read back
+with ``toArrow()`` — two JVM jobs a round. On the perfbench graphs this
+takes 4 rounds where the star rounds take 11.
+
+Above ``VERTEX_STATE_MAX`` and under a checkpointer the rounds are
+Kiveris et al. ("Connected Components in MapReduce and Beyond"), which
+converge in O(log² n) rounds on any graph — the right choice at
+10^12-edge scale where min-label flooding's O(diameter) rounds is
+unbounded. State is a symmetric, self-loop-free ``(src, dst)`` edge set.
+One round (:func:`_star_round`, a large star then a small star) is one
+plan with no join: each star reads its per-vertex minimum off a ``min``
+window over the ``src`` partitioning, emits its new edges from the
+window's rows (the small star both directions of each, from one
+``explode``), and deduplicates in place after a ``src`` repartition
+(HashPartitioning(src) satisfies the distinct's clustering on (src,
+dst)). That is three shuffles per round: the large star's window (a
+``localCheckpoint``-ed input reports no partitioning under AQE, so the
+window shuffles the previous round's output again), the large star's
+output and the small star's output. One observed noop write then
+materializes the round's lazy checkpoint and returns its (count,
+xor-hash) set fingerprint, so a distributed round is four Spark jobs,
+all in the JVM. The loop around the rounds (resume, per-round
+checkpoint, fixpoint stop) is plans/superstep.py::supersteps.
 """
 
 from __future__ import annotations
 
 import warnings
 
+import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..plans.observe import observed
-from ..plans.superstep import local_arrays, runs_local, supersteps
+from ..plans.superstep import (
+    broadcast_gather,
+    edge_arrays,
+    placement,
+    supersteps,
+    vertex_state_scope,
+)
 from ..sources.edges import GraphTables
 
 
@@ -66,34 +87,78 @@ def _star_round(edges: DataFrame, npart: int) -> DataFrame:
     )
 
 
-def _local_components(graph: GraphTables) -> DataFrame:
-    """Driver-local tail: vectorized min-label pointer jumping.
+def _hook_rounds(n: int, gather, max_iter: int):
+    """CC's rounds on driver arrays (Shiloach–Vishkin min-hooking):
+    ``gather(it, label)`` gives every vertex's smallest neighbouring label
+    (its own label with no neighbour). Each vertex relaxes to it and hooks
+    its root, ``new[label[v]] = min(…, m(v))``, then pointer jumping runs
+    to a fixpoint, so every tree is a star again. Labels only fall and
+    ``label[x] <= x`` throughout, so once a round changes nothing each
+    vertex points at its component's smallest index. Returns ``(label,
+    done, rounds)``."""
+    label = np.arange(n, dtype=np.int64)
+    for it in range(max_iter):
+        m = gather(it, label)
+        new = np.minimum(label, m)
+        np.minimum.at(new, label, m)
+        while True:
+            jumped = new[new]
+            if np.array_equal(jumped, new):
+                break
+            new = jumped
+        if np.array_equal(new, label):
+            return label, True, it + 1
+        label = new
+    return label, False, max_iter
 
-    The output contract — component = min vertex id reachable — is
-    algorithm-independent, so this is exactly the distributed result
-    (same rationale as the Louvain local tail: once the edge list fits
-    one node, distributed star rounds pay scheduler latency for
-    nothing). Edge relaxation (np.minimum.at) + pointer doubling
-    converges in O(log n) passes.
-    """
-    import numpy as np
-    import pandas as pd
 
-    ids, src, dst, _, _ = local_arrays(graph)
+def _local_components(graph: GraphTables, ids, max_iter: int):
+    """Driver-local tail: the min-label gather over the edges in NumPy
+    (``np.minimum.at``)."""
+    src, dst, _ = edge_arrays(graph, ids)
     keep = src != dst
     src, dst = src[keep], dst[keep]
-    label = np.arange(len(ids), dtype=np.int64)
-    while True:
-        old = label
-        relaxed = label.copy()
-        np.minimum.at(relaxed, src, label[dst])  # pull each neighbor's label
-        label = relaxed
-        label = np.minimum(label, label[label])  # pointer doubling
-        label = np.minimum(label, label[label])
-        if np.array_equal(label, old):
-            break
-    out = pd.DataFrame({"id": ids, "component": ids[label]})
-    return graph.edges.sparkSession.createDataFrame(out)
+
+    def gather(_it, label):
+        m = label.copy()
+        np.minimum.at(m, src, label[dst])
+        return m
+
+    return _hook_rounds(len(ids), gather, max_iter)
+
+
+def _driver_components(graph: GraphTables, ids, max_iter: int, npart: int):
+    """Labels on the driver: each round's gather is one Spark aggregate,
+    ``min(label)`` by ``src`` over the static self-loop-free edges."""
+    spark = graph.edges.sparkSession
+    with vertex_state_scope(spark):
+        static = (
+            graph.edges.select("src", "dst")
+            .filter(F.col("src") != F.col("dst"))
+            .repartition(npart, "src")
+            .localCheckpoint(eager=False)
+        )
+        spark_gather = broadcast_gather(
+            spark, "cc", ids, "dst",
+            lambda labels: static.join(labels, "dst").groupBy("src").agg(F.min("label").alias("m")),
+        )
+
+        def gather(it, label):
+            idx, t = spark_gather(it, label=label)
+            m = label.copy()
+            m[idx] = t.column("m").to_numpy()
+            return m
+
+        return _hook_rounds(len(ids), gather, max_iter)
+
+
+def _warn_unstable(rounds: int, max_iter: int) -> None:
+    warnings.warn(
+        f"connected_components: not stable after {rounds} star rounds "
+        f"(max_iter={max_iter}); labels may not be component minima",
+        RuntimeWarning,
+        stacklevel=3,
+    )
 
 
 def connected_components(
@@ -105,25 +170,37 @@ def connected_components(
     """Returns (id: long, component: long) — component = min vertex id reachable.
 
     ``local_max_edges``: below this directed-edge count the computation
-    runs in the driver (identical output — the label is a graph
-    invariant); 0 forces the distributed star rounds.
+    runs in the driver; 0 = never. Otherwise, while the vertex count fits
+    ``VERTEX_STATE_MAX``, the labels stay on the driver (min-hooking, one
+    Spark aggregate a round); above it the star rounds run. The output is
+    identical on every path — the label is a graph invariant.
 
     ``checkpointer``: optional plans.checkpoint.VertexIterationCheckpointer
     — every star round durably saves the contracted edge set + its
     set-fingerprint; a fresh call resumes from the latest committed
     round (the stars are deterministic set maps, so resumed output is
-    identical). Forces the distributed path.
+    identical). Forces the star rounds.
 
-    If ``max_iter`` rounds pass before the edge set is stable, the labels
-    are parents in a graph that is not yet a union of stars, so they need
-    not be component minima: a ``RuntimeWarning`` says so.
+    If ``max_iter`` rounds pass before the labels (min-hooking) or the
+    edge set (star rounds) are stable, the labels need not be component
+    minima: a ``RuntimeWarning`` says so.
     """
     spark = graph.edges.sparkSession
     npart = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    # decide the local-tail branch BEFORE building the distributed tables:
-    # small graphs shouldn't pay a materialization the local path never reads
-    if runs_local(graph, local_max_edges, checkpointer):
-        return _local_components(graph)
+    # decide the placement BEFORE building the distributed tables: the
+    # driver placements shouldn't pay a materialization they never read
+    placed = placement(graph, local_max_edges, checkpointer)
+    if placed is not None:
+        import pyarrow as pa
+
+        ids, _, local = placed
+        label, done, rounds = (
+            _local_components(graph, ids, max_iter) if local
+            else _driver_components(graph, ids, max_iter, npart)
+        )
+        if not done:
+            _warn_unstable(rounds, max_iter)
+        return spark.createDataFrame(pa.table({"id": ids, "component": ids[label]}))
     all_vertices = graph.vertices.select("id").localCheckpoint(eager=True)
 
     # fixpoint test: the alternating stars converge exactly when the edge
@@ -147,12 +224,7 @@ def connected_components(
         max_iter, checkpointer,
     )
     if not (metric or {}).get("done"):
-        warnings.warn(
-            f"connected_components: edge set not stable after {rounds} star rounds "
-            f"(max_iter={max_iter}); labels may not be component minima",
-            RuntimeWarning,
-            stacklevel=2,
-        )
+        _warn_unstable(rounds, max_iter)
     parents = (
         edges.filter(F.col("dst") < F.col("src"))
         .groupBy(F.col("src").alias("id"))

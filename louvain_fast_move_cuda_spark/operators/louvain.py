@@ -77,6 +77,7 @@ from pyspark.sql import functions as F
 
 from ..plans.debug import dump_plan
 from ..plans.observe import observed
+from ..plans.superstep import VERTEX_STATE_MAX
 from .louvain_arrow import arrow_round_moves, driver_round_moves, relabel_edges
 from .louvain_local import local_louvain, q_from_sums
 from ..sources.edges import GraphTables, assign_contiguous_ids
@@ -439,7 +440,7 @@ def louvain(
     threshold: float = MODULARITY_CONVERGED_THRESHOLD,
     early_stop_limit: int = EARLY_STOP_LIMIT,
     checkpointer=None,
-    broadcast_moves_max: int = 5_000_000,
+    broadcast_moves_max: int = VERTEX_STATE_MAX,
     local_finish_max_edges: int = 5_000_000,
     max_levels: int | None = None,
     refine: bool = False,
@@ -784,12 +785,14 @@ def louvain(
         # the coarse level's vertex table stays lazy: only a checkpoint save
         # or the local tail ever reads it
         verts = coarse.groupBy(F.col("src").alias("id")).agg(F.sum("w").alias("k"))
-        # Q of the fresh level in ONE map-only job (its edge count is the
-        # level_ne observed above)
-        est, comm_w, q, _ = _start_state(
-            _level_edge_state(coarse, _level_width(level_ne, npart)), False, m,
-            f"louvain L{level} init",
+        # no scan of the fresh level: its edge count is the level_ne
+        # observed above, and Q carries over (coarsening conserves it; every
+        # sum is integer-valued). Its first round materializes both lazy
+        # checkpoints
+        est = _level_edge_state(coarse, _level_width(level_ne, npart)).localCheckpoint(
+            eager=False
         )
+        comm_w = _comm_weights(est).localCheckpoint(eager=False)
         if checkpointer is not None:
             checkpointer.save(
                 level, -1, est, verts, labels, q, q, {"level": level, "round": -1, "q": q}

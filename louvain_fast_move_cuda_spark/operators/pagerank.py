@@ -1,11 +1,20 @@
 """Weighted PageRank over the directed-symmetric edge table.
 
 Not in the CUDA reference (SURVEY.md §2.11 — mandated by the north rule);
-semantics from the published algorithm. One superstep is a single
-shuffle: contributions = edges ⋈ ranks on src (rank/out-weight scaled by
-edge weight), then groupBy(dst).sum. The loop (lazy per-superstep
-checkpoint, one L1 action, resume, stop test) is
-plans/superstep.py::supersteps; convergence on L1 delta.
+semantics from the published algorithm. rank' = (1−α)/n + α·Σ_in
+share·rank with the static per-edge share = w/k_src, and convergence on
+the L1 change. The update rule is one NumPy function,
+:func:`_rank_rounds`, in both driver placements
+(plans/superstep.py): the local tail sums the in-shares over the edges
+in NumPy; while the vertex count fits ``VERTEX_STATE_MAX`` the ranks stay
+on the driver and each superstep is one broadcast of them joined onto the
+static ``(src, dst, share)`` table (``dst``-partitioned, so the per-``dst``
+sum needs no exchange) plus that sum, read back with ``toArrow()``.
+
+Above the bound and under a checkpointer, one superstep is a single
+shuffle: contributions = edges ⋈ ranks on src, then groupBy(dst).sum,
+with a lazy per-superstep checkpoint and one L1 action
+(plans/superstep.py::supersteps).
 
 The symmetric graph has no dangling vertices (every vertex has out-edges),
 so no dangling redistribution term is needed — asserted by construction in
@@ -14,51 +23,89 @@ sources.edges.build_graph.
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..plans.superstep import local_arrays, runs_local, supersteps
+from ..plans.superstep import (
+    broadcast_gather,
+    edge_arrays,
+    placement,
+    supersteps,
+    vertex_state_scope,
+)
 from ..sources.edges import GraphTables
 
 
-def _local_pagerank(graph: GraphTables, alpha: float, max_iter: int, tol: float) -> DataFrame:
-    """Driver-local tail: same supersteps vectorized in NumPy.
-
-    Same iteration count and L1 stopping rule as the distributed loop;
-    ranks agree to summation-order noise (~1e-15, far inside the 1e-6
-    correctness target). Like the Louvain/CC tails: once the edge list
-    fits one node, per-iteration scheduler latency buys nothing.
-    """
-    import numpy as np
-    import pandas as pd
-
-    ids, src, dst, w, k = local_arrays(graph, with_k=True)
-    share = w / k[src]
-    n = len(ids)
+def _rank_rounds(n: int, gather, alpha: float, max_iter: int, tol: float) -> np.ndarray:
+    """PageRank's supersteps on driver arrays: ``gather(it, rank)`` gives
+    every vertex's in-sum Σ share·rank (0.0 with no in-edge); the new rank
+    is ``base + α·insum``, and the run stops once the L1 change, summed in
+    NumPy, is under ``tol``."""
     rank = np.full(n, 1.0 / n)
     base = (1.0 - alpha) / n
-    for _ in range(max_iter):
-        insum = np.zeros(n)
-        np.add.at(insum, dst, share * rank[src])
-        new_rank = base + alpha * insum
+    for it in range(max_iter):
+        new_rank = base + alpha * gather(it, rank)
         l1 = float(np.abs(new_rank - rank).sum())
         rank = new_rank
         if l1 < tol:
             break
-    out = pd.DataFrame({"id": ids, "rank": rank})
-    return graph.edges.sparkSession.createDataFrame(out)
+    return rank
 
 
-def _shares(graph: GraphTables, npart: int) -> DataFrame:
-    """share_(src->dst) = w / k_src: static per edge, so built once,
-    ``src``-partitioned for the superstep's join."""
+def _local_pagerank(graph: GraphTables, ids, k, alpha: float, max_iter: int, tol: float):
+    """Driver-local tail: the in-sums gathered over the edges in NumPy.
+
+    Same iteration count and L1 stopping rule as the Spark placements;
+    ranks agree to summation-order noise (~1e-15, far inside the 1e-6
+    correctness target).
+    """
+    src, dst, w = edge_arrays(graph, ids)
+    share = w / k[src]
+    n = len(ids)
+
+    def gather(_it, rank):
+        insum = np.zeros(n)
+        np.add.at(insum, dst, share * rank[src])
+        return insum
+
+    return _rank_rounds(n, gather, alpha, max_iter, tol)
+
+
+def _driver_pagerank(graph: GraphTables, ids, alpha: float, max_iter: int, tol: float, npart: int):
+    """Ranks on the driver: each superstep's in-sums come from one Spark
+    aggregate, Σ share·rank by ``dst`` over the static share table."""
+    spark = graph.edges.sparkSession
+    n = len(ids)
+    with vertex_state_scope(spark):
+        shares = _shares(graph, npart, "dst", eager=False)
+        spark_gather = broadcast_gather(
+            spark, "pagerank", ids, "src",
+            lambda ranks: shares.join(ranks, "src")
+            .groupBy("dst")
+            .agg(F.sum(F.col("share") * F.col("rank")).alias("insum")),
+        )
+
+        def gather(it, rank):
+            idx, t = spark_gather(it, rank=rank)
+            insum = np.zeros(n)
+            insum[idx] = t.column("insum").to_numpy()
+            return insum
+
+        return _rank_rounds(n, gather, alpha, max_iter, tol)
+
+
+def _shares(graph: GraphTables, npart: int, by: str = "src", eager: bool = True) -> DataFrame:
+    """share_(src->dst) = w / k_src: static per edge, so built once and
+    checkpointed, partitioned on ``by`` (the superstep's join or
+    aggregate key)."""
     return (
         graph.edges.join(
             graph.vertices.select(F.col("id").alias("src"), F.col("k").alias("k_src")), "src"
         )
         .select("src", "dst", (F.col("weight") / F.col("k_src")).alias("share"))
-        .repartition(npart, "src")
-        .localCheckpoint(eager=True)
+        .repartition(npart, by)
+        .localCheckpoint(eager=eager)
     )
 
 
@@ -174,17 +221,28 @@ def pagerank(
     """Returns (id: long, rank: double); Σ rank = 1.
 
     ``local_max_edges``: below this directed-edge count the iteration
-    runs in the driver (ranks equal to ~1e-15); 0 forces distributed.
+    runs in the driver (ranks equal to ~1e-15); 0 = never. Otherwise,
+    while the vertex count fits ``VERTEX_STATE_MAX``, the ranks stay on the
+    driver and each superstep is one Spark aggregate; above it they are a
+    DataFrame.
 
     ``checkpointer``: optional plans.checkpoint.VertexIterationCheckpointer
     — every superstep durably saves the rank table + L1 metric, and a
     fresh call resumes from the latest committed iteration (north rule:
-    resumable mid-iteration). Forces the distributed path.
+    resumable mid-iteration). Forces the DataFrame loop.
     """
     spark = graph.edges.sparkSession
     npart = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    if runs_local(graph, local_max_edges, checkpointer):
-        return _local_pagerank(graph, alpha, max_iter, tol)
+    placed = placement(graph, local_max_edges, checkpointer, with_k=True)
+    if placed is not None:
+        import pyarrow as pa
+
+        ids, k, local = placed
+        rank = (
+            _local_pagerank(graph, ids, k, alpha, max_iter, tol) if local
+            else _driver_pagerank(graph, ids, alpha, max_iter, tol, npart)
+        )
+        return spark.createDataFrame(pa.table({"id": ids, "rank": rank}))
     n = graph.vertices.count()
     shares = _shares(graph, npart)
     base = (1.0 - alpha) / n

@@ -60,7 +60,7 @@ def refine_partition(
         edges=intra,
         vertices=labels.select(F.col(id_col).alias("id")),
         m=0.0,  # unused by connected_components
-        n_nodes=0,
+        n_nodes=graph.n_nodes,  # bounds the vertex ids of the labels
     )
     comp = connected_components(
         sub, max_iter=max_iter, local_max_edges=local_max_edges

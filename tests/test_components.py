@@ -1,6 +1,8 @@
-"""Distributed connected components: the join-free star round against a
-pure-Python Kiveris large-star / small-star, and degenerate inputs
-(self-loops only, isolated vertices only)."""
+"""Connected components, PageRank and LPA in their three placements: the
+join-free star round against a pure-Python Kiveris large-star /
+small-star, the driver placements against each other and against the
+checkpointed DataFrame loop, and degenerate inputs (self-loops only,
+isolated vertices only)."""
 
 import json
 import os
@@ -9,13 +11,11 @@ from collections import defaultdict
 
 import pytest
 
-from louvain_fast_move_cuda_spark.operators.components import (
-    _local_components,
-    _star_round,
-    connected_components,
-)
+from louvain_fast_move_cuda_spark.operators.components import _star_round, connected_components
+from louvain_fast_move_cuda_spark.operators.labelprop import label_propagation
+from louvain_fast_move_cuda_spark.operators.pagerank import pagerank
 from louvain_fast_move_cuda_spark.plans.checkpoint import VertexIterationCheckpointer
-from louvain_fast_move_cuda_spark.sources.edges import GraphTables
+from louvain_fast_move_cuda_spark.sources.edges import GraphTables, build_graph
 
 from oracle import powerlaw_graph
 
@@ -79,28 +79,63 @@ def _saved_rounds(spark, root):
     return out
 
 
+def _placements(run, ckpt):
+    """``{placement: {id: value}}`` of one vertex program: the NumPy tail,
+    vertex state on the driver, and the checkpointed DataFrame loop."""
+    rows = {
+        "local": run(local_max_edges=1 << 40),
+        "driver": run(local_max_edges=0),
+        "dataframe": run(checkpointer=ckpt),
+    }
+    return {k: {r[0]: r[1] for r in df.collect()} for k, df in rows.items()}
+
+
 def test_star_round_matches_python_kiveris(spark, tmp_path):
-    """Every distributed round reproduces the pure-Python round's edge set,
-    the round counts agree, and the labels equal `_local_components`."""
+    """Every checkpointed CC round reproduces the pure-Python round's edge
+    set and the round counts agree. CC and LPA labels are bit-identical in
+    all three placements, PageRank ranks agree within 1e-12."""
     sym = lambda es: es + [(b, a) for a, b in es]  # noqa: E731
+    pl = powerlaw_graph(n=120, m_attach=2, seed=3)
     cases = {
-        "powerlaw": sym(powerlaw_graph(n=120, m_attach=2, seed=3)),
+        "powerlaw": sym(pl),
         "path64": sym(PATH64),
         # every edge three times, plus self-loops the round input drops
         "duplicates": sym(PATH64[:20]) * 3 + [(5, 5), (30, 30)],
         "isolated": sym([(1, 2), (2, 3), (10, 11)]),
     }
-    for name, pairs in cases.items():
-        g = _graph(spark, pairs, extra_vertices=[40, 41] if name == "isolated" else ())
+    graphs = {
+        name: _graph(spark, pairs, extra_vertices=[40, 41] if name == "isolated" else ())
+        for name, pairs in cases.items()
+    }
+    # ids that are not dense (x7), kept by build_graph(relabel=False)
+    sparse = [(7 * a, 7 * b) for a, b in pl]
+    cases["sparse_ids"] = sym(sparse)
+    graphs["sparse_ids"] = build_graph(
+        spark.createDataFrame(sparse, "a long, b long"), relabel=False
+    )
+    for name, g in graphs.items():
+        pairs = cases[name]
         want = _py_rounds({(a, b) for a, b in pairs if a != b})
 
-        ck = VertexIterationCheckpointer(str(tmp_path / name), algo="cc")
+        def ck(algo):
+            return VertexIterationCheckpointer(str(tmp_path / name / algo), algo=algo)
+
         with warnings.catch_warnings():
             warnings.simplefilter("error", RuntimeWarning)
-            cc = connected_components(g, checkpointer=ck)
-        dist = {r.id: r.component for r in cc.collect()}
-        assert _saved_rounds(spark, str(tmp_path / name)) == want, name
-        assert dist == {r.id: r.component for r in _local_components(g).collect()}, name
+            cc = _placements(lambda **kw: connected_components(g, **kw), ck("cc"))
+        assert _saved_rounds(spark, str(tmp_path / name / "cc")) == want, name
+        assert cc["local"] == cc["driver"] == cc["dataframe"], name
+
+        lpa = _placements(lambda **kw: label_propagation(g, max_iter=3, **kw), ck("lpa"))
+        assert lpa["local"] == lpa["driver"] == lpa["dataframe"], name
+
+        pr = _placements(
+            lambda **kw: pagerank(g, max_iter=4, tol=0.0, **kw), ck("pagerank")
+        )
+        assert pr["local"].keys() == pr["driver"].keys() == pr["dataframe"].keys(), name
+        for other in ("local", "dataframe"):
+            diff = max(abs(pr["driver"][v] - pr[other][v]) for v in pr["driver"])
+            assert diff <= 1e-12, (name, other, diff)
 
         # the round on raw rows (duplicates, self-loops filtered) directly
         raw = g.edges.select("src", "dst").filter("src != dst")

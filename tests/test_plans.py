@@ -140,18 +140,26 @@ def test_skew_trigger_scales_with_partition_load():
     assert not skewed_degree_trigger(10.0, 0.0, 32)  # empty graph: no-op
 
 
-def test_lpa_hub_graph_salted_identical_to_unsalted(spark):
+def test_lpa_hub_graph_salted_identical_to_unsalted(spark, tmp_path):
     """A 2*10^4-degree hub star + ring: the salted vote aggregation must
-    produce bit-identical labels to the single-stage plan (distributed)."""
+    produce bit-identical labels to the single-stage plan (the DataFrame
+    loop a checkpointer selects) and to the driver placement."""
     from louvain_fast_move_cuda_spark.operators.labelprop import label_propagation
+    from louvain_fast_move_cuda_spark.plans.checkpoint import VertexIterationCheckpointer
     from louvain_fast_move_cuda_spark.sources.edges import build_graph
 
     n = 20_000
     und = [(0, i) for i in range(1, n)] + [(i, i + 1) for i in range(1, n - 1)]
     g = build_graph(spark.createDataFrame(und, "a long, b long"), relabel=False)
-    plain = label_propagation(g, max_iter=2, local_max_edges=0, skew_salt_buckets=0)
-    salted = label_propagation(g, max_iter=2, local_max_edges=0, skew_salt_buckets=8)
-    assert sorted(map(tuple, plain.collect())) == sorted(map(tuple, salted.collect()))
+    runs = [
+        label_propagation(
+            g, max_iter=2, skew_salt_buckets=b,
+            checkpointer=VertexIterationCheckpointer(str(tmp_path / f"b{b}"), algo="lpa"),
+        )
+        for b in (0, 8)
+    ] + [label_propagation(g, max_iter=2, local_max_edges=0)]
+    plain, salted, driver = (sorted(map(tuple, r.collect())) for r in runs)
+    assert plain == salted == driver
 
 
 def test_iceberg_seam_detection(spark):

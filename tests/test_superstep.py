@@ -1,6 +1,8 @@
-"""plans/superstep.py: the one superstep loop PageRank, LPA and CC share."""
+"""plans/superstep.py: the superstep loops PageRank, LPA and CC share, and
+plans/conf.py: the conf scope their driver placement runs in."""
 
 import os
+import warnings
 
 from pyspark.sql import functions as F
 
@@ -87,3 +89,92 @@ def test_vertex_programs_dump_their_superstep_plans(spark, tmp_path, monkeypatch
     for name in ("superstep_pagerank", "superstep_lpa", "superstep_cc"):
         text = (out / f"{name}.txt").read_text()
         assert "Physical Plan" in text, name
+
+
+def test_sql_conf_restores_settings(spark):
+    """The conf scope puts back a set key after a normal return and after
+    an exception, and leaves a key that was unset unset."""
+    import pytest
+
+    from louvain_fast_move_cuda_spark.plans.conf import sql_conf
+
+    aqe = "spark.sql.adaptive.enabled"
+    unset = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    before = spark.conf.get(aqe)
+    assert spark.conf.get(unset, None) is None
+    with sql_conf(spark, {aqe: "false", unset: "1m"}):
+        assert spark.conf.get(aqe) == "false"
+        assert spark.conf.get(unset) == "1m"
+    assert spark.conf.get(aqe) == before
+    assert spark.conf.get(unset, None) is None
+    with pytest.raises(RuntimeError):
+        with sql_conf(spark, {aqe: "false", unset: "1m"}):
+            raise RuntimeError("superstep failed")
+    assert spark.conf.get(aqe) == before
+    assert spark.conf.get(unset, None) is None
+
+
+def _powerlaw(spark):
+    from louvain_fast_move_cuda_spark.sources.edges import build_graph
+    from oracle import powerlaw_graph
+
+    return build_graph(
+        spark.createDataFrame(powerlaw_graph(n=200, m_attach=2, seed=4), "a long, b long"),
+        relabel=False,
+    )
+
+
+def test_driver_placement_runs_two_jobs_per_superstep(spark):
+    """With the vertex state on the driver, each superstep of PageRank, LPA
+    and CC is at most two Spark jobs (the state's broadcast and the
+    aggregate), counted through a job group around calls that differ only
+    in how many supersteps they run; the whole call adds one job (the
+    vertex gather)."""
+    from louvain_fast_move_cuda_spark.operators.components import connected_components
+    from louvain_fast_move_cuda_spark.operators.labelprop import label_propagation
+    from louvain_fast_move_cuda_spark.operators.pagerank import pagerank
+
+    g = _powerlaw(spark)
+    sc = spark.sparkContext
+
+    def jobs(group, run):
+        sc.setJobGroup(group, group)
+        try:
+            run().collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    programs = {
+        "pagerank": lambda it: pagerank(g, max_iter=it, tol=0.0, local_max_edges=0),
+        # synchronous LPA keeps changing labels on this graph
+        "lpa": lambda it: label_propagation(g, max_iter=it, local_max_edges=0),
+        "cc": lambda it: connected_components(g, max_iter=it, local_max_edges=0),
+    }
+    for name, run in programs.items():
+        with warnings.catch_warnings():
+            warnings.simplefilter("ignore", RuntimeWarning)  # CC cut at 1 round
+            one, two = jobs(f"{name}-1", lambda: run(1)), jobs(f"{name}-2", lambda: run(2))
+        assert one <= 1 + 2, (name, one)
+        assert two - one <= 2, (name, one, two)
+
+
+def test_driver_placement_repeats_bit_identically_and_caches_nothing(spark):
+    """Two runs of each program in one session give bit-identical output,
+    and none of them leaves an entry in the CacheManager."""
+    from louvain_fast_move_cuda_spark.operators.components import connected_components
+    from louvain_fast_move_cuda_spark.operators.labelprop import label_propagation
+    from louvain_fast_move_cuda_spark.operators.pagerank import pagerank
+
+    g = _powerlaw(spark)
+    spark.catalog.clearCache()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    for run in (
+        lambda: pagerank(g, max_iter=5, tol=0.0, local_max_edges=0),
+        lambda: label_propagation(g, max_iter=3, local_max_edges=0),
+        lambda: connected_components(g, local_max_edges=0),
+    ):
+        first, second = (sorted(map(tuple, run().collect())) for _ in range(2))
+        assert first == second
+    assert cache.isEmpty()
