@@ -152,9 +152,11 @@ def _driver_components(graph: GraphTables, ids, max_iter: int, npart: int):
         return _hook_rounds(len(ids), gather, max_iter)
 
 
-def _warn_unstable(rounds: int, max_iter: int) -> None:
+def _warn_unstable(rounds: int, max_iter: int, kind: str) -> None:
+    """Warn that ``max_iter`` rounds of ``kind`` ("min-hooking" or
+    "star") ran out before the labels were stable."""
     warnings.warn(
-        f"connected_components: not stable after {rounds} star rounds "
+        f"connected_components: not stable after {rounds} {kind} rounds "
         f"(max_iter={max_iter}); labels may not be component minima",
         RuntimeWarning,
         stacklevel=3,
@@ -199,7 +201,7 @@ def connected_components(
             else _driver_components(graph, ids, max_iter, npart)
         )
         if not done:
-            _warn_unstable(rounds, max_iter)
+            _warn_unstable(rounds, max_iter, "min-hooking")
         return spark.createDataFrame(pa.table({"id": ids, "component": ids[label]}))
     all_vertices = graph.vertices.select("id").localCheckpoint(eager=True)
 
@@ -224,7 +226,7 @@ def connected_components(
         max_iter, checkpointer,
     )
     if not (metric or {}).get("done"):
-        _warn_unstable(rounds, max_iter)
+        _warn_unstable(rounds, max_iter, "star")
     parents = (
         edges.filter(F.col("dst") < F.col("src"))
         .groupBy(F.col("src").alias("id"))

@@ -21,26 +21,37 @@ Spark-native re-expression of the CUDA reference's two phases
 
 Scale design (this is where we diverge from a port):
 
-* one move kernel, two placements: every round is scored by
-  ``louvain_local._round_moves``. Distributed rounds run it per ``src``
-  hash partition in one ``mapInArrow`` pass (operators/louvain_arrow.py,
-  the reference's CSR-chunked HASH mode); once a coarsened level fits in
-  one node, the driver-local tail (operators/louvain_local.py) runs it on
-  the whole graph — the reference's own whole-graph-in-one-device model.
-  Placement is decided at each level start from the level's vertex
-  degrees, gathered once, before any distributed state is built;
-* vertex state on the driver while it is broadcast-sized: while a level's
-  vertex ids lie in ``[0, broadcast_moves_max)`` (and no checkpointer is
-  set), its community, Σ_tot and moved-flag vectors are NumPy arrays on
-  the driver — the reference keeps every per-vertex array resident on
-  one device (community.h) and streams only the edges. The level's
+* one move kernel: every round is scored by
+  ``louvain_local._round_moves``, per ``src`` hash partition in one
+  ``mapInArrow`` pass (operators/louvain_arrow.py, the reference's
+  CSR-chunked HASH mode) or on a whole level in this process;
+* vertex state on the driver while it is broadcast-sized: the reference
+  keeps every per-vertex array resident on one device (community.h) and
+  streams only the edges. While a level's state fits (see below), its
+  community, Σ_tot and moved-flag vectors are NumPy arrays on the
+  driver, and ONE level loop (:func:`_driver_levels`) runs it: each
+  round (Pregelix's superstep: one dataflow over the edges plus one
+  global aggregate) returns the moves and the W_in of the state it was
+  given, the driver applies the moves and recomputes Σ_tot with
+  ``bincount``, and the relabel is ``flatnonzero(Σ_tot > 0)``. Only a
+  round and a coarsen depend on where the level's edges are, and there
+  are two placements for them. On Spark (:class:`_SparkLevel`) the
   static ``(src, dst, w, k_src)`` edges are checkpointed once,
-  ``src``-partitioned, and each round is ONE Spark job (Pregelix's
-  superstep: one dataflow over the edges plus one global aggregate):
-  the state ships as one broadcast, the kernel returns the moves and
-  the partition's W_in, and the driver applies the moves and recomputes
-  Σ_tot with ``bincount``. The relabel is ``flatnonzero(Σ_tot > 0)`` on
-  the driver and the coarsen one broadcast map plus one ``groupBy``;
+  ``src``-partitioned; a round is ONE Spark job (the state ships as one
+  broadcast) and the coarsen one broadcast map plus one ``groupBy``. In
+  this process (``louvain_local.InProcessLevel``, entered through
+  :func:`local_louvain`) the same NumPy kernel runs once on the whole
+  level and the coarsen is a ``lexsort`` + ``reduceat`` merge — the
+  reference's own whole-graph-in-one-device model, for the coarsened
+  levels where a Spark round would pay fixed scheduling latency for tiny
+  data;
+* one placement decision at each level start, from the level's vertex
+  degrees gathered once before any distributed state is built (level 0
+  above the bound counts its edges first, and gathers only if they fit
+  in this process): in this
+  process when no checkpointer is set and the directed edge count fits
+  ``local_finish_max_edges``; else driver state on Spark when the vertex
+  ids lie in ``[0, broadcast_moves_max)``; else edge-carried;
 * vertex state on the edges above that bound (the 10^12-turn level 0)
   and under durable checkpoints: ``edges_state = (src, dst, w, k_src,
   cs, cd, dm)`` carries the community of both endpoints *on the edge
@@ -54,8 +65,8 @@ Scale design (this is where we diverge from a port):
   weight), a per-round ``localCheckpoint`` truncates the lineage, and
   one observed scan per round returns both modularity reductions — the
   Spark analogue of the reference overlapping its two reductions on two
-  CUDA streams, community.h:72,88. Once coarsening brings a level under
-  the bound, the driver takes over;
+  CUDA streams, community.h:72,88. Each coarse level goes back to the
+  placement decision;
 * optional durable parquet checkpoints per superstep with per-partition
   metrics enable mid-iteration resume (plans/checkpoint.py).
 
@@ -70,6 +81,7 @@ from __future__ import annotations
 
 import time
 from dataclasses import dataclass, field
+from functools import cached_property
 
 import numpy as np
 from pyspark.sql import DataFrame, Window
@@ -79,7 +91,7 @@ from ..plans.debug import dump_plan
 from ..plans.observe import observed
 from ..plans.superstep import VERTEX_STATE_MAX
 from .louvain_arrow import arrow_round_moves, driver_round_moves, relabel_edges
-from .louvain_local import local_louvain, q_from_sums
+from .louvain_local import InProcessLevel, q_from_sums
 from ..sources.edges import GraphTables, assign_contiguous_ids
 
 MODULARITY_CONVERGED_THRESHOLD = 0.001  # constants.h:15
@@ -172,62 +184,53 @@ def _vertex_degrees(edges: DataFrame):
     return ids[order], t.column("k").to_numpy()[order], int(t.column("deg").to_numpy().sum())
 
 
-def _round_record(level, rnd, n_moves, q, dq, sec) -> dict:
+def _round_record(level, rnd, n_moves, q, dq, sec, engine="arrow") -> dict:
     return {
         "level": level, "round": rnd, "n_moves": n_moves, "q": q,
-        "dq": dq, "sec": sec, "engine": "arrow",
+        "dq": dq, "sec": sec, "engine": engine,
     }
 
 
-def _driver_rounds(static, k, m, level, threshold, early_stop_limit, metrics):
+def _driver_rounds(place, k, m, level, threshold, early_stop_limit, metrics):
     """One level's optimization phase with its vertex state on the driver.
 
-    ``static``: the level's static edges (:func:`_static_edges`); ``k``:
-    weighted degree by vertex id. ``comm``, Σ_tot and the moved flags are
-    NumPy arrays indexed by vertex id. Each round is ONE Spark job: the
-    state goes out as one broadcast, the kernel returns the moves and the
-    W_in of the state it was given, and the driver applies the moves and
-    recomputes Σ_tot with ``bincount``. Q of the state before round r
-    therefore arrives with round r's job: it completes round r−1's record
-    and stop test, and when that test ends the level round r's moves are
-    dropped. Exact: every sum is integer-valued float64.
+    ``place``: where the level's edges are (:class:`_SparkLevel` or
+    ``louvain_local.InProcessLevel``); ``k``: weighted degree by vertex
+    id. ``comm``, Σ_tot and the moved flags are NumPy arrays indexed by
+    vertex id. Each round hands the state to ``place.round``, which
+    returns the moves and the W_in of the state it was given; the driver
+    applies the moves and recomputes Σ_tot with ``bincount``. Q of the
+    state before round r therefore arrives with round r: it completes
+    round r−1's record and stop test, and when that test ends the level
+    round r's moves are dropped. Exact: every sum is integer-valued
+    float64.
 
     Appends one record per round to ``metrics`` (its ``sec`` runs from the
-    round's job start to the next job's start); returns ``(comm, ctot,
+    round's start to the next round's start); returns ``(comm, ctot,
     q_start, q)``: the final state and Q at the level's start and end.
     """
-    sc = static.sparkSession.sparkContext
     n = len(k)
     comm = np.arange(n, dtype=np.int64)
     ctot = k.copy()
     moved = np.ones(n, dtype=bool)  # round 0 scores every vertex
-    prev = None  # (round, n_moves, job start, Q before) of the round waiting for its Q
+    prev = None  # (round, n_moves, start, Q before) of the round waiting for its Q
     rnd = 0
     while True:
         t0 = time.time()
-        sc.setJobDescription(f"louvain L{level} R{rnd}")
-        state = sc.broadcast((comm, ctot, moved))
-        try:
-            moves = driver_round_moves(static, state, m, rnd)
-            if rnd <= 1:
-                dump_plan(moves, f"superstep_louvain_round{rnd}")
-            t = moves.toArrow()
-        finally:
-            state.destroy()
-        node = t.column("node").to_numpy()
-        mv = node >= 0
-        q = q_from_sums(t.column("win").to_numpy()[~mv].sum(), (ctot * ctot).sum(), m)
+        nodes, newc, win = place.round(comm, ctot, moved, m, level, rnd)
+        q = q_from_sums(win, (ctot * ctot).sum(), m)
         if prev is None:
             q_start = q
         else:
             p_rnd, p_moves, p_t0, p_q = prev
-            metrics.append(_round_record(level, p_rnd, p_moves, q, q - p_q, t0 - p_t0))
+            metrics.append(
+                _round_record(level, p_rnd, p_moves, q, q - p_q, t0 - p_t0, place.engine)
+            )
             if q - p_q <= threshold or rnd > early_stop_limit:
                 break
-        nodes, newc = node[mv], t.column("newc").to_numpy()[mv]
         if not len(nodes):
-            # nothing moved: Q is known without another job
-            metrics.append(_round_record(level, rnd, 0, q, 0.0, time.time() - t0))
+            # nothing moved: Q is known without another round
+            metrics.append(_round_record(level, rnd, 0, q, 0.0, time.time() - t0, place.engine))
             break
         prev = (rnd, len(nodes), t0, q)
         rnd += 1
@@ -238,21 +241,123 @@ def _driver_rounds(static, k, m, level, threshold, early_stop_limit, metrics):
     return comm, ctot, q_start, q
 
 
-def _coarsen(static: DataFrame, newid: np.ndarray, name: str):
-    """(coarse, ne): the level's edges with both endpoints mapped through
-    ``newid`` (vertex id -> next-level id, shipped as one broadcast) and
-    parallel edges merged, checkpointed and materialized by one observed
-    count — the next level's directed edge count."""
-    sc = static.sparkSession.sparkContext
-    bc = sc.broadcast(newid)
-    try:
-        coarse = relabel_edges(static, bc).groupBy("src", "dst").agg(F.sum("w").alias("w"))
-        dump_plan(coarse, "louvain_coarsen")
-        coarse = coarse.localCheckpoint(eager=False)
-        ne = int(observed(coarse, name, F.count(F.lit(1)).alias("ne"))["ne"])
-    finally:
-        bc.destroy()
-    return coarse, ne
+class _SparkLevel:
+    """A level's ``(src, dst, w)`` edges on Spark, ``ne`` of them: the
+    Spark placement of the level loop."""
+
+    engine = "arrow"
+
+    def __init__(self, edges: DataFrame, ne: int, npart: int):
+        self.edges, self.ne, self.npart = edges, ne, npart
+
+    @cached_property
+    def static(self) -> DataFrame:
+        """The static ``(src, dst, w, k_src)`` edges (:func:`_static_edges`),
+        checkpointed lazily; round 0's job materializes them. Built on
+        first use: under AQE even a lazy checkpoint of a shuffle runs
+        its map stage, which a level that never runs must not pay."""
+        return _static_edges(self.edges, _level_width(self.ne, self.npart)).localCheckpoint(
+            eager=False
+        )
+
+    def round(self, comm, ctot, moved, m, level, rnd):
+        """One Spark job: the state as one broadcast, one mapInArrow over
+        the static edges, read back with ``toArrow()``."""
+        sc = self.static.sparkSession.sparkContext
+        sc.setJobDescription(f"louvain L{level} R{rnd}")
+        state = sc.broadcast((comm, ctot, moved))
+        try:
+            moves = driver_round_moves(self.static, state, m, rnd)
+            if rnd <= 1:
+                dump_plan(moves, f"superstep_louvain_round{rnd}")
+            t = moves.toArrow()
+        finally:
+            state.destroy()
+        node = t.column("node").to_numpy()
+        mv = node >= 0
+        return node[mv], t.column("newc").to_numpy()[mv], t.column("win").to_numpy()[~mv].sum()
+
+    def coarsen(self, newid, level):
+        """The next level (A8): both endpoints mapped through ``newid``
+        (vertex id -> next-level id, shipped as one broadcast) and
+        parallel edges merged, checkpointed and materialized by one
+        observed count — the next level's directed edge count."""
+        sc = self.static.sparkSession.sparkContext
+        sc.setJobDescription(f"louvain agg L{level}")
+        bc = sc.broadcast(newid)
+        try:
+            coarse = relabel_edges(self.static, bc).groupBy("src", "dst").agg(F.sum("w").alias("w"))
+            dump_plan(coarse, "louvain_coarsen")
+            coarse = coarse.localCheckpoint(eager=False)
+            ne = observed(coarse, f"louvain L{level} coarsen", F.count(F.lit(1)).alias("ne"))
+        finally:
+            bc.destroy()
+        return _SparkLevel(coarse, int(ne["ne"]), self.npart)
+
+
+def _driver_levels(
+    place, ids, k, labels, level, m, threshold, early_stop_limit, max_levels, local_max, metrics
+):
+    """The level loop for levels whose vertex state is on the driver,
+    from a clean level start: ``place`` holds the level's edges, ``ids``
+    its ascending vertex ids and ``k`` their weighted degrees; every id
+    indexes the driver arrays. Each level runs :func:`_driver_rounds`,
+    then the aggregation phase: dense relabel of the surviving
+    communities in id order (phaseAggregation.cuh:19-52), flatten
+    (:func:`_flatten`) and ``place.coarsen``. A coarse vertex's degree is
+    its community's Σ_tot, and Q carries over unchanged.
+
+    Returns ``(labels, q, n_communities, level, nxt)``. ``nxt`` is None
+    when the run is over (converged, or ``max_levels`` reached), else
+    ``(edges, ids, k, ne)`` of the next level, handed back to the
+    caller's placement decision because its directed edge count ``ne``
+    fits ``local_max`` (0: never).
+    """
+    while True:
+        n = int(ids[-1]) + 1
+        kv = np.zeros(n)
+        kv[ids] = k
+        comm, ctot, q_start, q = _driver_rounds(
+            place, kv, m, level, threshold, early_stop_limit, metrics
+        )
+        surviving = np.flatnonzero(ctot > 0)
+        n_best = len(surviving)
+        newid = np.full(n, -1, dtype=np.int64)
+        newid[surviving] = np.arange(n_best, dtype=np.int64)
+        newid = newid[comm]
+        labels = _flatten(labels, ids, newid[ids])
+        if not (q - q_start) > threshold:  # modularityAlgorithms.h:52
+            return labels, q, n_best, level, None
+        place = place.coarsen(newid, level)
+        ids, k = np.arange(n_best, dtype=np.int64), ctot[surviving]
+        level += 1
+        if max_levels is not None and level >= max_levels:
+            return labels, q, n_best, level, None
+        if place.ne <= local_max:
+            return labels, q, n_best, level, (place.edges, ids, k, place.ne)
+
+
+def local_louvain(
+    src, dst, w, ids, k, labels, level, m, threshold, early_stop_limit, max_levels, metrics
+):
+    """The in-process placement's entry into the level loop
+    (:func:`_driver_levels`): every remaining level runs in this process
+    (``louvain_local.InProcessLevel``), from a clean level start. ``src,
+    dst, w``: the level's gathered edges; ``ids``/``k``: its ascending
+    vertex ids and their weighted degrees. Returns ``(labels, q,
+    n_communities, level)`` at the end of the run."""
+    n = len(ids)
+    if ids[0] != 0 or ids[-1] != n - 1:
+        # index the vertices 0..n-1: the driver arrays are sized by the
+        # vertex count, whatever the id range
+        src, dst = np.searchsorted(ids, src), np.searchsorted(ids, dst)
+        labels = _flatten(labels, ids, np.arange(n, dtype=np.int64))
+        ids = np.arange(n, dtype=np.int64)
+    labels, q, n_best, level, _ = _driver_levels(
+        InProcessLevel(src, dst, w), ids, k, labels, level, m, threshold, early_stop_limit,
+        max_levels, 0, metrics,
+    )
+    return labels, q, n_best, level
 
 
 def _flatten(labels, ids, new):
@@ -383,19 +488,6 @@ def _refine_result(
     )
 
 
-def _local_finish(labels, src, dst, w, ids, k, m, q, level, threshold, early_stop_limit, metrics):
-    """The remaining levels in the driver (operators/louvain_local.py),
-    from a clean level start: the level's gathered edges, vertex ids and
-    degrees, and its Q. Returns ``(labels, q, n_communities, level)`` at
-    the end: ``labels`` composed with the tail's (see :func:`_flatten`)
-    and the number of the last level."""
-    loc = local_louvain(src, dst, w, ids, k, m, q, level, threshold, early_stop_limit)
-    metrics.extend(loc.metrics)
-    # dropped (isolated) vertices carry label -1, see the kernel
-    labels = _flatten(labels, loc.ids, loc.labels)
-    return labels, loc.modularity, loc.n_communities, level + loc.levels_added
-
-
 def round0_moves(graph: GraphTables) -> DataFrame:
     """The first round :func:`louvain` runs, as a standalone,
     oracle-checkable plan: the level-0 edge state and Σ_tot table, then
@@ -448,27 +540,30 @@ def louvain(
     """Run Louvain to convergence. ``graph`` from sources.edges.build_graph.
 
     Every round is scored by the one move kernel
-    (``louvain_local._round_moves``): distributed rounds run it per
-    ``src`` partition in a single mapInArrow pass
-    (operators/louvain_arrow.py), the driver-local tail on the whole
-    coarsened graph. ``metrics`` holds one record per round, tagged
-    ``"engine": "arrow"`` or ``"local"``.
+    (``louvain_local._round_moves``): on Spark per ``src`` partition in a
+    single mapInArrow pass (operators/louvain_arrow.py), or in this process
+    on a whole level. ``metrics`` holds one record per round, tagged
+    ``"engine": "arrow"`` (Spark) or ``"local"`` (in process).
 
     ``checkpointer``: optional plans.checkpoint.SuperstepCheckpointer for
     durable per-superstep state + resume.
 
-    ``local_finish_max_edges``: once a level's directed edge count fits
-    under this bound, the remaining levels run in the driver with the
-    exact-parity NumPy kernel (operators/louvain_local.py) — the
-    reference's own whole-graph-in-one-device model, applied to the
-    coarsened tail where distributed supersteps would pay fixed
-    per-round scheduling latency for tiny data. 0 disables (always
-    distributed). Disabled automatically while durable checkpointing is
-    on, so every superstep keeps hitting the checkpointer.
+    ``local_finish_max_edges``: a level whose directed edge count fits
+    under this bound, and every level after it, runs in this process:
+    the same level loop as the driver-state levels on Spark, with each
+    round one call of the NumPy kernel on the whole level and the coarsen
+    a NumPy merge — the reference's own whole-graph-in-one-device model,
+    for the coarsened levels where a Spark round would pay fixed
+    scheduling latency for tiny data. Labels, Q and every round record
+    but its ``engine`` and ``sec`` are the same as on Spark. 0 disables.
+    Disabled while durable checkpointing is on, so every superstep keeps
+    hitting the checkpointer.
 
-    ``max_levels``: stop after this many coarsening levels (None = run
-    to convergence). Benchmarking hook — lets a scaling leg measure
-    exactly the level-0 distributed rounds.
+    ``max_levels``: stop after this many aggregation phases (None = run
+    to convergence), in every placement. Labels and Q are those of the
+    partition found so far, and ``levels`` is ``max_levels + 1`` (it
+    counts the coarse level built last). Benchmarking hook — lets a
+    scaling leg measure exactly the level-0 rounds.
 
     ``broadcast_moves_max``: the bound on vertex-sized state that may pass
     through the driver. While a level's vertex ids lie in
@@ -498,11 +593,12 @@ def louvain(
     resume_q_level_start = None
     resume_opt_done = False
     # the level about to start: its (src, dst, w) edges and a bound on its
-    # vertex-id range; ``ids``/``k``/``level_ne`` once they are known on
-    # the driver. ``est`` is set instead while levels run edge-carried.
+    # vertex-id range; ``ids``/``k`` once they are known on the driver,
+    # ``level_ne`` once counted. ``est`` is set instead while levels run
+    # edge-carried.
     edges = graph.edges.select("src", "dst", F.col("weight").alias("w"))
     n_range = graph.n_nodes
-    ids = k = est = None
+    ids = k = est = level_ne = None
     # the result labels: None while they are level 0's identity, a driver
     # array pair or a distributed table after that (see _flatten)
     labels = None
@@ -540,59 +636,42 @@ def louvain(
                 resume_round = state.round + 1
             resume_q_level_start = state.q_level_start
 
-    # the local tail is only entered at a clean level start (identity
-    # comms), which never follows a resume: it is off while durable
-    # checkpointing is on
-    use_local = local_finish_max_edges > 0 and checkpointer is None
+    # the in-process placement is only entered at a clean level start
+    # (identity comms), which never follows a resume: it is off while
+    # durable checkpointing is on. 0 never fits: every level has an edge
+    local_max = local_finish_max_edges if checkpointer is None else 0
+    if local_max > 0 and n_range > broadcast_moves_max:
+        # level 0 above the bound: count its edges first, as
+        # plans/superstep.py::placement does, so that only a level that
+        # fits in this process is gathered
+        level_ne = edges.count()
 
     n_best = None
     while True:
-        if est is None and checkpointer is None and (
-            ids is not None or n_range <= broadcast_moves_max
-        ):
-            # ================= a level with its state on the driver =======
-            if ids is None:
+        if est is None and checkpointer is None:
+            # ========= a clean level start, its edges on Spark: place it ==
+            fits = level_ne is not None and level_ne <= local_max
+            if ids is None and (fits or n_range <= broadcast_moves_max):
                 ids, k, level_ne = _vertex_degrees(edges)
-            if use_local and level_ne <= local_finish_max_edges:
+                fits = level_ne <= local_max
+            if fits:
+                # every remaining level in this process
                 t = edges.toArrow()
-                src, dst, w = (t.column(c).to_numpy() for c in ("src", "dst", "w"))
-                if level == 0:
-                    # Q of the identity partition (community.h:64)
-                    q = q_from_sums(w[src == dst].sum(), (k * k).sum(), m)
-                labels, q, n_best, level = _local_finish(
-                    labels, src, dst, w, ids, k, m, q, level, threshold, early_stop_limit,
-                    metrics,
+                labels, q, n_best, level = local_louvain(
+                    *(t.column(c).to_numpy() for c in ("src", "dst", "w")), ids, k, labels,
+                    level, m, threshold, early_stop_limit, max_levels, metrics,
                 )
                 break
-            if ids[0] >= 0 and ids[-1] < broadcast_moves_max:
-                n = int(ids[-1]) + 1
-                kv = np.zeros(n)
-                kv[ids] = k
-                # round 0's job materializes the checkpoint
-                static = _static_edges(edges, _level_width(level_ne, npart)).localCheckpoint(
-                    eager=False
+            if ids is not None and ids[0] >= 0 and ids[-1] < broadcast_moves_max:
+                # vertex state on the driver, edges on Spark, until a coarse
+                # level fits in this process
+                labels, q, n_best, level, nxt = _driver_levels(
+                    _SparkLevel(edges, level_ne, npart), ids, k, labels, level, m, threshold,
+                    early_stop_limit, max_levels, local_max, metrics,
                 )
-                comm, ctot, q_start, q = _driver_rounds(
-                    static, kv, m, level, threshold, early_stop_limit, metrics
-                )
-                # aggregation: dense relabel of the surviving communities
-                # in id order (phaseAggregation.cuh:19-52), then flatten
-                spark.sparkContext.setJobDescription(f"louvain agg L{level}")
-                surviving = np.flatnonzero(ctot > 0)
-                n_best = len(surviving)
-                newid = np.full(n, -1, dtype=np.int64)
-                newid[surviving] = np.arange(n_best, dtype=np.int64)
-                newid = newid[comm]
-                labels = _flatten(labels, ids, newid[ids])
-                if not (q - q_start) > threshold:  # modularityAlgorithms.h:52
+                if nxt is None:
                     break
-                # coarsen (A8); a coarse vertex's degree is its community's
-                # Σ_tot, and Q carries over unchanged
-                edges, level_ne = _coarsen(static, newid, f"louvain L{level} coarsen")
-                ids, k = np.arange(n_best, dtype=np.int64), ctot[surviving]
-                level += 1
-                if max_levels is not None and level >= max_levels:
-                    break
+                edges, ids, k, level_ne = nxt
                 continue
         if est is None:
             # level 0 above the bound, with ids outside [0, bound) or under
@@ -607,16 +686,6 @@ def louvain(
 
         # level_ne: this level's directed edge count, observed in the scan
         # that gave its Q (or in the coarsen step)
-        if use_local and level_ne <= local_finish_max_edges:
-            et = est.select("src", "dst", "w").toArrow()
-            vt = verts.select("id", "k").toArrow()
-            labels, q, n_best, level = _local_finish(
-                labels, *(et.column(c).to_numpy() for c in ("src", "dst", "w")),
-                vt.column("id").to_numpy(), vt.column("k").to_numpy(), m, q, level,
-                threshold, early_stop_limit, metrics,
-            )
-            break
-
         q_level_start = q if resume_q_level_start is None else resume_q_level_start
         # scale-adaptive per-level parallelism (guide §2.2/§2.4): shuffle
         # width derives from THIS level's edge count instead of a global
@@ -775,15 +844,16 @@ def louvain(
             observed(coarse, f"louvain L{level} coarsen", F.count(F.lit(1)).alias("ne"))["ne"]
         )
         level += 1
-        if checkpointer is None and n_best <= broadcast_moves_max:
-            # the coarse level fits the driver: it starts there, with the
-            # Q this level ended on (coarsening conserves it)
+        if checkpointer is None and (n_best <= broadcast_moves_max or level_ne <= local_max):
+            # the coarse level's state fits the driver: back to the
+            # placement decision, with the Q this level ended on
+            # (coarsening conserves it)
             edges, n_range, est, ids = coarse, n_best, None, None
             if max_levels is not None and level >= max_levels:
                 break
             continue
         # the coarse level's vertex table stays lazy: only a checkpoint save
-        # or the local tail ever reads it
+        # reads it
         verts = coarse.groupBy(F.col("src").alias("id")).agg(F.sum("w").alias("k"))
         # no scan of the fresh level: its edge count is the level_ne
         # observed above, and Q carries over (coarsening conserves it; every

@@ -1,33 +1,29 @@
 """The Spark placement of the Louvain move kernel (CSR-blocked Arrow pass).
 
 The reference streams CSR-aligned edge chunks through a GPU hash table
-(`/root/reference/hashmap.cuh:14-73` insert+accumulate,
-`phaseOptimizationHash.cu:38-158` per-chunk score+argmax). The Spark
-analogue: the edge state stays hash-partitioned by ``src`` across rounds,
-so every vertex's adjacency is partition-local (the CSR-block invariant —
-chunk ends never split a node, `phaseOptimizationSort.cu:54-60`), and
-ONE ``mapInArrow`` pass per round scores the whole partition. The
-per-(node, community) weight sum, ΔQ, argmax and move filter all happen
-inside the Python worker, so a round has no candidate shuffle at all.
+(hashmap.cuh:14-73 insert+accumulate, phaseOptimizationHash.cu:38-158
+per-chunk score+argmax). The Spark analogue: the edges stay
+hash-partitioned by ``src`` across rounds, so every vertex's adjacency
+is partition-local (the CSR-block invariant — chunk ends never split a
+node, phaseOptimizationSort.cu:54-60), and ONE ``mapInArrow`` pass per
+round scores the whole partition. The per-(node, community) weight sum,
+ΔQ, argmax and move filter all happen inside the Python worker, so a
+round has no candidate shuffle at all.
 
-The pass concatenates the partition's Arrow batches once and calls
-:func:`louvain_local._round_moves` — the same NumPy function the
-driver-local tail runs on the whole graph — so the move rule exists in
-exactly one place. A batch boundary may split a vertex's adjacency; the
-partition is never split, so concatenating first is all the
-partial-aggregate bookkeeping the kernel needs.
+The pass concatenates the partition's Arrow batches once and calls the
+NumPy kernel of operators/louvain_local.py on it, so the move rule
+exists in exactly one place. A batch boundary may split a vertex's
+adjacency; the partition is never split, so concatenating first is all
+the partial-aggregate bookkeeping the kernel needs. The active sources
+(the frontier) are computed partition-locally too, since all of a
+source's rows are partition-local.
 
-The active sources are ``unique(src[dm & (cs != cd)])`` — the sources
-of edges whose dst moved in the previous round (every dst at a level
-start) into a community other than src's
-(phaseOptimizationUpdate.cu:117-132) — and, since all of a source's
-rows are partition-local, that set is computed partition-locally too.
-
-The kernel has two inputs. While the vertex state is broadcast-sized
+The kernel has two inputs. While the vertex state is on the driver
 (:func:`driver_round_moves`), the pass reads a level's static edges and
-looks ``cs``, ``cd``, Σ_tot and the moved flag up in the driver's
-broadcast arrays, and also returns the partition's W_in. Above that
-bound (:func:`arrow_round_moves`) the state is carried on the edge rows:
+calls :func:`louvain_local._state_moves` with the driver's broadcast
+arrays — the very function the in-process placement calls on the whole
+level — and also returns the partition's W_in. Above that bound
+(:func:`arrow_round_moves`) the state is carried on the edge rows:
 ``cs``/``cd``/``dm`` are columns and Σ_tot is joined in.
 """
 
@@ -38,7 +34,7 @@ from collections.abc import Iterator
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .louvain_local import _round_moves
+from .louvain_local import _frontier_moves, _state_moves
 
 MOVES_SCHEMA = "node long, newc long"
 # the kernel's per-row inputs: _round_moves's arguments plus the frontier flag
@@ -56,18 +52,6 @@ def _concat(batches):
 
     batches = [b for b in batches if b.num_rows]
     return pa.Table.from_batches(batches) if batches else None
-
-
-def _frontier_moves(src, cd, w, k_src, cs, ctot_cs, ctot_cd, dm, m, rnd):
-    """_round_moves over the rows of the active sources: those with an
-    edge whose dst moved last round into a community other than the
-    source's. Rows are non-self-loop edges, every row of a source present."""
-    import numpy as np
-
-    sel = np.isin(src, np.unique(src[dm & (cs != cd)]))
-    return _round_moves(
-        src[sel], cd[sel], w[sel], k_src[sel], cs[sel], ctot_cs[sel], ctot_cd[sel], m, rnd
-    )
 
 
 def _moves_kernel(m: float, rnd: int):
@@ -93,15 +77,8 @@ def _driver_kernel(state, m: float, rnd: int):
         t = _concat(batches)
         if t is None:
             return
-        src, dst, w, k_src = (t.column(c).to_numpy() for c in STATIC_COLUMNS)
-        comm, ctot, moved = state.value
-        cs, cd = comm[src], comm[dst]
-        # W_in of the state this round was given (self-loops included)
-        win = w[cs == cd].sum()
-        e = src != dst
-        cs, cd = cs[e], cd[e]
-        nodes, newc = _frontier_moves(
-            src[e], cd, w[e], k_src[e], cs, ctot[cs], ctot[cd], moved[dst[e]], m, rnd
+        nodes, newc, win = _state_moves(
+            *(t.column(c).to_numpy() for c in STATIC_COLUMNS), *state.value, m, rnd
         )
         yield pa.RecordBatch.from_arrays(
             [

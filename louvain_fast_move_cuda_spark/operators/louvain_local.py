@@ -1,51 +1,39 @@
-"""Driver-local Louvain tail: finish coarsened levels in one process.
+"""The Louvain move kernel in NumPy, and its in-process placement.
 
 The CUDA reference holds the ENTIRE graph in one device's memory
-(`/root/reference/graph.cuh:46-52` copies the edge list host->device once
-and every phase runs on it in place). Our engine is distributed precisely
-because 10^12-turn level-0 graphs don't fit anywhere — but Louvain
-coarsening shrinks the graph geometrically, and after a level or two the
-coarse graph fits comfortably in driver memory. From that point on,
-distributed supersteps pay fixed scheduler/shuffle latency per round for
-tiny data; the scale-correct design is the reference's own: once the
-graph fits in one node, run it in one node.
+(graph.cuh:46-52 copies the edge list host->device once and every phase
+runs on it in place). Our engine is distributed because 10^12-turn
+level-0 graphs don't fit anywhere, but Louvain coarsening shrinks the
+graph geometrically, and after a level or two the coarse graph fits in
+driver memory; from there on a Spark round pays fixed scheduling latency
+for tiny data. So a level whose vertex state is on the driver has two
+placements for its edges (operators/louvain.py::_driver_levels runs the
+one level loop over either):
 
-This module is that tail, vectorized NumPy end-to-end. It also owns
-the move rule itself: :func:`_round_moves` scores one round, and the
-distributed rounds run the very same function per ``src`` partition
-inside the Spark kernel (operators/louvain_arrow.py). One kernel, two
-placements: the tail gathers the per-row inputs by vertex index, the
-Spark kernel receives them as Arrow columns.
+* on Spark, ``src``-partitioned: each round is one ``mapInArrow`` job
+  that runs :func:`_state_moves` per partition
+  (operators/louvain_arrow.py);
+* in this process (:class:`InProcessLevel`): each round calls
+  :func:`_state_moves` once on the whole level's arrays, and the coarsen
+  is one ``lexsort`` + ``reduceat`` merge.
 
-Exact parity with the distributed rounds (tested bit-for-bit):
+This module owns the move rule itself: :func:`_round_moves` scores one
+round in every placement, the edge-carried Spark rounds included, so
+the placements agree bit for bit:
 
 * every weight / degree / Σ_tot on our graphs is an integer-valued
   float64 (coarsening sums 1.0-weight edges), so partial sums are exact
   in any order — groupBy, bincount and reduceat agree bit-for-bit;
-* Q is :func:`q_from_sums` in both placements (the distributed rounds
-  feed it the sums of one observed scan), and ΔQ is computed by the
-  shared :func:`_round_moves`;
-* identical frontier propagation (phaseOptimizationUpdate.cu:117-132)
-  and 0.001 thresholds (constants.h:15) — so moves, levels and final
-  labels match the distributed engine exactly, not just approximately.
+* Q is :func:`q_from_sums` everywhere, and ΔQ is computed by the shared
+  :func:`_round_moves`;
+* one frontier rule (phaseOptimizationUpdate.cu:117-132) and the 0.001
+  thresholds (constants.h:15) — so moves, levels and final labels match
+  across placements exactly, not just approximately.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
-import time
-
 import numpy as np
-
-
-@dataclass
-class LocalLouvainResult:
-    labels: np.ndarray  # final dense community per ENTRY-level vertex index
-    ids: np.ndarray  # entry-level vertex ids, parallel to labels
-    modularity: float
-    n_communities: int
-    levels_added: int  # number of aggregation phases run
-    metrics: list[dict] = field(default_factory=list)
 
 
 def q_from_sums(w_in, sq, m: float) -> float:
@@ -73,8 +61,8 @@ def _round_moves(
 ):
     """One fast-local-move scoring round -> (nodes, new communities).
 
-    The engine's only copy of the move rule. Both placements call it: the
-    driver-local tail below with the whole graph, and the Spark kernel
+    The engine's only copy of the move rule. Every placement calls it:
+    :class:`InProcessLevel` with the whole level, and the Spark kernels
     (operators/louvain_arrow.py) with one ``src`` hash partition at a time.
 
     One row per candidate edge, in any order: ``src`` the vertex that may
@@ -138,122 +126,62 @@ def _round_moves(
     return nsrc[pick], ncd[pick]
 
 
-def local_louvain(
-    src: np.ndarray,
-    dst: np.ndarray,
-    w: np.ndarray,
-    ids: np.ndarray,
-    k: np.ndarray,
-    m: float,
-    q: float,
-    level: int,
-    threshold: float,
-    early_stop_limit: int,
-) -> LocalLouvainResult:
-    """Run Louvain to convergence on an in-memory graph.
+def _frontier_moves(src, cd, w, k_src, cs, ctot_cs, ctot_cd, dm, m, rnd):
+    """_round_moves over the rows of the active sources: those with an
+    edge whose dst moved last round into a community other than the
+    source's (phaseOptimizationUpdate.cu:117-132). Rows are non-self-loop
+    edges, every row of a source present."""
+    sel = np.isin(src, np.unique(src[dm & (cs != cd)]))
+    return _round_moves(
+        src[sel], cd[sel], w[sel], k_src[sel], cs[sel], ctot_cs[sel], ctot_cd[sel], m, rnd
+    )
 
-    Inputs mirror the distributed state at a clean level start
-    (identity communities): directed symmetric edge arrays, per-vertex
-    ids + weighted degree, total weight ``m``, current modularity ``q``.
-    ``level`` is the starting level number (metrics bookkeeping only).
-    """
-    ids = np.asarray(ids, dtype=np.int64)
-    order = np.argsort(ids, kind="stable")
-    ids = ids[order]
-    k = np.asarray(k, dtype=np.float64)[order]
-    # order-preserving dense relabel: community ids keep their relative
-    # order, so every ordered tie-break below matches the distributed plan
-    src = np.searchsorted(ids, np.asarray(src, dtype=np.int64))
-    dst = np.searchsorted(ids, np.asarray(dst, dtype=np.int64))
-    w = np.asarray(w, dtype=np.float64)
-    n = len(ids)
 
-    labels = np.arange(n, dtype=np.int64)  # entry-vertex -> current coarse id
-    valid = np.ones(n, dtype=bool)  # False once the vertex's community died (ctot=0)
-    metrics: list[dict] = []
-    levels_added = 0
-    n_best = n
+def _state_moves(src, dst, w, k_src, comm, ctot, moved, m, rnd):
+    """One round over a level's static edges -> (nodes, new communities,
+    W_in), the vertex state in arrays indexed by vertex id: ``comm`` the
+    community, ``ctot`` Σ_tot per community id, ``moved`` whether the
+    vertex moved last round (all true at round 0).
 
-    while True:
-        comm = np.arange(n, dtype=np.int64)
-        ctot = k.copy()
-        q_level_start = q
-        not_self = src != dst
-        active: np.ndarray | None = None  # None => all vertices (round 0)
-        rnd = 0
-        while True:
-            t0 = time.time()
-            q_old = q
-            sel = not_self
-            if active is not None:
-                sel = not_self & active[src]
-            c_src, c_dst = src[sel], dst[sel]
-            cs, cd = comm[c_src], comm[c_dst]
-            nodes, newc = _round_moves(
-                c_src, cd, w[sel], k[c_src], cs, ctot[cs], ctot[cd], m, rnd
-            )
-            n_moves = len(nodes)
-            if n_moves > 0:
-                comm[nodes] = newc
-                ctot = np.bincount(comm, weights=k, minlength=n)
-                q = q_from_sums(w[comm[src] == comm[dst]].sum(), (ctot * ctot).sum(), m)
-                # frontier C6: srcs of edges whose dst moved into a
-                # community different from src's
-                moved = np.zeros(n, dtype=bool)
-                moved[nodes] = True
-                f = moved[dst] & (comm[src] != comm[dst])
-                active = np.zeros(n, dtype=bool)
-                active[src[f]] = True
-            dq = q - q_old
-            metrics.append(
-                {
-                    "level": level, "round": rnd, "n_moves": n_moves,
-                    "q": q, "dq": dq, "sec": time.time() - t0,
-                    "engine": "local",
-                }
-            )
-            rnd += 1
-            if n_moves == 0 or dq <= threshold or rnd > early_stop_limit:
-                break
+    ``src, dst, w, k_src`` are every edge of the sources they hold (a
+    ``src`` partition, or the whole level), self-loops included. ``W_in``
+    is their intra-community weight under the state given, i.e. before
+    this round's moves."""
+    cs, cd = comm[src], comm[dst]
+    win = w[cs == cd].sum()
+    e = src != dst
+    cs, cd = cs[e], cd[e]
+    nodes, newc = _frontier_moves(
+        src[e], cd, w[e], k_src[e], cs, ctot[cs], ctot[cd], moved[dst[e]], m, rnd
+    )
+    return nodes, newc, win
 
-        # aggregation phase: dense relabel of surviving (ctot > 0)
-        # communities in community-id order, flatten, coarsen
-        continue_opt = (q - q_level_start) > threshold
-        surviving = np.flatnonzero(ctot > 0)
-        relabel = np.full(n, -1, dtype=np.int64)
-        relabel[surviving] = np.arange(len(surviving), dtype=np.int64)
-        # isolated entry vertices (k=0 singleton communities) relabel to -1
-        # — the distributed plan drops them via the inner flatten join; we
-        # mark them invalid and the caller filters label < 0
-        labels[valid] = relabel[comm[labels[valid]]]
-        valid &= labels >= 0
-        n_best = len(surviving)
 
-        if not continue_opt:
-            break
+class InProcessLevel:
+    """A level's ``(src, dst, w)`` edges as NumPy arrays in this process,
+    vertex ids ``0..n-1``: the in-process placement of the level loop."""
 
-        csrc, cdst = relabel[comm[src]], relabel[comm[dst]]
+    engine = "local"
+
+    def __init__(self, src, dst, w):
+        self.src, self.dst, self.w = src, dst, w
+        self.ne = len(src)
+        self.k_src = np.bincount(src, weights=w)[src]
+
+    def round(self, comm, ctot, moved, m, level, rnd):
+        """One round: :func:`_state_moves` on the whole level."""
+        return _state_moves(self.src, self.dst, self.w, self.k_src, comm, ctot, moved, m, rnd)
+
+    def coarsen(self, newid, level):
+        """The next level (A8): both endpoints mapped through ``newid``
+        (vertex id -> next-level id) and parallel edges merged by one
+        ``lexsort`` + ``reduceat``; self-loops kept."""
+        csrc, cdst = newid[self.src], newid[self.dst]
         key_order = np.lexsort((cdst, csrc))
-        s1, s2, sw = csrc[key_order], cdst[key_order], w[key_order]
+        s1, s2 = csrc[key_order], cdst[key_order]
         boundary = np.empty(len(s1), dtype=bool)
         boundary[0] = True
         np.not_equal(s1[1:], s1[:-1], out=boundary[1:])
         boundary[1:] |= s2[1:] != s2[:-1]
         starts = np.flatnonzero(boundary)
-        src, dst = s1[starts], s2[starts]
-        w = np.add.reduceat(sw, starts)
-        n = n_best
-        k = np.bincount(src, weights=w, minlength=n)
-        ctot = k.copy()
-        q = q_from_sums(w[src == dst].sum(), (ctot * ctot).sum(), m)
-        level += 1
-        levels_added += 1
-
-    return LocalLouvainResult(
-        labels=labels,
-        ids=ids,
-        modularity=q,
-        n_communities=int(n_best),
-        levels_added=levels_added,
-        metrics=metrics,
-    )
+        return InProcessLevel(s1[starts], s2[starts], np.add.reduceat(self.w[key_order], starts))

@@ -45,7 +45,7 @@ def refine_partition(
     whose communities are already internally connected.
 
     ``local_max_edges`` / ``max_iter`` pass through to
-    :func:`connected_components` (0 forces the distributed star rounds).
+    :func:`connected_components` (0: not its NumPy tail).
     """
     ls = labels.select(F.col(id_col).alias("src"), F.col(comm_col).alias("cs"))
     ld = labels.select(F.col(id_col).alias("dst"), F.col(comm_col).alias("cd"))

@@ -60,21 +60,29 @@ def test_connected_components_exact(spark):
     assert got == {0: 0, 1: 0, 2: 0, 10: 10, 11: 10, 12: 10}
 
 
-def test_connected_components_long_path(spark):
-    """Path graph: worst case for min-flooding; large/small-star must still
-    converge in O(log² n) rounds (Kiveris et al.). Forced distributed.
-    Stopping after one round (not a fixpoint) warns with the round count;
+def test_connected_components_long_path(spark, tmp_path):
+    """Path graph: worst case for min-flooding. Stopped after one round
+    (not a fixpoint), CC warns with the round count and names the rounds
+    that ran: min-hooking with the labels on the driver
+    (``local_max_edges=0``), star rounds under a checkpointer. The star
+    rounds must still converge in O(log² n) rounds (Kiveris et al.), and
     the converged call does not warn."""
+    from louvain_fast_move_cuda_spark.plans.checkpoint import VertexIterationCheckpointer
+
     n = 64
     g = _graph(spark, [(i, i + 1) for i in range(n - 1)])
-    with pytest.warns(RuntimeWarning, match="after 1 star rounds"):
+    with pytest.warns(RuntimeWarning, match="after 1 min-hooking rounds"):
         connected_components(g, max_iter=1, local_max_edges=0)
+    with pytest.warns(RuntimeWarning, match="after 1 star rounds"):
+        connected_components(
+            g, max_iter=1, checkpointer=VertexIterationCheckpointer(str(tmp_path / "one"), "cc")
+        )
     with warnings.catch_warnings():
         warnings.simplefilter("error", RuntimeWarning)
-        got = {
-            r.id: r.component
-            for r in connected_components(g, max_iter=20, local_max_edges=0).collect()
-        }
+        stars = connected_components(
+            g, max_iter=20, checkpointer=VertexIterationCheckpointer(str(tmp_path / "all"), "cc")
+        )
+        got = {r.id: r.component for r in stars.collect()}
     assert got == {i: 0 for i in range(n)}
 
 
@@ -97,9 +105,10 @@ def test_pagerank_and_lpa_local_tails_match_distributed(spark):
 
 
 def test_connected_components_local_tail_matches_distributed(spark):
-    """component = min reachable id is a graph invariant, so the driver-
-    local pointer-jumping tail must equal the distributed star rounds
-    exactly — on a structure mixing a long path, a clique and isolates."""
+    """component = min reachable id is a graph invariant, so the NumPy
+    tail must equal the labels-on-the-driver placement (one Spark
+    aggregate a min-hooking round, ``local_max_edges=0``) exactly — on a
+    structure mixing a long path, a clique and isolates."""
     from oracle import powerlaw_graph
 
     edges = powerlaw_graph(n=200, m_attach=2, seed=5) + [(500, 501), (501, 502)]

@@ -98,21 +98,41 @@ def test_louvain_non_dense_ids_match_edge_carried(spark):
 
 
 def test_local_finish_matches_distributed(spark):
-    """The driver-local NumPy tail (operators/louvain_local.py) runs the
-    same move kernel as the distributed rounds: on integer-weight graphs
-    every partial sum is exact and the Q expression trees are identical,
-    so labels and modularity must match the distributed run BIT-FOR-BIT —
-    at full local finish (level 0 already fits) and distributed-only."""
+    """One level loop, two placements for a level's edges: in this process
+    (every level from level 0, the default here) and on Spark
+    (``local_finish_max_edges=0``). Both run the same move kernel, and on
+    integer-weight graphs every partial sum is exact, so the runs must be
+    the same bit for bit: labels, Q, levels and every round's record. So
+    must the edge-carried -> in-process hand-off: level 0 edge-carried
+    (``broadcast_moves_max=0``, one edge too many for this process), every
+    later level in this process."""
     edges = powerlaw_graph(n=250, m_attach=2, seed=11)
     raw = spark.createDataFrame(edges, "a long, b long")
     res_dist = louvain(build_graph(raw, relabel=False), local_finish_max_edges=0)
-    res_loc = louvain(build_graph(raw, relabel=False))  # default: local tail
-    assert any(mt.get("engine") == "local" for mt in res_loc.metrics)
+    res_loc = louvain(build_graph(raw, relabel=False))
+    assert res_dist.levels > 1
+    assert all(mt["engine"] == "local" for mt in res_loc.metrics)
     assert all(mt["engine"] == "arrow" for mt in res_dist.metrics)
-    assert _labels(res_dist) == _labels(res_loc)
-    assert res_dist.modularity == res_loc.modularity
-    assert res_dist.levels == res_loc.levels
-    assert res_dist.n_communities == res_loc.n_communities
+    _assert_same_run(res_loc, res_dist)
+    g = build_graph(raw, relabel=False)
+    res_hand = louvain(g, broadcast_moves_max=0, local_finish_max_edges=g.edges.count() - 1)
+    assert {mt["engine"] for mt in res_hand.metrics if mt["level"] == 0} == {"arrow"}
+    assert {mt["engine"] for mt in res_hand.metrics if mt["level"] > 0} == {"local"}
+    _assert_same_run(res_hand, res_dist)
+
+
+def test_max_levels_holds_in_every_placement(spark):
+    """``max_levels`` stops the run after that many aggregation phases
+    whichever placement runs the levels: at the default settings (every
+    level in this process) ``max_levels=1`` must give the Spark
+    placement's run bit for bit."""
+    edges = powerlaw_graph(n=250, m_attach=2, seed=11)
+    raw = spark.createDataFrame(edges, "a long, b long")
+    want = louvain(build_graph(raw, relabel=False), local_finish_max_edges=0, max_levels=1)
+    got = louvain(build_graph(raw, relabel=False), max_levels=1)
+    assert want.levels == 2
+    assert all(mt["engine"] == "local" for mt in got.metrics)
+    _assert_same_run(got, want)
 
 
 def test_resume_from_checkpoint_identical_labels(spark, tmp_path):

@@ -166,9 +166,9 @@ def test_empty_candidate_round_moves_direct():
 def test_kernel_partitions_match_whole_graph_round_moves():
     """One move kernel, two placements: the Spark kernel's per-partition
     pass (Arrow batches of one ``src`` hash partition, frontier read off
-    the ``dm`` column) and the local tail's whole-graph call of
-    _round_moves must emit the same moves, round after round, on a graph
-    whose level 0 needs several frontier rounds."""
+    the ``dm`` column) and a whole-graph call of _round_moves must emit
+    the same moves, round after round, on a graph whose level 0 needs
+    several frontier rounds."""
     import numpy as np
     import pyarrow as pa
 
@@ -190,7 +190,7 @@ def test_kernel_partitions_match_whole_graph_round_moves():
     for rnd in range(12):
         ctot = np.bincount(comm, weights=k, minlength=n)
         cs, cd = comm[src], comm[dst]
-        # local-tail placement: whole graph, active set by vertex index
+        # whole graph, active set by vertex index
         sel = active[src]
         want = _round_moves(
             src[sel], cd[sel], w[sel], k[src[sel]], cs[sel], ctot[cs[sel]],
@@ -213,8 +213,8 @@ def test_kernel_partitions_match_whole_graph_round_moves():
         if not len(want[0]):
             break
         rounds_moved.append(int(active.sum()))
-        # apply, then the frontier both ways: dm on the edge rows, and the
-        # local tail's per-vertex active mask
+        # apply, then the frontier both ways: dm on the edge rows, and a
+        # per-vertex active mask
         comm[want[0]] = want[1]
         moved = np.zeros(n, dtype=bool)
         moved[want[0]] = True

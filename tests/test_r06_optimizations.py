@@ -9,8 +9,8 @@ the bench/oracle data does not naturally exercise:
   exactly at the old left-join-coalesce values — the bench and oracle
   graphs contain few or no such vertices, so the parity suite alone
   would not catch a regression here;
-* connected_components' repartition-before-distinct star rounds must
-  carry isolated vertices through to singleton components;
+* connected_components must carry isolated vertices through to
+  singleton components;
 * assign_contiguous_ids' carry_all fast path (the map-back join removal
   in transcript_graph) must produce exactly the ranks of the mapping
   path, and assume_distinct must equal the dedup path on distinct input.
@@ -85,8 +85,10 @@ def test_lpa_selfrow_keeps_voteless_vertices_on_own_label(spark):
 
 
 def test_cc_star_rounds_carry_isolated_vertices(spark):
-    """repartition-before-distinct star rounds: isolated vertices never
-    enter the pair table and must still come out as singletons."""
+    """Isolated vertices never enter the edge set and must still come out
+    as singletons, with the labels on the driver (``local_max_edges=0``)
+    and in the NumPy tail alike. The star rounds' isolated-vertex case is
+    tests/test_components.py's checkpointed ``isolated`` graph."""
     g = _graph_with_isolates(spark)
     dist = {r.id: r.component for r in connected_components(g, local_max_edges=0).collect()}
     loc = {r.id: r.component for r in connected_components(g).collect()}
