@@ -124,7 +124,6 @@ def label_propagation(
     graph: GraphTables,
     max_iter: int = 10,
     local_max_edges: int = 5_000_000,
-    skew_salt_buckets: int | None = None,
     checkpointer=None,
 ) -> DataFrame:
     """Returns (id: long, label: long). Stops early at a fixpoint.
@@ -141,15 +140,13 @@ def label_propagation(
     each round is a pure function of the previous label table). Forces
     the DataFrame loop.
 
-    ``skew_salt_buckets``: the DataFrame loop's hub-vertex skew handling
-    for the vote sum
-    (SURVEY.md §4 item 1 — power-law graphs put a hub's entire
-    neighborhood on one (src, label) reducer key). ``None`` = auto:
-    salting turns on when the max weighted degree exceeds 4× the average
-    shuffle-partition load (plans/skew.py); ``0`` = never; ``>0`` =
-    always, with that many buckets. Vote weights are integer-valued
-    float64 sums, so the two-stage sum is bit-identical to the
-    single-stage plan regardless of bucketing.
+    Hub-vertex skew in the DataFrame loop's vote sum (SURVEY.md §4 item 1
+    — power-law graphs put a hub's entire neighborhood on one (src,
+    label) reducer key): the sum is salted over 16 buckets when the max
+    weighted degree exceeds 4× the average shuffle-partition load
+    (plans/skew.py::skewed_degree_trigger). Vote weights are
+    integer-valued float64 sums, so the two-stage sum is bit-identical to
+    the single-stage plan.
     """
     spark = graph.edges.sparkSession
     npart = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
@@ -163,16 +160,8 @@ def label_propagation(
             else _driver_lpa(graph, ids, max_iter, npart)
         )
         return spark.createDataFrame(pa.table({"id": ids, "label": ids[label]}))
-    salt_buckets = skew_salt_buckets
-    if salt_buckets is None:
-        stats = graph.vertices.agg(
-            F.max("k").alias("mx"), F.sum("k").alias("tot")
-        ).collect()[0]
-        salt_buckets = (
-            16
-            if skewed_degree_trigger(float(stats["mx"]), float(stats["tot"]), npart)
-            else 0
-        )
+    stats = graph.vertices.agg(F.max("k").alias("mx"), F.sum("k").alias("tot")).collect()[0]
+    salted = skewed_degree_trigger(float(stats["mx"]), float(stats["tot"]), npart)
     edges = (
         graph.edges.select("src", "dst", F.col("weight").alias("w"))
         .filter(F.col("src") != F.col("dst"))
@@ -189,10 +178,9 @@ def label_propagation(
     # tables. All-integer values: bit-identical labels.
     def step(labels, _metric):
         voted = edges.join(labels.select(F.col("id").alias("dst"), "label"), "dst")
-        if salt_buckets:
+        if salted:
             votes = salted_sum_by_key(
-                voted.select("src", "label", "w"), ["src", "label"], "w", "wsum",
-                salt_buckets=salt_buckets,
+                voted.select("src", "label", "w"), ["src", "label"], "w", "wsum"
             )
         else:
             votes = voted.groupBy("src", "label").agg(F.sum("w").alias("wsum"))

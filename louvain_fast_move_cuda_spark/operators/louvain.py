@@ -51,7 +51,8 @@ Scale design (this is where we diverge from a port):
   in this process): in this
   process when no checkpointer is set and the directed edge count fits
   ``local_finish_max_edges``; else driver state on Spark when the vertex
-  ids lie in ``[0, broadcast_moves_max)``; else edge-carried;
+  ids lie in ``[0, VERTEX_STATE_MAX)`` (plans/superstep.py, the bound the
+  vertex programs share); else edge-carried;
 * vertex state on the edges above that bound (the 10^12-turn level 0)
   and under durable checkpoints: ``edges_state = (src, dst, w, k_src,
   cs, cd, dm)`` carries the community of both endpoints *on the edge
@@ -89,7 +90,7 @@ from pyspark.sql import functions as F
 
 from ..plans.debug import dump_plan
 from ..plans.observe import observed
-from ..plans.superstep import VERTEX_STATE_MAX
+from ..plans import superstep
 from .louvain_arrow import arrow_round_moves, driver_round_moves, relabel_edges
 from .louvain_local import InProcessLevel, q_from_sums
 from ..sources.edges import GraphTables, assign_contiguous_ids
@@ -402,15 +403,15 @@ def _start_state(est: DataFrame, eager: bool, m: float, name: str):
     return est, comm_w, q_from_sums(row["win"], row["s"], m), int(row["ne"])
 
 
-def _dense_relabel(comms: DataFrame, n_max: int, broadcast_max: int, npart: int):
+def _dense_relabel(comms: DataFrame, n_max: int, npart: int):
     """((comm, newid), n): dense 0-based ranks of the distinct ``comm``
     ids in ascending id order (phaseAggregation.cuh:19-52), and their
-    count. ``n_max`` bounds the row count: a table that would be
-    broadcast anyway is ranked on the driver (one collect instead of a
-    range shuffle); above that, :func:`assign_contiguous_ids` ranks it
+    count. ``n_max`` bounds the row count: a table within
+    ``VERTEX_STATE_MAX`` is ranked on the driver (one collect instead of
+    a range shuffle); above that, :func:`assign_contiguous_ids` ranks it
     with a range partitioning sized to ``n_max`` rows, and its
     per-partition counts give ``n`` for free."""
-    if n_max <= broadcast_max:
+    if n_max <= superstep.VERTEX_STATE_MAX:
         import pyarrow as pa
 
         ids = np.sort(comms.toArrow().column("comm").to_numpy())
@@ -441,9 +442,7 @@ def _apply_moves(
     return out.drop("node", "_newc")
 
 
-def _refine_result(
-    graph: GraphTables, res: LouvainResult, broadcast_max: int, npart: int
-) -> LouvainResult:
+def _refine_result(graph: GraphTables, res: LouvainResult, npart: int) -> LouvainResult:
     """C9 refine (the reference's empty stub, phaseRefine.cuh:1-3) as
     Leiden connectivity refinement: split every community into its
     connected parts (operators/refine.py — Q can only rise), dense-
@@ -454,7 +453,7 @@ def _refine_result(
     labels = refine_partition(graph, res.labels)
     rl, _ = _dense_relabel(
         labels.select(F.col("community").alias("comm")).distinct(),
-        graph.n_nodes, broadcast_max, npart,
+        graph.n_nodes, npart,
     )
     labels = (
         labels.join(rl.withColumnRenamed("comm", "community"), "community")
@@ -532,7 +531,6 @@ def louvain(
     threshold: float = MODULARITY_CONVERGED_THRESHOLD,
     early_stop_limit: int = EARLY_STOP_LIMIT,
     checkpointer=None,
-    broadcast_moves_max: int = VERTEX_STATE_MAX,
     local_finish_max_edges: int = 5_000_000,
     max_levels: int | None = None,
     refine: bool = False,
@@ -560,14 +558,16 @@ def louvain(
     hitting the checkpointer.
 
     ``max_levels``: stop after this many aggregation phases (None = run
-    to convergence), in every placement. Labels and Q are those of the
-    partition found so far, and ``levels`` is ``max_levels + 1`` (it
-    counts the coarse level built last). Benchmarking hook — lets a
-    scaling leg measure exactly the level-0 rounds.
+    to convergence; 0 or less raises ValueError), in every placement.
+    Labels and Q are those of the partition found so far, and ``levels``
+    is ``max_levels + 1`` (it counts the coarse level it stopped at).
+    Benchmarking hook — lets a scaling leg measure exactly the level-0
+    rounds.
 
-    ``broadcast_moves_max``: the bound on vertex-sized state that may pass
-    through the driver. While a level's vertex ids lie in
-    ``[0, broadcast_moves_max)`` and no checkpointer is set, the level's
+    Vertex-sized state passes through the driver while it fits
+    ``plans/superstep.py::VERTEX_STATE_MAX``, the bound the vertex
+    programs share (read at call time). While a level's vertex ids lie in
+    ``[0, VERTEX_STATE_MAX)`` and no checkpointer is set, the level's
     community, Σ_tot and moved-flag vectors live on the driver and ship
     to the kernel as one broadcast per round (one Spark job a round).
     Above it the state is carried on the edge rows, and the per-round
@@ -585,6 +585,9 @@ def louvain(
     m = graph.m
     if m <= 0:
         raise ValueError("empty graph")
+    if max_levels is not None and max_levels < 1:
+        raise ValueError(f"max_levels must be at least 1, got {max_levels}")
+    bound = superstep.VERTEX_STATE_MAX
     npart = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
 
     level = 0
@@ -604,21 +607,17 @@ def louvain(
     labels = None
 
     # --- resume path (mid-iteration, north rule) --------------------------
-    # ``verts`` is the level's vertex table (id, k): it changes only at a
-    # level boundary. Round-to-round community state lives on the edge
-    # rows (cs/cd/dm) and in the Σ_tot table ``comm_w``.
+    # round-to-round community state lives on the edge rows (cs/cd/dm) and
+    # in the Σ_tot table ``comm_w``; ``cur_n`` is the level's vertex count
     state = checkpointer.load_latest(spark) if checkpointer is not None else None
     if state is not None:
-        verts, labels = state.vertices, state.labels
-        level, q = state.level, state.q
-        cur_n = verts.count()
+        labels, level, q, cur_n = state.labels, state.level, state.q, state.n_vertices
         # the saved edge state carries the frontier in its ``dm`` column.
         # The scan's Q is dropped: the run goes on with the Q the original
         # run carried
         est, comm_w, _, level_ne = _start_state(
             state.edges_state.repartition(npart, "src"), True, m, f"louvain L{level} resume"
         )
-        verts = verts.localCheckpoint(eager=True)
         labels = labels.localCheckpoint(eager=True)
         if state.round >= 0:
             # was the checkpointed round the LAST round of its level? If so,
@@ -640,7 +639,7 @@ def louvain(
     # (identity comms), which never follows a resume: it is off while
     # durable checkpointing is on. 0 never fits: every level has an edge
     local_max = local_finish_max_edges if checkpointer is None else 0
-    if local_max > 0 and n_range > broadcast_moves_max:
+    if local_max > 0 and n_range > bound:
         # level 0 above the bound: count its edges first, as
         # plans/superstep.py::placement does, so that only a level that
         # fits in this process is gathered
@@ -651,7 +650,7 @@ def louvain(
         if est is None and checkpointer is None:
             # ========= a clean level start, its edges on Spark: place it ==
             fits = level_ne is not None and level_ne <= local_max
-            if ids is None and (fits or n_range <= broadcast_moves_max):
+            if ids is None and (fits or n_range <= bound):
                 ids, k, level_ne = _vertex_degrees(edges)
                 fits = level_ne <= local_max
             if fits:
@@ -662,7 +661,7 @@ def louvain(
                     level, m, threshold, early_stop_limit, max_levels, metrics,
                 )
                 break
-            if ids is not None and ids[0] >= 0 and ids[-1] < broadcast_moves_max:
+            if ids is not None and ids[0] >= 0 and ids[-1] < bound:
                 # vertex state on the driver, edges on Spark, until a coarse
                 # level fits in this process
                 labels, q, n_best, level, nxt = _driver_levels(
@@ -677,8 +676,9 @@ def louvain(
             # level 0 above the bound, with ids outside [0, bound) or under
             # a checkpointer: the edge-carried state (community.h:31-46:
             # identity labels, k as Σ_tot)
-            verts = graph.vertices.select("id", "k")
-            labels = verts.select(F.col("id").alias("orig_id"), F.col("id").alias("community"))
+            labels = graph.vertices.select(
+                F.col("id").alias("orig_id"), F.col("id").alias("community")
+            )
             cur_n = graph.n_nodes
             est, comm_w, q, level_ne = _start_state(
                 _level_edge_state(edges, npart), True, m, f"louvain L{level} init"
@@ -718,7 +718,7 @@ def louvain(
             q_old = q
             moves = arrow_round_moves(
                 est, comm_w, m, rnd, level_npart,
-                broadcast_comm_w=n_cw <= broadcast_moves_max,
+                broadcast_comm_w=n_cw <= bound,
             )
             if rnd <= 1:
                 dump_plan(moves, f"superstep_louvain_round{rnd}")
@@ -726,7 +726,7 @@ def louvain(
             # would otherwise each recompute it). The broadcast decision
             # uses the previous round's move count (vertex count on round
             # 0) as the estimate since this round's isn't known yet.
-            bcast = est_moves <= broadcast_moves_max
+            bcast = est_moves <= bound
             if bcast:
                 # a move set small enough to broadcast passes through the
                 # driver anyway: collect it in the kernel's one job, count
@@ -769,7 +769,7 @@ def louvain(
             dq = q - q_old
             metrics.append(_round_record(level, rnd, n_moves, q, dq, time.time() - t0))
             if checkpointer is not None:
-                checkpointer.save(level, rnd, est, verts, labels, q, q_level_start, metrics[-1])
+                checkpointer.save(level, rnd, est, labels, q, q_level_start, cur_n, metrics[-1])
             rnd += 1
             if n_moves == 0 or dq <= threshold or rnd > early_stop_limit:
                 break
@@ -785,7 +785,7 @@ def louvain(
         # the surviving communities are a groupBy output (already
         # distinct); the relabel counts them for free
         relabel, n_best = _dense_relabel(
-            comm_w.filter(F.col("ctot") > 0).select("comm"), n_cw, broadcast_moves_max, npart
+            comm_w.filter(F.col("ctot") > 0).select("comm"), n_cw, npart
         )
         # flatten labels (P9 / community.h:48-55): orig label -> comm of its
         # current-graph vertex -> dense coarse id. The vertex -> community
@@ -803,10 +803,10 @@ def louvain(
         # shuffled by the flatten (guide §3.1). The SAME broadcast relabel
         # subplan feeds the coarsen below.
         vmap = est.groupBy(F.col("src").alias("community")).agg(F.max("cs").alias("comm"))
-        if cur_n <= broadcast_moves_max:
+        if cur_n <= bound:
             vmap = F.broadcast(vmap)
         rl = relabel  # (comm, newid)
-        if n_best <= broadcast_moves_max:
+        if n_best <= bound:
             rl = F.broadcast(rl)
         labels = (
             labels.join(vmap, "community")
@@ -821,9 +821,9 @@ def louvain(
 
         # coarsen (A8): relabel both endpoints, merge parallel edges. ONE
         # relabel subplan joined via conditions, and the merged coarse edge
-        # table is checkpointed FIRST so verts / est / comm_w all derive
-        # from the cached merge instead of re-running the two joins +
-        # groupBy per consumer.
+        # table is checkpointed FIRST so est / comm_w both derive from the
+        # cached merge instead of re-running the two joins + groupBy per
+        # consumer.
         coarse = (
             est.join(rl, F.col("cs") == F.col("comm"))
             .withColumnRenamed("newid", "nsrc")
@@ -844,17 +844,17 @@ def louvain(
             observed(coarse, f"louvain L{level} coarsen", F.count(F.lit(1)).alias("ne"))["ne"]
         )
         level += 1
-        if checkpointer is None and (n_best <= broadcast_moves_max or level_ne <= local_max):
+        if max_levels is not None and level >= max_levels:
+            # benchmarking hook: stop after N levels (labels reflect the
+            # partition found so far; Q is exact for that partition),
+            # before the coarse level's state is built or saved
+            break
+        if checkpointer is None and (n_best <= bound or level_ne <= local_max):
             # the coarse level's state fits the driver: back to the
             # placement decision, with the Q this level ended on
             # (coarsening conserves it)
             edges, n_range, est, ids = coarse, n_best, None, None
-            if max_levels is not None and level >= max_levels:
-                break
             continue
-        # the coarse level's vertex table stays lazy: only a checkpoint save
-        # reads it
-        verts = coarse.groupBy(F.col("src").alias("id")).agg(F.sum("w").alias("k"))
         # no scan of the fresh level: its edge count is the level_ne
         # observed above, and Q carries over (coarsening conserves it; every
         # sum is integer-valued). Its first round materializes both lazy
@@ -865,12 +865,8 @@ def louvain(
         comm_w = _comm_weights(est).localCheckpoint(eager=False)
         if checkpointer is not None:
             checkpointer.save(
-                level, -1, est, verts, labels, q, q, {"level": level, "round": -1, "q": q}
+                level, -1, est, labels, q, q, cur_n, {"level": level, "round": -1, "q": q}
             )
-        if max_levels is not None and level >= max_levels:
-            # benchmarking hook: stop after N levels (labels reflect the
-            # partition found so far; Q is exact for that partition)
-            break
 
     if not isinstance(labels, DataFrame):
         import pyarrow as pa
@@ -883,4 +879,4 @@ def louvain(
         levels=level + 1,
         metrics=metrics,
     )
-    return _refine_result(graph, res, broadcast_moves_max, npart) if refine else res
+    return _refine_result(graph, res, npart) if refine else res

@@ -1,21 +1,23 @@
 """Durable per-superstep checkpointing with per-partition lineage metrics.
 
-North-rule requirement: every superstep checkpoints vertex-state and
-coarsened-graph tables so runs resume mid-iteration. The reference keeps
-all state resident on one GPU (community.h); at 10^12-turn scale state
-must instead round-trip through a table format. We write parquet
+North-rule requirement: every superstep checkpoints its state so runs
+resume mid-iteration. The reference keeps all state resident on one GPU
+(community.h); at 10^12-turn scale state must instead round-trip through
+a table format. We write parquet
 (Iceberg-shaped layout: one directory per superstep + a JSON manifest
 committed last, so a torn write is never visible to resume).
 
 Layout:
-    <root>/level=<L>/round=<R>/{edges_state,vertices,labels}/
+    <root>/level=<L>/round=<R>/{edges_state,labels}/
     <root>/level=<L>/round=<R>/_META.json     (commit marker, written last)
 
-The Louvain frontier needs no table of its own: the edge state's ``dm``
-column ("dst moved in the previous round") carries it.
+The Louvain edge state is the whole vertex state: the frontier is its
+``dm`` column ("dst moved in the previous round") and a vertex's degree
+its ``k_src`` column, so no vertex table is written.
 
-_META.json records q, q_level_start, timestamps and per-partition row
-counts of the edge state (lineage/metrics per north_rule).
+_META.json records q, q_level_start, the level's vertex count,
+timestamps and per-partition row counts of the edge state
+(lineage/metrics per north_rule).
 """
 
 from __future__ import annotations
@@ -32,12 +34,12 @@ from pyspark.sql import functions as F
 @dataclass
 class SuperstepState:
     edges_state: DataFrame
-    vertices: DataFrame
     labels: DataFrame
     level: int
     round: int
     q: float
     q_level_start: float
+    n_vertices: int  # the level's vertex count
     metric: dict | None = None  # the saved round's {n_moves, dq, ...} — resume
     # uses it to decide whether the inner loop had already terminated
 
@@ -66,21 +68,21 @@ class SuperstepCheckpointer:
         level: int,
         rnd: int,
         edges_state: DataFrame,
-        vertices: DataFrame,
         labels: DataFrame,
         q: float,
         q_level_start: float,
+        n_vertices: int,
         metric: dict | None = None,
     ) -> None:
         d = self._dir(level, rnd)
         edges_state.write.mode("overwrite").parquet(os.path.join(d, "edges_state"))
-        vertices.write.mode("overwrite").parquet(os.path.join(d, "vertices"))
         labels.write.mode("overwrite").parquet(os.path.join(d, "labels"))
         meta = {
             "level": level,
             "round": rnd,
             "q": q,
             "q_level_start": q_level_start,
+            "n_vertices": n_vertices,
             "ts": time.time(),
             "metric": metric or {},
         }
@@ -109,12 +111,12 @@ class SuperstepCheckpointer:
             meta = json.load(f)
         return SuperstepState(
             edges_state=spark.read.parquet(os.path.join(d, "edges_state")),
-            vertices=spark.read.parquet(os.path.join(d, "vertices")),
             labels=spark.read.parquet(os.path.join(d, "labels")),
             level=level,
             round=rnd,
             q=float(meta["q"]),
             q_level_start=float(meta["q_level_start"]),
+            n_vertices=int(meta["n_vertices"]),
             metric=meta.get("metric") or {},
         )
 

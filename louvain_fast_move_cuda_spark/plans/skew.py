@@ -22,41 +22,28 @@ def salted_sum_by_key(
     value: str,
     out: str,
     salt_buckets: int = 16,
-    carry: list[str] | None = None,
 ) -> DataFrame:
     """Two-stage sum: groupBy(keys + salt) partial-sum, then groupBy(keys).
 
-    Equivalent to ``df.groupBy(keys).agg(sum(value), first(c) for c in
-    carry)`` but splits a hot key across ``salt_buckets`` reducers in the
-    first stage. (Spark already performs map-side partial aggregation;
-    this helps when a single key's post-partial volume still skews —
-    i.e. extremely many distinct map partitions all feeding one hub key.)
-
-    ``carry``: columns functionally dependent on ``keys`` (every row of a
-    key holds the same value) forwarded through both stages via first() —
-    deterministic precisely because of that dependency.
+    Equivalent to ``df.groupBy(keys).agg(sum(value))`` but splits a hot
+    key across ``salt_buckets`` reducers in the first stage. (Spark
+    already performs map-side partial aggregation; this helps when a
+    single key's post-partial volume still skews — i.e. extremely many
+    distinct map partitions all feeding one hub key.)
     """
-    carry = list(carry or [])
     # deterministic salt: hash every column so the same row always lands in
     # the same bucket (safe across task retries, unlike rand/monotonic ids)
     salt = F.pmod(F.xxhash64(*[F.col(c) for c in df.columns]), F.lit(salt_buckets))
     partial = (
         df.withColumn("_salt", salt)
         .groupBy(*keys, "_salt")
-        .agg(
-            F.sum(value).alias("_partial"),
-            *[F.first(c).alias(c) for c in carry],
-        )
+        .agg(F.sum(value).alias("_partial"))
     )
-    return partial.groupBy(*keys).agg(
-        F.sum("_partial").alias(out),
-        *[F.first(c).alias(c) for c in carry],
-    )
+    return partial.groupBy(*keys).agg(F.sum("_partial").alias(out))
 
 
-def skewed_degree_trigger(max_degree: float, total_degree: float, npart: int,
-                          factor: float = 4.0) -> bool:
-    """True when one vertex's degree exceeds ``factor`` × the average
+def skewed_degree_trigger(max_degree: float, total_degree: float, npart: int) -> bool:
+    """True when one vertex's degree exceeds 4× the average
     shuffle-partition load — i.e. a single key would dominate a reducer.
 
     Uses weighted degree as the row-count proxy (unit edge weights make
@@ -66,4 +53,4 @@ def skewed_degree_trigger(max_degree: float, total_degree: float, npart: int,
     """
     if npart <= 0 or total_degree <= 0:
         return False
-    return max_degree > factor * (total_degree / npart)
+    return max_degree > 4.0 * (total_degree / npart)

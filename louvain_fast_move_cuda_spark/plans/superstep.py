@@ -33,8 +33,9 @@ from pyspark.sql import functions as F
 from .conf import sql_conf
 from .debug import dump_plan
 
-# the bound on vertex-sized state held on the driver: the vertex programs'
-# driver placement and Louvain's ``broadcast_moves_max`` default
+# the bound on vertex-sized state held on the driver, read at call time by
+# the vertex programs' placement and by every size test of Louvain
+# (operators/louvain.py): one constant bounds all four iterative operators
 VERTEX_STATE_MAX = 5_000_000
 
 

@@ -2,13 +2,16 @@
 from durable checkpoints, per-turn text equality under stable ordering."""
 
 import glob
+import importlib
 import math
 import os
 from dataclasses import replace
 
+import pytest
 from pyspark.sql import functions as F
 
 from louvain_fast_move_cuda_spark.operators.louvain import louvain
+from louvain_fast_move_cuda_spark.plans import superstep
 from louvain_fast_move_cuda_spark.plans.checkpoint import SuperstepCheckpointer
 from louvain_fast_move_cuda_spark.sources.edges import build_graph
 from louvain_fast_move_cuda_spark.sources.transcripts import synthesize_transcripts
@@ -50,8 +53,8 @@ def _assert_same_run(got, want):
     assert (got.levels, got.n_communities) == (want.levels, want.n_communities)
 
 
-def test_louvain_shuffle_paths_match_broadcast_paths(spark):
-    """With ``broadcast_moves_max=0`` every level takes the scale path: the
+def test_louvain_shuffle_paths_match_broadcast_paths(spark, monkeypatch):
+    """With ``VERTEX_STATE_MAX=0`` every level takes the scale path: the
     vertex state is carried on the edge rows, the move set stays
     distributed (shuffle-joined applies, edge state repartitioned on
     src), Σ_tot is shuffle-joined into the kernel input and the level
@@ -67,12 +70,14 @@ def test_louvain_shuffle_paths_match_broadcast_paths(spark):
         dict(local_finish_max_edges=0, threshold=-1.0, early_stop_limit=3, max_levels=2),
     ):
         res_d = louvain(build_graph(raw, relabel=False), **kw)
-        res_s = louvain(build_graph(raw, relabel=False), broadcast_moves_max=0, **kw)
+        with monkeypatch.context() as mp:
+            mp.setattr(superstep, "VERTEX_STATE_MAX", 0)
+            res_s = louvain(build_graph(raw, relabel=False), **kw)
         assert res_d.levels > 1
         _assert_same_run(res_d, res_s)
 
 
-def test_louvain_non_dense_ids_match_edge_carried(spark):
+def test_louvain_non_dense_ids_match_edge_carried(spark, monkeypatch):
     """Vertex ids ×7 (``build_graph(relabel=False)`` keeps them): the
     driver arrays are sized by the id range, not the vertex count. Every
     placement must equal the edge-carried run: driver state at every
@@ -84,27 +89,28 @@ def test_louvain_non_dense_ids_match_edge_carried(spark):
     g = build_graph(spark.createDataFrame(edges, "a long, b long"), relabel=False)
     n_verts = g.vertices.count()
     assert g.n_nodes > 1000 > n_verts
-    want = louvain(g, broadcast_moves_max=0, local_finish_max_edges=0)
+    monkeypatch.setattr(superstep, "VERTEX_STATE_MAX", 0)
+    want = louvain(g, local_finish_max_edges=0)
     assert want.levels > 1 and all(mt["engine"] == "arrow" for mt in want.metrics)
     for bound, n_nodes in ((5_000_000, g.n_nodes), (1000, g.n_nodes), (1000, n_verts)):
-        got = louvain(
-            replace(g, n_nodes=n_nodes), broadcast_moves_max=bound, local_finish_max_edges=0
-        )
+        monkeypatch.setattr(superstep, "VERTEX_STATE_MAX", bound)
+        got = louvain(replace(g, n_nodes=n_nodes), local_finish_max_edges=0)
         _assert_same_run(got, want)
+    monkeypatch.undo()
     loc = louvain(g)
     assert all(mt["engine"] == "local" for mt in loc.metrics)
     assert _labels(loc) == _labels(want)
     assert (loc.modularity, loc.levels) == (want.modularity, want.levels)
 
 
-def test_local_finish_matches_distributed(spark):
+def test_local_finish_matches_distributed(spark, monkeypatch):
     """One level loop, two placements for a level's edges: in this process
     (every level from level 0, the default here) and on Spark
     (``local_finish_max_edges=0``). Both run the same move kernel, and on
     integer-weight graphs every partial sum is exact, so the runs must be
     the same bit for bit: labels, Q, levels and every round's record. So
     must the edge-carried -> in-process hand-off: level 0 edge-carried
-    (``broadcast_moves_max=0``, one edge too many for this process), every
+    (``VERTEX_STATE_MAX=0``, one edge too many for this process), every
     later level in this process."""
     edges = powerlaw_graph(n=250, m_attach=2, seed=11)
     raw = spark.createDataFrame(edges, "a long, b long")
@@ -115,7 +121,8 @@ def test_local_finish_matches_distributed(spark):
     assert all(mt["engine"] == "arrow" for mt in res_dist.metrics)
     _assert_same_run(res_loc, res_dist)
     g = build_graph(raw, relabel=False)
-    res_hand = louvain(g, broadcast_moves_max=0, local_finish_max_edges=g.edges.count() - 1)
+    monkeypatch.setattr(superstep, "VERTEX_STATE_MAX", 0)
+    res_hand = louvain(g, local_finish_max_edges=g.edges.count() - 1)
     assert {mt["engine"] for mt in res_hand.metrics if mt["level"] == 0} == {"arrow"}
     assert {mt["engine"] for mt in res_hand.metrics if mt["level"] > 0} == {"local"}
     _assert_same_run(res_hand, res_dist)
@@ -133,6 +140,86 @@ def test_max_levels_holds_in_every_placement(spark):
     assert want.levels == 2
     assert all(mt["engine"] == "local" for mt in got.metrics)
     _assert_same_run(got, want)
+
+
+def test_max_levels_below_one_raises_and_edge_carried_stop_builds_nothing(spark, tmp_path):
+    """``max_levels`` below 1 raises. A checkpointed run (every level
+    edge-carried) with ``max_levels=1`` stops before it builds or saves
+    level 1's state: only level 0 is saved, with no vertex table, and the
+    run is the driver placement's bit for bit, ``levels == 2`` included."""
+    edges = powerlaw_graph(n=250, m_attach=2, seed=11)
+    g = build_graph(spark.createDataFrame(edges, "a long, b long"), relabel=False)
+    for bad in (0, -1):
+        with pytest.raises(ValueError, match="max_levels"):
+            louvain(g, max_levels=bad)
+    ckpt_dir = str(tmp_path / "ckpt")
+    got = louvain(g, max_levels=1, checkpointer=SuperstepCheckpointer(ckpt_dir))
+    want = louvain(g, max_levels=1, local_finish_max_edges=0)
+    assert os.listdir(ckpt_dir) == ["level=0"]
+    assert glob.glob(os.path.join(ckpt_dir, "level=0/round=*/edges_state"))
+    assert not glob.glob(os.path.join(ckpt_dir, "level=*/round=*/vertices"))
+    assert want.levels == 2
+    _assert_same_run(got, want)
+
+
+def test_vertex_state_bound_places_every_operator(spark, monkeypatch):
+    """``plans/superstep.py::VERTEX_STATE_MAX`` bounds the driver state of
+    all four iterative operators. Moved to 0 by one monkeypatch, Louvain
+    (Spark placement asked for) runs every level edge-carried instead of
+    on ``_SparkLevel``, and PageRank, CC and LPA run ``supersteps``
+    instead of the driver placement; every output equals the one at the
+    default bound."""
+    # by module path: the package re-exports functions named like modules
+    components, labelprop, pagerank, louvain_mod = (
+        importlib.import_module(f"louvain_fast_move_cuda_spark.operators.{name}")
+        for name in ("components", "labelprop", "pagerank", "louvain")
+    )
+
+    edges = powerlaw_graph(n=250, m_attach=2, seed=11)
+    g = build_graph(spark.createDataFrame(edges, "a long, b long"), relabel=False)
+    placed = []
+
+    class SpyLevel(louvain_mod._SparkLevel):
+        def __init__(self, *args):
+            placed.append("_SparkLevel")
+            super().__init__(*args)
+
+    def spy(real):
+        def run(name, *args, **kw):
+            placed.append(name)
+            return real(name, *args, **kw)
+
+        return run
+
+    monkeypatch.setattr(louvain_mod, "_SparkLevel", SpyLevel)
+    for mod in (pagerank, components, labelprop):
+        monkeypatch.setattr(mod, "supersteps", spy(mod.supersteps))
+
+    def run_all():
+        placed.clear()
+        res = louvain(g, local_finish_max_edges=0)
+        out = [
+            sorted(map(tuple, run.collect()))
+            for run in (
+                pagerank.pagerank(g, max_iter=5, tol=0.0, local_max_edges=0),
+                components.connected_components(g, local_max_edges=0),
+                labelprop.label_propagation(g, max_iter=3, local_max_edges=0),
+            )
+        ]
+        return res, out, set(placed)
+
+    want, want_out, want_placed = run_all()
+    monkeypatch.setattr(superstep, "VERTEX_STATE_MAX", 0)
+    got, got_out, got_placed = run_all()
+    assert want_placed == {"_SparkLevel"}
+    assert got_placed == {"pagerank", "cc", "lpa"}
+    assert want.levels > 1
+    _assert_same_run(got, want)
+    (want_pr, *want_labels), (got_pr, *got_labels) = want_out, got_out
+    assert got_labels == want_labels
+    assert [i for i, _ in got_pr] == [i for i, _ in want_pr]
+    for (_, a), (_, b) in zip(got_pr, want_pr):
+        assert a == pytest.approx(b, abs=1e-12)
 
 
 def test_resume_from_checkpoint_identical_labels(spark, tmp_path):

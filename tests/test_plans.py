@@ -140,26 +140,43 @@ def test_skew_trigger_scales_with_partition_load():
     assert not skewed_degree_trigger(10.0, 0.0, 32)  # empty graph: no-op
 
 
-def test_lpa_hub_graph_salted_identical_to_unsalted(spark, tmp_path):
+def test_lpa_hub_graph_salted_identical_to_unsalted(spark, tmp_path, monkeypatch):
     """A 2*10^4-degree hub star + ring: the salted vote aggregation must
     produce bit-identical labels to the single-stage plan (the DataFrame
-    loop a checkpointer selects) and to the driver placement."""
-    from louvain_fast_move_cuda_spark.operators.labelprop import label_propagation
+    loop a checkpointer selects) and to the driver placement. The
+    trigger alone picks the plan: at 4 shuffle partitions the hub is under
+    4x a partition's load (single-stage), at 64 it is over (salted)."""
+    from louvain_fast_move_cuda_spark.operators import labelprop
     from louvain_fast_move_cuda_spark.plans.checkpoint import VertexIterationCheckpointer
+    from louvain_fast_move_cuda_spark.plans.conf import sql_conf
+    from louvain_fast_move_cuda_spark.plans.skew import salted_sum_by_key, skewed_degree_trigger
     from louvain_fast_move_cuda_spark.sources.edges import build_graph
 
     n = 20_000
     und = [(0, i) for i in range(1, n)] + [(i, i + 1) for i in range(1, n - 1)]
     g = build_graph(spark.createDataFrame(und, "a long, b long"), relabel=False)
-    runs = [
-        label_propagation(
-            g, max_iter=2, skew_salt_buckets=b,
-            checkpointer=VertexIterationCheckpointer(str(tmp_path / f"b{b}"), algo="lpa"),
-        )
-        for b in (0, 8)
-    ] + [label_propagation(g, max_iter=2, local_max_edges=0)]
-    plain, salted, driver = (sorted(map(tuple, r.collect())) for r in runs)
-    assert plain == salted == driver
+    mx, tot = g.vertices.agg(F.max("k"), F.sum("k")).collect()[0]
+    salted_calls = []
+
+    def spy(*args, **kw):
+        salted_calls.append(1)
+        return salted_sum_by_key(*args, **kw)
+
+    monkeypatch.setattr(labelprop, "salted_sum_by_key", spy)
+
+    def labels(**kw):
+        return sorted(map(tuple, labelprop.label_propagation(g, max_iter=2, **kw).collect()))
+
+    runs = []
+    for npart, skewed in ((4, False), (64, True)):
+        assert skewed_degree_trigger(float(mx), float(tot), npart) is skewed
+        salted_calls.clear()
+        with sql_conf(spark, {"spark.sql.shuffle.partitions": str(npart)}):
+            ck = VertexIterationCheckpointer(str(tmp_path / f"p{npart}"), algo="lpa")
+            runs.append(labels(checkpointer=ck))
+        assert bool(salted_calls) is skewed
+    plain, salted = runs
+    assert plain == salted == labels(local_max_edges=0)
 
 
 def test_iceberg_seam_detection(spark):
