@@ -47,6 +47,7 @@ from pyspark.sql import functions as F
 
 from ..plans.observe import observed
 from ..plans.superstep import (
+    LOCAL_MAX_EDGES,
     broadcast_gather,
     edge_arrays,
     placement,
@@ -166,7 +167,7 @@ def _warn_unstable(rounds: int, max_iter: int, kind: str) -> None:
 def connected_components(
     graph: GraphTables,
     max_iter: int = 50,
-    local_max_edges: int = 5_000_000,
+    local_max_edges: int = LOCAL_MAX_EDGES,
     checkpointer=None,
 ) -> DataFrame:
     """Returns (id: long, component: long) — component = min vertex id reachable.

@@ -243,10 +243,10 @@ def sequence_pack(
 
     Scale: the only non-local step is the exclusive prefix sum of doc
     lengths, which runs as the two-level distributed scan
-    (operators/scan.py — thrust::exclusive_scan's cluster twin,
+    (plans/scan.py — thrust::exclusive_scan's cluster twin,
     graph.cuh:87); pack arithmetic is then a pure projection.
     """
-    from .scan import prefix_sum
+    from ..plans.scan import prefix_sum
 
     n_tok = F.size(
         F.regexp_extract_all(F.lower(F.col(text_col)), F.lit(_TOK_PATTERN), F.lit(0))

@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 from ..plans.observe import observed
 from ..plans.skew import salted_sum_by_key, skewed_degree_trigger
 from ..plans.superstep import (
+    LOCAL_MAX_EDGES,
     broadcast_gather,
     edge_arrays,
     placement,
@@ -123,7 +124,7 @@ def _driver_lpa(graph: GraphTables, ids, max_iter: int, npart: int) -> np.ndarra
 def label_propagation(
     graph: GraphTables,
     max_iter: int = 10,
-    local_max_edges: int = 5_000_000,
+    local_max_edges: int = LOCAL_MAX_EDGES,
     checkpointer=None,
 ) -> DataFrame:
     """Returns (id: long, label: long). Stops early at a fixpoint.

@@ -82,7 +82,6 @@ from __future__ import annotations
 
 import time
 from dataclasses import dataclass, field
-from functools import cached_property
 
 import numpy as np
 from pyspark.sql import DataFrame, Window
@@ -244,22 +243,17 @@ def _driver_rounds(place, k, m, level, threshold, early_stop_limit, metrics):
 
 class _SparkLevel:
     """A level's ``(src, dst, w)`` edges on Spark, ``ne`` of them: the
-    Spark placement of the level loop."""
+    Spark placement of the level loop. Built and run under
+    ``superstep.vertex_state_scope`` (AQE off), where a lazy checkpoint
+    of a shuffle runs no job of its own: the static ``(src, dst, w,
+    k_src)`` edges (:func:`_static_edges`) build inside round 0's job,
+    and the coarse edges inside the coarsen's count."""
 
     engine = "arrow"
 
     def __init__(self, edges: DataFrame, ne: int, npart: int):
         self.edges, self.ne, self.npart = edges, ne, npart
-
-    @cached_property
-    def static(self) -> DataFrame:
-        """The static ``(src, dst, w, k_src)`` edges (:func:`_static_edges`),
-        checkpointed lazily; round 0's job materializes them. Built on
-        first use: under AQE even a lazy checkpoint of a shuffle runs
-        its map stage, which a level that never runs must not pay."""
-        return _static_edges(self.edges, _level_width(self.ne, self.npart)).localCheckpoint(
-            eager=False
-        )
+        self.static = _static_edges(edges, _level_width(ne, npart)).localCheckpoint(eager=False)
 
     def round(self, comm, ctot, moved, m, level, rnd):
         """One Spark job: the state as one broadcast, one mapInArrow over
@@ -374,20 +368,29 @@ def _flatten(labels, ids, new):
         import pyarrow as pa
 
         keep = new >= 0
-        map_df = labels.sparkSession.createDataFrame(
+        vmap = labels.sparkSession.createDataFrame(
             pa.table({"community": ids[keep], "_final": new[keep]})
         )
-        return (
-            labels.join(F.broadcast(map_df), "community")
-            .select("orig_id", F.col("_final").alias("community"))
-            .localCheckpoint(eager=False)
-        )
+        return _flatten_table(labels, F.broadcast(vmap))
     if labels is None:
         orig, lab = ids, new
     else:
         orig, lab = labels[0], new[np.searchsorted(ids, labels[1])]
     keep = lab >= 0
     return orig[keep], lab[keep]
+
+
+def _flatten_table(labels: DataFrame, vmap: DataFrame) -> DataFrame:
+    """The flatten of a distributed ``(orig_id, community)`` table: ONE
+    map join with ``vmap`` = (community, _final), the level's vertex ->
+    next-level id map (a vertex without an entry is dropped; its
+    community has no weight), checkpointed lazily — its first consumer
+    materializes it. The caller decides whether ``vmap`` is broadcast."""
+    return (
+        labels.join(vmap, "community")
+        .select("orig_id", F.col("_final").alias("community"))
+        .localCheckpoint(eager=False)
+    )
 
 
 def _start_state(est: DataFrame, eager: bool, m: float, name: str):
@@ -404,21 +407,21 @@ def _start_state(est: DataFrame, eager: bool, m: float, name: str):
 
 
 def _dense_relabel(comms: DataFrame, n_max: int, npart: int):
-    """((comm, newid), n): dense 0-based ranks of the distinct ``comm``
-    ids in ascending id order (phaseAggregation.cuh:19-52), and their
-    count. ``n_max`` bounds the row count: a table within
-    ``VERTEX_STATE_MAX`` is ranked on the driver (one collect instead of
+    """((id, community), n): dense 0-based ranks of the distinct ``id``s
+    of ``comms`` in ascending id order (phaseAggregation.cuh:19-52), as
+    the labels table :func:`aggregate_graph` takes, and their count.
+    ``n_max`` bounds the row count: a table within ``VERTEX_STATE_MAX`` is ranked on the driver (one collect instead of
     a range shuffle); above that, :func:`assign_contiguous_ids` ranks it
     with a range partitioning sized to ``n_max`` rows, and its
     per-partition counts give ``n`` for free."""
     if n_max <= superstep.VERTEX_STATE_MAX:
         import pyarrow as pa
 
-        ids = np.sort(comms.toArrow().column("comm").to_numpy())
-        table = pa.table({"comm": ids, "newid": np.arange(len(ids), dtype=np.int64)})
+        ids = np.sort(comms.toArrow().column("id").to_numpy())
+        table = pa.table({"id": ids, "community": np.arange(len(ids), dtype=np.int64)})
         return comms.sparkSession.createDataFrame(table), len(ids)
     return assign_contiguous_ids(
-        comms, ["comm"], id_col="newid", assume_distinct=True, with_count=True,
+        comms, ["id"], id_col="community", assume_distinct=True, with_count=True,
         num_partitions=max(1, min(npart, -(-n_max // MIN_ROWS_PER_PARTITION))),
     )
 
@@ -452,12 +455,12 @@ def _refine_result(graph: GraphTables, res: LouvainResult, npart: int) -> Louvai
 
     labels = refine_partition(graph, res.labels)
     rl, _ = _dense_relabel(
-        labels.select(F.col("community").alias("comm")).distinct(),
+        labels.select(F.col("community").alias("id")).distinct(),
         graph.n_nodes, npart,
     )
     labels = (
-        labels.join(rl.withColumnRenamed("comm", "community"), "community")
-        .select("orig_id", F.col("newid").alias("community"))
+        labels.withColumnRenamed("community", "id").join(rl, "id")
+        .select("orig_id", "community")
         .localCheckpoint(eager=True)
     )
     ls = labels.select(F.col("orig_id").alias("src"), F.col("community").alias("cs"))
@@ -515,13 +518,17 @@ def aggregate_graph(edges: DataFrame, labels: DataFrame) -> DataFrame:
 
     ``edges``: (src, dst, weight) directed; ``labels``: (id, community).
     Returns (src, dst, weight) over community ids.
+
+    Both endpoints join the SAME ``labels`` subplan, by a join condition
+    rather than a per-endpoint rename, so Spark's exchange reuse builds
+    and ships it once: a broadcast-hinted ``labels`` (hint it on the
+    table itself) is one broadcast per coarsen.
     """
-    ls = labels.select(F.col("id").alias("src"), F.col("community").alias("cs"))
-    ld = labels.select(F.col("id").alias("dst"), F.col("community").alias("cd"))
     return (
-        edges.join(ls, "src")
-        .join(ld, "dst")
-        .groupBy(F.col("cs").alias("src"), F.col("cd").alias("dst"))
+        edges.join(labels, F.col("src") == F.col("id"))
+        .select(F.col("community").alias("cs"), "dst", "weight")
+        .join(labels, F.col("dst") == F.col("id"))
+        .groupBy(F.col("cs").alias("src"), F.col("community").alias("dst"))
         .agg(F.sum("weight").alias("weight"))
     )
 
@@ -531,7 +538,7 @@ def louvain(
     threshold: float = MODULARITY_CONVERGED_THRESHOLD,
     early_stop_limit: int = EARLY_STOP_LIMIT,
     checkpointer=None,
-    local_finish_max_edges: int = 5_000_000,
+    local_finish_max_edges: int = superstep.LOCAL_MAX_EDGES,
     max_levels: int | None = None,
     refine: bool = False,
 ) -> LouvainResult:
@@ -592,9 +599,6 @@ def louvain(
 
     level = 0
     metrics: list[dict] = []
-    resume_round = None
-    resume_q_level_start = None
-    resume_opt_done = False
     # the level about to start: its (src, dst, w) edges and a bound on its
     # vertex-id range; ``ids``/``k`` once they are known on the driver,
     # ``level_ne`` once counted. ``est`` is set instead while levels run
@@ -619,21 +623,6 @@ def louvain(
             state.edges_state.repartition(npart, "src"), True, m, f"louvain L{level} resume"
         )
         labels = labels.localCheckpoint(eager=True)
-        if state.round >= 0:
-            # was the checkpointed round the LAST round of its level? If so,
-            # resuming must NOT score another round (it would apply moves the
-            # original run never applied) — jump straight to aggregation.
-            mt = state.metric or {}
-            inner_done = (
-                mt.get("n_moves") == 0
-                or (mt.get("dq") is not None and mt["dq"] <= threshold)
-                or state.round + 1 > early_stop_limit
-            )
-            if inner_done:
-                resume_opt_done = True
-            else:
-                resume_round = state.round + 1
-            resume_q_level_start = state.q_level_start
 
     # the in-process placement is only entered at a clean level start
     # (identity comms), which never follows a resume: it is off while
@@ -663,11 +652,15 @@ def louvain(
                 break
             if ids is not None and ids[0] >= 0 and ids[-1] < bound:
                 # vertex state on the driver, edges on Spark, until a coarse
-                # level fits in this process
-                labels, q, n_best, level, nxt = _driver_levels(
-                    _SparkLevel(edges, level_ne, npart), ids, k, labels, level, m, threshold,
-                    early_stop_limit, max_levels, local_max, metrics,
-                )
+                # level fits in this process. AQE off, as for the vertex
+                # programs' driver state: the lazy checkpoints of the static
+                # and the coarse edges then build inside the job that reads
+                # them instead of running their map stage as a job of its own
+                with superstep.vertex_state_scope(spark):
+                    labels, q, n_best, level, nxt = _driver_levels(
+                        _SparkLevel(edges, level_ne, npart), ids, k, labels, level, m,
+                        threshold, early_stop_limit, max_levels, local_max, metrics,
+                    )
                 if nxt is None:
                     break
                 edges, ids, k, level_ne = nxt
@@ -684,9 +677,16 @@ def louvain(
                 _level_edge_state(edges, npart), True, m, f"louvain L{level} init"
             )
 
-        # level_ne: this level's directed edge count, observed in the scan
-        # that gave its Q (or in the coarsen step)
-        q_level_start = q if resume_q_level_start is None else resume_q_level_start
+        if state is None:
+            rnd, done, q_level_start = 0, False, q
+        else:
+            # resumed after the saved round (−1: its level's start), whose
+            # saved stop test says if the level's rounds are over, as
+            # plans/superstep.py::supersteps resumes the vertex programs
+            rnd, done, q_level_start = (
+                state.round + 1, bool(state.metric.get("done")), state.q_level_start
+            )
+            state = None
         # scale-adaptive per-level parallelism (guide §2.2/§2.4): shuffle
         # width derives from THIS level's edge count instead of a global
         # constant — coarsened tail levels (a few thousand edges) collapse
@@ -701,10 +701,6 @@ def louvain(
         # at level start communities are singletons so it is at most cur_n
         n_cw = cur_n
         # ================= optimization phase (one level) =================
-        rnd = resume_round if resume_round is not None else 0
-        skip_opt = resume_opt_done  # resumed after the level's last round
-        resume_round = resume_q_level_start = None
-        resume_opt_done = False
         # broadcast-size estimate for the move set: round 0 can move every
         # vertex, later rounds shrink fast — track the previous round's
         # actual n_moves (known for free from the round's action) instead
@@ -712,7 +708,7 @@ def louvain(
         # a shuffle join for every _apply_moves on levels above the
         # threshold even when late-round move sets were tiny
         est_moves = cur_n
-        while not skip_opt:
+        while not done:
             t0 = time.time()
             spark.sparkContext.setJobDescription(f"louvain L{level} R{rnd}")
             q_old = q
@@ -768,11 +764,13 @@ def louvain(
                 moves.unpersist()
             dq = q - q_old
             metrics.append(_round_record(level, rnd, n_moves, q, dq, time.time() - t0))
+            done = bool(n_moves == 0 or dq <= threshold or rnd + 1 > early_stop_limit)
             if checkpointer is not None:
-                checkpointer.save(level, rnd, est, labels, q, q_level_start, cur_n, metrics[-1])
+                # ``done`` is saved for the resume, not put in the records
+                checkpointer.save(
+                    level, rnd, est, labels, q, q_level_start, cur_n, {**metrics[-1], "done": done}
+                )
             rnd += 1
-            if n_moves == 0 or dq <= threshold or rnd > early_stop_limit:
-                break
 
         # ================= aggregation phase ==============================
         spark.sparkContext.setJobDescription(f"louvain agg L{level}")
@@ -783,72 +781,57 @@ def louvain(
         # aggregate per level (guide §2.4: don't recompute what is already
         # partitioned/materialized)
         # the surviving communities are a groupBy output (already
-        # distinct); the relabel counts them for free
+        # distinct); the relabel counts them for free. The flatten map and
+        # both endpoints of the coarse merge join it, broadcast if it fits
         relabel, n_best = _dense_relabel(
-            comm_w.filter(F.col("ctot") > 0).select("comm"), n_cw, npart
+            comm_w.filter(F.col("ctot") > 0).select(F.col("comm").alias("id")), n_cw, npart
         )
-        # flatten labels (P9 / community.h:48-55): orig label -> comm of its
-        # current-graph vertex -> dense coarse id. The vertex -> community
-        # map is read off the edge state (every vertex with an edge is a
-        # src there; isolated vertices own Σ_tot = 0 singletons, which the
-        # relabel drops anyway). Lazy checkpoint: every input is already
-        # cached/checkpointed, so deferring materialization to the first
-        # consumer (checkpointer save or the caller's action on result
-        # labels) drops one job per level without recomputing anything
-        # upstream.
-        # both flatten joins broadcast their small side when it fits: the
-        # vertex map is cur-graph-sized (cur_n rows) and the relabel is
-        # n_best rows — at every level past 0 both are community-counts,
-        # far under the threshold, so the 10^9-row labels table is never
-        # shuffled by the flatten (guide §3.1). The SAME broadcast relabel
-        # subplan feeds the coarsen below.
-        vmap = est.groupBy(F.col("src").alias("community")).agg(F.max("cs").alias("comm"))
+        if n_best <= bound:
+            relabel = F.broadcast(relabel)
+        # flatten labels (P9 / community.h:48-55): the map is the vertex ->
+        # community map read off the edge state (every vertex with an edge
+        # is a src there; isolated vertices own Σ_tot = 0 singletons, which
+        # the relabel drops anyway) joined with the relabel. It has cur_n
+        # rows, broadcast when that fits — at every level past 0 a
+        # community count — so the 10^9-row labels table is never shuffled
+        # by the flatten (guide §3.1).
+        vmap = (
+            est.groupBy("src").agg(F.max("cs").alias("id"))
+            .join(relabel, "id")
+            .select(F.col("src").alias("community"), F.col("community").alias("_final"))
+        )
         if cur_n <= bound:
             vmap = F.broadcast(vmap)
-        rl = relabel  # (comm, newid)
-        if n_best <= bound:
-            rl = F.broadcast(rl)
-        labels = (
-            labels.join(vmap, "community")
-            .join(rl, "comm")
-            .select("orig_id", F.col("newid").alias("community"))
-            .localCheckpoint(eager=False)
-        )
+        labels = _flatten_table(labels, vmap)
         cur_n = n_best  # community-table size for next level's broadcast choice
 
         if not continue_opt:
             break
+        level += 1
+        if max_levels is not None and level >= max_levels:
+            # benchmarking hook: stop after N levels (labels reflect the
+            # partition found so far; Q is exact for that partition),
+            # before the coarse merge is built: nothing would read it
+            break
 
-        # coarsen (A8): relabel both endpoints, merge parallel edges. ONE
-        # relabel subplan joined via conditions, and the merged coarse edge
-        # table is checkpointed FIRST so est / comm_w both derive from the
-        # cached merge instead of re-running the two joins + groupBy per
-        # consumer.
-        coarse = (
-            est.join(rl, F.col("cs") == F.col("comm"))
-            .withColumnRenamed("newid", "nsrc")
-            .drop("comm")
-            .join(rl, F.col("cd") == F.col("comm"))
-            .withColumnRenamed("newid", "ndst")
-            .drop("comm")
-            .groupBy(F.col("nsrc").alias("src"), F.col("ndst").alias("dst"))
-            .agg(F.sum("w").alias("w"))
-        )
-        dump_plan(coarse, "louvain_coarsen")
-        coarse = coarse.localCheckpoint(eager=False)
+        # coarsen (A8) by the one edge merge, checkpointed FIRST so est /
+        # comm_w both derive from the cached merge instead of re-running the
+        # two joins + groupBy per consumer
+        merge = aggregate_graph(
+            est.select(F.col("cs").alias("src"), F.col("cd").alias("dst"), F.col("w").alias("weight")),
+            relabel,
+        ).withColumnRenamed("weight", "w")
+        coarse = merge.localCheckpoint(eager=False)
         # materialize the merge with an observed count (the job an eager
         # checkpoint would have run anyway, but keeping the number): the
         # count IS the next level's edge count, which sizes that level's
         # adaptive width
         level_ne = int(
-            observed(coarse, f"louvain L{level} coarsen", F.count(F.lit(1)).alias("ne"))["ne"]
+            observed(coarse, f"louvain L{level - 1} coarsen", F.count(F.lit(1)).alias("ne"))["ne"]
         )
-        level += 1
-        if max_levels is not None and level >= max_levels:
-            # benchmarking hook: stop after N levels (labels reflect the
-            # partition found so far; Q is exact for that partition),
-            # before the coarse level's state is built or saved
-            break
+        # dumped once it ran: AQE's final plan, which shows the relabel's
+        # broadcast reused by the second endpoint join
+        dump_plan(merge, "louvain_coarsen")
         if checkpointer is None and (n_best <= bound or level_ne <= local_max):
             # the coarse level's state fits the driver: back to the
             # placement decision, with the Q this level ended on

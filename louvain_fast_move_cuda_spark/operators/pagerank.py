@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..plans.superstep import (
+    LOCAL_MAX_EDGES,
     broadcast_gather,
     edge_arrays,
     placement,
@@ -215,7 +216,7 @@ def pagerank(
     alpha: float = 0.85,
     max_iter: int = 100,
     tol: float = 1e-10,
-    local_max_edges: int = 5_000_000,
+    local_max_edges: int = LOCAL_MAX_EDGES,
     checkpointer=None,
 ) -> DataFrame:
     """Returns (id: long, rank: double); Σ rank = 1.

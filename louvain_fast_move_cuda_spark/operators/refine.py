@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..plans.superstep import LOCAL_MAX_EDGES
 from ..sources.edges import GraphTables
 from .components import connected_components
 
@@ -34,7 +35,7 @@ def refine_partition(
     labels: DataFrame,
     id_col: str = "orig_id",
     comm_col: str = "community",
-    local_max_edges: int = 5_000_000,
+    local_max_edges: int = LOCAL_MAX_EDGES,
     max_iter: int = 50,
 ) -> DataFrame:
     """(id_col, comm_col) -> (id_col, comm_col): each input community is

@@ -16,12 +16,16 @@ The Louvain edge state is the whole vertex state: the frontier is its
 its ``k_src`` column, so no vertex table is written.
 
 _META.json records q, q_level_start, the level's vertex count,
-timestamps and per-partition row counts of the edge state
-(lineage/metrics per north_rule).
+timestamps, per-partition row counts of the edge state
+(lineage/metrics per north_rule) and the round's metric record, whose
+``done`` is the stop test the run evaluated after that round: a resume
+reads it instead of re-deriving it, as ``plans/superstep.py::supersteps``
+does for the vertex programs.
 """
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import time
@@ -40,28 +44,48 @@ class SuperstepState:
     q: float
     q_level_start: float
     n_vertices: int  # the level's vertex count
-    metric: dict | None = None  # the saved round's {n_moves, dq, ...} — resume
-    # uses it to decide whether the inner loop had already terminated
+    metric: dict | None = None  # the saved round's {n_moves, dq, ..., done}:
+    # ``done`` says whether that round ended its level's optimization phase
 
 
-def _commit(d: str, meta: dict, key: str, df: DataFrame) -> None:
-    """Add ``df``'s per-partition row counts to ``meta`` under ``key`` and
-    write it as ``d``'s _META.json, the commit marker written last."""
+def _write(d: str, tables: dict[str, DataFrame], meta: dict) -> None:
+    """Write ``tables`` as parquet under ``d``, add the first one's
+    per-partition row counts to ``meta`` as ``<name>_partitions``, and
+    commit ``d`` by writing ``meta`` as its _META.json, last."""
+    for name, df in tables.items():
+        df.write.mode("overwrite").parquet(os.path.join(d, name))
+    name, df = next(iter(tables.items()))
     parts = df.groupBy(F.spark_partition_id().alias("pid")).count().collect()
-    meta[key] = {int(r["pid"]): int(r["count"]) for r in parts}
+    meta[f"{name}_partitions"] = {int(r["pid"]): int(r["count"]) for r in parts}
     tmp = os.path.join(d, "_META.json.tmp")
     with open(tmp, "w") as f:
         json.dump(meta, f)
     os.replace(tmp, os.path.join(d, "_META.json"))  # atomic commit marker
 
 
+def _latest(root: str, keys: tuple[str, ...]):
+    """``(index, dir, meta)`` of the latest committed directory under
+    ``root`` whose path components are ``<key>=<int>`` for ``keys`` in
+    order: of those holding a _META.json, the one whose integers form the
+    largest tuple. A directory without its commit marker (a torn write) is
+    never seen. None when there is none."""
+    pattern = os.path.join(glob.escape(root), *(f"{k}=*" for k in keys), "_META.json")
+    found = []
+    for path in glob.glob(pattern):
+        d = os.path.dirname(path)
+        parts = os.path.relpath(d, root).split(os.sep)
+        found.append((tuple(int(p.split("=", 1)[1]) for p in parts), d))
+    if not found:
+        return None
+    index, d = max(found)
+    with open(os.path.join(d, "_META.json")) as f:
+        return index, d, json.load(f)
+
+
 class SuperstepCheckpointer:
     def __init__(self, root: str):
         self.root = root
         os.makedirs(root, exist_ok=True)
-
-    def _dir(self, level: int, rnd: int) -> str:
-        return os.path.join(self.root, f"level={level}", f"round={rnd}")
 
     def save(
         self,
@@ -74,9 +98,6 @@ class SuperstepCheckpointer:
         n_vertices: int,
         metric: dict | None = None,
     ) -> None:
-        d = self._dir(level, rnd)
-        edges_state.write.mode("overwrite").parquet(os.path.join(d, "edges_state"))
-        labels.write.mode("overwrite").parquet(os.path.join(d, "labels"))
         meta = {
             "level": level,
             "round": rnd,
@@ -86,29 +107,14 @@ class SuperstepCheckpointer:
             "ts": time.time(),
             "metric": metric or {},
         }
-        _commit(d, meta, "edges_state_partitions", edges_state)
+        d = os.path.join(self.root, f"level={level}", f"round={rnd}")
+        _write(d, {"edges_state": edges_state, "labels": labels}, meta)
 
     def load_latest(self, spark: SparkSession) -> SuperstepState | None:
-        best = None
-        if not os.path.isdir(self.root):
+        latest = _latest(self.root, ("level", "round"))
+        if latest is None:
             return None
-        for lv in os.listdir(self.root):
-            if not lv.startswith("level="):
-                continue
-            level = int(lv.split("=")[1])
-            for rd in os.listdir(os.path.join(self.root, lv)):
-                if not rd.startswith("round="):
-                    continue
-                rnd = int(rd.split("=")[1])
-                meta_path = os.path.join(self.root, lv, rd, "_META.json")
-                if os.path.exists(meta_path) and (best is None or (level, rnd) > best):
-                    best = (level, rnd)
-        if best is None:
-            return None
-        level, rnd = best
-        d = self._dir(level, rnd)
-        with open(os.path.join(d, "_META.json")) as f:
-            meta = json.load(f)
+        (level, rnd), d, meta = latest
         return SuperstepState(
             edges_state=spark.read.parquet(os.path.join(d, "edges_state")),
             labels=spark.read.parquet(os.path.join(d, "labels")),
@@ -140,40 +146,25 @@ class VertexIterationCheckpointer:
         self.algo = algo
         os.makedirs(root, exist_ok=True)
 
-    def _dir(self, iteration: int) -> str:
-        return os.path.join(self.root, f"iter={iteration}")
-
     def save(self, iteration: int, state: DataFrame, metric: dict | None = None) -> None:
-        d = self._dir(iteration)
-        state.write.mode("overwrite").parquet(os.path.join(d, "state"))
         meta = {
             "algo": self.algo,
             "iteration": iteration,
             "ts": time.time(),
             "metric": metric or {},
         }
-        _commit(d, meta, "state_partitions", state)
+        d = os.path.join(self.root, f"iter={iteration}")
+        _write(d, {"state": state}, meta)
 
     def load_latest(self, spark: SparkSession):
         """-> (iteration, state DataFrame, metric dict) or None."""
-        best = None
-        if not os.path.isdir(self.root):
+        latest = _latest(self.root, ("iter",))
+        if latest is None:
             return None
-        for it in os.listdir(self.root):
-            if not it.startswith("iter="):
-                continue
-            iteration = int(it.split("=")[1])
-            meta_path = os.path.join(self.root, it, "_META.json")
-            if os.path.exists(meta_path) and (best is None or iteration > best):
-                best = iteration
-        if best is None:
-            return None
-        d = self._dir(best)
-        with open(os.path.join(d, "_META.json")) as f:
-            meta = json.load(f)
+        (iteration,), d, meta = latest
         if meta.get("algo") != self.algo:
             raise ValueError(
                 f"checkpoint dir {self.root!r} belongs to algo {meta.get('algo')!r}, "
                 f"not {self.algo!r}"
             )
-        return best, spark.read.parquet(os.path.join(d, "state")), meta.get("metric") or {}
+        return iteration, spark.read.parquet(os.path.join(d, "state")), meta.get("metric") or {}

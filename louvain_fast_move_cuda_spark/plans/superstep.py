@@ -37,6 +37,10 @@ from .debug import dump_plan
 # the vertex programs' placement and by every size test of Louvain
 # (operators/louvain.py): one constant bounds all four iterative operators
 VERTEX_STATE_MAX = 5_000_000
+# the default directed edge count up to which an iterative operator runs in
+# this process (Louvain's ``local_finish_max_edges``, the vertex programs'
+# and the refine's ``local_max_edges``): one number for all of them
+LOCAL_MAX_EDGES = 5_000_000
 
 
 def supersteps(name, state, step, measure, done, max_iter, checkpointer=None, metric=None):

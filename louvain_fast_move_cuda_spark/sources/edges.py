@@ -21,6 +21,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..plans.scan import _exclusive_scan
+
 
 def assign_contiguous_ids(
     df: DataFrame,
@@ -33,16 +35,17 @@ def assign_contiguous_ids(
 ):
     """Order-preserving dense relabel: distinct key -> rank (0-based long).
 
-    Scale-correct equivalent of `zipWithIndex`: range-partition the distinct
-    keys, take a *local* row_number per partition, collect only the per-
-    partition counts (N rows) to the driver, and add exclusive-scan offsets
-    back via a broadcast join. No global single-partition window, no RDDs.
+    Scale-correct equivalent of `zipWithIndex`: the rank is the exclusive
+    prefix sum of a constant 1 in ``cols`` order, run by the engine's one
+    two-level scan (plans/scan.py) — a range shuffle, a local window per
+    partition and per-partition totals. No global single-partition
+    window, no RDDs.
 
     ``assume_distinct``: the caller guarantees ``df.select(cols)`` has no
     duplicate rows (e.g. it is a groupBy output) — skips the dedup shuffle.
-    ``with_count``: also return the total key count (known for free from
-    the per-partition counts) as ``(mapping_df, n)`` — callers needing the
-    cardinality then skip a separate ``.count()`` job.
+    ``with_count``: also return the total key count (the scan's grand
+    total) as ``(mapping_df, n)`` — callers needing the cardinality then
+    skip a separate ``.count()`` job.
 
     ``carry_all`` (requires ``assume_distinct``): rank the FULL rows of
     ``df`` instead of a key projection, returning every input column plus
@@ -53,38 +56,13 @@ def assign_contiguous_ids(
 
     Returns a mapping DataFrame: ``cols..., id_col`` (or ``(df, n)``).
     """
-    spark = df.sparkSession
-    if num_partitions is None:
-        num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-
     if carry_all:
         assert assume_distinct, "carry_all requires key-unique rows"
         keys = df
     else:
         keys = df.select(*cols) if assume_distinct else df.select(*cols).distinct()
-    ranged = keys.repartitionByRange(num_partitions, *cols).withColumn(
-        "_pid", F.spark_partition_id()
-    )
-    w = Window.partitionBy("_pid").orderBy(*cols)
-    local = ranged.withColumn("_rn", F.row_number().over(w) - 1)
-    # checkpoint so the counts we collect match the partitioning the join
-    # sees: the count job materializes it, the join reads the same blocks,
-    # and nothing is left in the session's cache
-    local = local.localCheckpoint(eager=False)
-    counts = {r["_pid"]: r["cnt"] for r in local.groupBy("_pid").agg(F.count("*").alias("cnt")).collect()}
-    offsets, acc = [], 0
-    for pid in sorted(counts):
-        offsets.append((pid, acc))
-        acc += counts[pid]
-    off_df = spark.createDataFrame(offsets, schema="_pid int, _off long")
-    keep = keys.columns if carry_all else list(cols)
-    out = (
-        local.join(F.broadcast(off_df), "_pid")
-        .select(*keep, (F.col("_rn") + F.col("_off")).cast("long").alias(id_col))
-    )
-    if with_count:
-        return out, acc
-    return out
+    out, n = _exclusive_scan(keys, cols, F.lit(1), id_col, num_partitions)
+    return (out, n) if with_count else out
 
 
 def derive_edges_from_transcripts(transcripts: DataFrame) -> DataFrame:

@@ -49,6 +49,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
 from ..operators.components import connected_components
+from ..plans.superstep import LOCAL_MAX_EDGES
 from ..sources.edges import build_graph
 
 EDGE_STREAM_SCHEMA = StructType(
@@ -180,7 +181,7 @@ def run_incremental_cc(
     ck_dir: str,
     available_now: bool = True,
     max_files_per_trigger: int = 1,
-    local_max_edges: int = 5_000_000,
+    local_max_edges: int = LOCAL_MAX_EDGES,
 ) -> None:
     """Replay the edge-file stream in ``in_dir`` through the incremental
     CC maintainer; blocks until the available data is drained. Re-running

@@ -142,7 +142,7 @@ def test_lang_confusion_counts(spark):
 
 
 def test_prefix_sum_matches_serial_scan_across_partitions(spark):
-    from louvain_fast_move_cuda_spark.operators.scan import prefix_sum
+    from louvain_fast_move_cuda_spark.plans.scan import prefix_sum
 
     vals = [(i, (i * 7 + 3) % 11) for i in range(200)]
     df = spark.createDataFrame(vals, "k long, v long")

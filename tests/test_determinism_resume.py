@@ -5,6 +5,7 @@ import glob
 import importlib
 import math
 import os
+import shutil
 from dataclasses import replace
 
 import pytest
@@ -12,11 +13,17 @@ from pyspark.sql import functions as F
 
 from louvain_fast_move_cuda_spark.operators.louvain import louvain
 from louvain_fast_move_cuda_spark.plans import superstep
-from louvain_fast_move_cuda_spark.plans.checkpoint import SuperstepCheckpointer
+from louvain_fast_move_cuda_spark.plans.checkpoint import (
+    SuperstepCheckpointer,
+    VertexIterationCheckpointer,
+)
 from louvain_fast_move_cuda_spark.sources.edges import build_graph
 from louvain_fast_move_cuda_spark.sources.transcripts import synthesize_transcripts
 
 from oracle import powerlaw_graph
+
+# by module path: the package re-exports the function named like the module
+louvain_mod = importlib.import_module("louvain_fast_move_cuda_spark.operators.louvain")
 
 
 def _labels(res):
@@ -142,24 +149,36 @@ def test_max_levels_holds_in_every_placement(spark):
     _assert_same_run(got, want)
 
 
-def test_max_levels_below_one_raises_and_edge_carried_stop_builds_nothing(spark, tmp_path):
+def test_max_levels_below_one_raises_and_edge_carried_stop_builds_nothing(
+    spark, tmp_path, monkeypatch
+):
     """``max_levels`` below 1 raises. A checkpointed run (every level
-    edge-carried) with ``max_levels=1`` stops before it builds or saves
-    level 1's state: only level 0 is saved, with no vertex table, and the
-    run is the driver placement's bit for bit, ``levels == 2`` included."""
+    edge-carried) with ``max_levels=1`` stops before it builds the coarse
+    merge (no ``aggregate_graph`` call) or saves level 1's state: only
+    level 0 is saved, with no vertex table, and the run is the driver
+    placement's bit for bit, ``levels == 2`` included. Resumed with
+    ``max_levels=2``, the same run builds that merge once."""
     edges = powerlaw_graph(n=250, m_attach=2, seed=11)
     g = build_graph(spark.createDataFrame(edges, "a long, b long"), relabel=False)
     for bad in (0, -1):
         with pytest.raises(ValueError, match="max_levels"):
             louvain(g, max_levels=bad)
+    merges = []
+    real = louvain_mod.aggregate_graph
+    monkeypatch.setattr(
+        louvain_mod, "aggregate_graph", lambda *args: merges.append(1) or real(*args)
+    )
     ckpt_dir = str(tmp_path / "ckpt")
     got = louvain(g, max_levels=1, checkpointer=SuperstepCheckpointer(ckpt_dir))
+    assert merges == []
     want = louvain(g, max_levels=1, local_finish_max_edges=0)
     assert os.listdir(ckpt_dir) == ["level=0"]
     assert glob.glob(os.path.join(ckpt_dir, "level=0/round=*/edges_state"))
     assert not glob.glob(os.path.join(ckpt_dir, "level=*/round=*/vertices"))
     assert want.levels == 2
     _assert_same_run(got, want)
+    louvain(g, max_levels=2, checkpointer=SuperstepCheckpointer(ckpt_dir))
+    assert merges == [1]
 
 
 def test_vertex_state_bound_places_every_operator(spark, monkeypatch):
@@ -238,12 +257,53 @@ def test_resume_from_checkpoint_identical_labels(spark, tmp_path):
     assert len(resumed.metrics) < len(full.metrics)
 
 
+def test_resume_reads_the_saved_stop_test(spark, tmp_path):
+    """A resume goes on where the saved run would have: each saved round
+    carries the stop test the run evaluated after it, and the resume reads
+    it instead of re-deriving it. A checkpointed run cut after level 0's
+    last round, which the ΔQ threshold ended, and resumed with that stop
+    off (``threshold=-1.0``) scores no level-0 round: its level-0 labels
+    are the saved run's."""
+    edges = powerlaw_graph(n=150, m_attach=2, seed=4)
+    g = build_graph(spark.createDataFrame(edges, "a long, b long"), relabel=False)
+    ckpt_dir = str(tmp_path / "ckpt")
+    full = louvain(g, checkpointer=SuperstepCheckpointer(ckpt_dir))
+    last = [mt for mt in full.metrics if mt["level"] == 0][-1]
+    assert last["n_moves"] > 0 and last["dq"] <= louvain_mod.MODULARITY_CONVERGED_THRESHOLD
+    for d in glob.glob(os.path.join(ckpt_dir, "level=*")):
+        if os.path.basename(d) != "level=0":
+            shutil.rmtree(d)
+    # the round cap only bounds a resume that would wrongly go on
+    resumed = louvain(
+        g, threshold=-1.0, early_stop_limit=last["round"] + 2, max_levels=1,
+        checkpointer=SuperstepCheckpointer(ckpt_dir),
+    )
+    assert resumed.metrics == []
+    want = louvain(g, max_levels=1, local_finish_max_edges=0)
+    assert _labels(resumed) == _labels(want)
+    assert (resumed.modularity, resumed.levels) == (want.modularity, want.levels)
+
+
 def test_torn_checkpoint_is_invisible(spark, tmp_path):
     """A superstep directory without its _META.json commit marker must be
     ignored by resume (torn-write safety)."""
     root = str(tmp_path / "ckpt")
     os.makedirs(os.path.join(root, "level=3", "round=7"))  # no _META.json
     assert SuperstepCheckpointer(root).load_latest(spark) is None
+
+
+def test_torn_iteration_checkpoint_is_invisible(spark, tmp_path):
+    """The ``iter=<I>`` layout keeps the same commit rule: resume reads the
+    committed iteration with the largest number (10 over 9, a numeric
+    order) and never a later one torn before its _META.json."""
+    root = tmp_path / "ckpt"
+    ck = VertexIterationCheckpointer(str(root), algo="pagerank")
+    assert ck.load_latest(spark) is None
+    for it in (9, 10):
+        ck.save(it, spark.range(it), {"delta": float(it)})
+    os.makedirs(root / "iter=11" / "state")  # no _META.json
+    it, state, metric = ck.load_latest(spark)
+    assert (it, state.count(), metric) == (10, 10, {"delta": 10.0})
 
 
 def test_per_turn_text_equality_under_stable_ordering(spark):

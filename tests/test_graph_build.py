@@ -45,7 +45,7 @@ def test_relabel_and_scan_leave_nothing_cached(spark):
     in a local checkpoint, not in the session's cache: nothing outlives
     the call, and a second derive in the same session recomputes from its
     input and gives the same pairs."""
-    from louvain_fast_move_cuda_spark.operators.scan import prefix_sum
+    from louvain_fast_move_cuda_spark.plans.scan import prefix_sum
 
     spark.catalog.clearCache()
     cache = spark._jsparkSession.sharedState().cacheManager()

@@ -379,10 +379,12 @@ def test_q_of_labels_endpoints(spark):
 
 def test_driver_state_round_is_one_job_and_louvain_repeats(spark):
     """Below the broadcast bound a Louvain round is ONE Spark job: every
-    round r ≥ 1 of level 0 (job description ``louvain L0 R{r}``, the
-    dropped speculative round after the cap included) issues exactly one
-    job. Two runs in one session give bit-identical labels, Q and
-    per-round records, and nothing is left in the session's cache."""
+    round of level 0 (job description ``louvain L0 R{r}``, the dropped
+    speculative round after the cap included; round 0 also builds the
+    static edges) runs exactly one job, and so does the coarsen
+    (``louvain agg L0``). Two runs in one session give bit-identical
+    labels, Q and per-round records, and nothing is left in the
+    session's cache."""
     sc = spark.sparkContext
     spark.catalog.clearCache()
     cache = spark._jsparkSession.sharedState().cacheManager()
@@ -410,5 +412,9 @@ def test_driver_state_round_is_one_job_and_louvain_repeats(spark):
         assert [mt["round"] for mt in res.metrics] == [0, 1, 2, 3, 4]
         for r in range(1, 6):
             assert per_desc.get(f"louvain L0 R{r}") == 1, (r, per_desc)
+        # under the driver-state scope (AQE off) the lazy checkpoints of the
+        # static and the coarse edges build inside the job that reads them
+        assert per_desc.get("louvain L0 R0") == 1, per_desc
+        assert per_desc.get("louvain agg L0") == 1, per_desc
     assert runs[0] == runs[1]
     assert cache.isEmpty()
