@@ -37,7 +37,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..sources.edges import GraphTables
-from .triangles import triangles_per_vertex
+from .triangles import oriented_triangles, triangles_per_vertex
 
 
 def degree_histogram(graph: GraphTables) -> DataFrame:
@@ -183,6 +183,32 @@ def k_core(
     return edges.groupBy(F.col("src").alias("id")).agg(F.count("*").alias("core_degree"))
 
 
+def _apex_degrees(graph: GraphTables) -> DataFrame:
+    """(w, dw): every vertex's degree, the apex side of a wedge."""
+    return graph.edges.groupBy(F.col("src").alias("w")).agg(F.count("*").alias("dw"))
+
+
+def _open_wedges(graph: GraphTables, max_apex_degree: int) -> tuple[DataFrame, DataFrame]:
+    """``(deg, wedges)`` of the capped link predictors: the degree table
+    (w, dw) and one (u, v, dw) row per apex w with 2 <= dw <=
+    ``max_apex_degree`` and neighbours u < v that are not adjacent."""
+    deg = _apex_degrees(graph)
+    apex_ok = deg.filter((F.col("dw") >= 2) & (F.col("dw") <= max_apex_degree))
+    nbrs = graph.edges.select(F.col("src").alias("w"), F.col("dst").alias("n")).join(
+        apex_ok, "w"
+    )
+    wedges = (
+        nbrs.alias("l")
+        .join(nbrs.alias("r"), ["w", "dw"])
+        .filter(F.col("l.n") < F.col("r.n"))
+        .select(F.col("l.n").alias("u"), F.col("r.n").alias("v"), "dw")
+    )
+    canon = graph.edges.filter(F.col("src") < F.col("dst")).select(
+        F.col("src").alias("u"), F.col("dst").alias("v")
+    )
+    return deg, wedges.join(canon, ["u", "v"], "left_anti")
+
+
 def adamic_adar(
     graph: GraphTables, max_apex_degree: int = 64, min_common: int = 1
 ) -> DataFrame:
@@ -199,30 +225,12 @@ def adamic_adar(
     removed — a 100x-scale caller can see what the numbers mean without
     reading the job's config (the k-core truncation-guard philosophy).
     """
-    deg = graph.edges.groupBy(F.col("src").alias("w")).agg(F.count("*").alias("dw"))
-    apex_ok = deg.filter((F.col("dw") >= 2) & (F.col("dw") <= max_apex_degree))
-    nbrs = graph.edges.select(F.col("src").alias("w"), F.col("dst").alias("n")).join(
-        apex_ok, "w"
-    )
-    wedges = (
-        nbrs.alias("l")
-        .join(nbrs.alias("r"), ["w", "dw"])
-        .filter(F.col("l.n") < F.col("r.n"))
-        .select(
-            F.col("l.n").alias("u"),
-            F.col("r.n").alias("v"),
-            (F.lit(1.0) / F.log(F.col("dw").cast("double"))).alias("contrib"),
-        )
-    )
-    canon = graph.edges.filter(F.col("src") < F.col("dst")).select(
-        F.col("src").alias("u"), F.col("dst").alias("v")
-    )
+    _, wedges = _open_wedges(graph, max_apex_degree)
     return (
-        wedges.join(canon, ["u", "v"], "left_anti")
-        .groupBy("u", "v")
+        wedges.groupBy("u", "v")
         .agg(
             F.count("*").alias("common_neighbors"),
-            F.round(F.sum("contrib"), 9).alias("aa_r9"),
+            F.round(F.sum(F.lit(1.0) / F.log(F.col("dw").cast("double"))), 9).alias("aa_r9"),
         )
         .filter(F.col("common_neighbors") >= min_common)
         .withColumn("apex_cap", F.lit(max_apex_degree).cast("int"))
@@ -245,23 +253,9 @@ def jaccard_similarity(
     denominator are integers, so the division is bit-reproducible; r9
     rounding is belt-and-braces for the cross-engine hash.
     """
-    deg = graph.edges.groupBy(F.col("src").alias("w")).agg(F.count("*").alias("dw"))
-    apex_ok = deg.filter((F.col("dw") >= 2) & (F.col("dw") <= max_apex_degree))
-    nbrs = graph.edges.select(F.col("src").alias("w"), F.col("dst").alias("n")).join(
-        apex_ok.select("w"), "w"
-    )
-    wedges = (
-        nbrs.alias("l")
-        .join(nbrs.alias("r"), "w")
-        .filter(F.col("l.n") < F.col("r.n"))
-        .select(F.col("l.n").alias("u"), F.col("r.n").alias("v"))
-    )
-    canon = graph.edges.filter(F.col("src") < F.col("dst")).select(
-        F.col("src").alias("u"), F.col("dst").alias("v")
-    )
+    deg, wedges = _open_wedges(graph, max_apex_degree)
     common = (
-        wedges.join(canon, ["u", "v"], "left_anti")
-        .groupBy("u", "v")
+        wedges.groupBy("u", "v")
         .agg(F.count("*").alias("common_neighbors"))
         .filter(F.col("common_neighbors") >= min_common)
     )
@@ -343,63 +337,27 @@ def adamic_adar_excluded_hubs(
     same ``max_apex_degree``. Tiny by construction (hubs are the tail of
     the degree distribution), so a caller can collect or join it to
     qualify the scores."""
-    deg = graph.edges.groupBy(F.col("src").alias("w")).agg(F.count("*").alias("dw"))
-    return deg.filter(F.col("dw") > max_apex_degree)
+    return _apex_degrees(graph).filter(F.col("dw") > max_apex_degree)
 
 
 def edge_support(edges: DataFrame) -> DataFrame:
     """(src, dst, support: long) — per-edge triangle support over a
     canonical (src < dst) edge table. Edges in no triangle emit no row.
 
-    Same degree-ordered orientation as triangles.py::_oriented (out-
-    degree O(sqrt(m)) per vertex, hub-safe), but keeps the wedge's three
-    vertex ids so each closed wedge can be exploded back into its three
-    canonical edges and counted — one triangle contributes exactly one
-    wedge row (the orientation is a DAG: the wedge sits at the lowest-
-    ranked vertex), hence exactly +1 support to each of its edges.
+    Each triangle of :func:`oriented_triangles` (hub-safe
+    O(sqrt(m)) out-degrees) is listed once, so exploding its row into
+    its three canonical edges adds exactly +1 support to each.
     """
-    deg = (
-        edges.select(F.col("src").alias("v"))
-        .unionByName(edges.select(F.col("dst").alias("v")))
-        .groupBy("v")
-        .agg(F.count("*").alias("deg"))
+    tri = oriented_triangles(edges)[1]
+
+    def _edge(p, q):
+        return F.struct(F.least(p, q).alias("src"), F.greatest(p, q).alias("dst"))
+
+    return (
+        tri.select(F.explode(F.array(_edge("a", "b"), _edge("b", "c"), _edge("a", "c"))).alias("e"))
+        .groupBy("e.src", "e.dst")
+        .agg(F.count("*").alias("support"))
     )
-    e = edges.join(
-        deg.select(F.col("v").alias("src"), F.col("deg").alias("ds")), "src"
-    ).join(deg.select(F.col("v").alias("dst"), F.col("deg").alias("dd")), "dst")
-    lo = (F.col("ds") < F.col("dd")) | (
-        (F.col("ds") == F.col("dd")) & (F.col("src") < F.col("dst"))
-    )
-    o = (
-        e.filter(lo)
-        .select(F.col("src").alias("a"), F.col("dst").alias("b"))
-        .unionByName(
-            e.filter(~lo).select(F.col("dst").alias("a"), F.col("src").alias("b"))
-        )
-    )
-    wedges = (
-        o.alias("e1")
-        .join(o.alias("e2"), F.col("e1.b") == F.col("e2.a"))
-        .select(
-            F.col("e1.a").alias("x"),
-            F.col("e1.b").alias("apex"),
-            F.col("e2.b").alias("y"),
-        )
-    )
-    closing = o.select(F.col("a").alias("x"), F.col("b").alias("y")).unionByName(
-        o.select(F.col("b").alias("x"), F.col("a").alias("y"))
-    )
-    tri = wedges.join(closing, ["x", "y"], "left_semi")
-    pairs = (
-        tri.select(F.least("x", "apex").alias("src"), F.greatest("x", "apex").alias("dst"))
-        .unionByName(
-            tri.select(F.least("apex", "y").alias("src"), F.greatest("apex", "y").alias("dst"))
-        )
-        .unionByName(
-            tri.select(F.least("x", "y").alias("src"), F.greatest("x", "y").alias("dst"))
-        )
-    )
-    return pairs.groupBy("src", "dst").agg(F.count("*").alias("support"))
 
 
 def k_truss(
@@ -912,24 +870,9 @@ def weighted_clustering(graph: GraphTables) -> DataFrame:
     credits all three corners with its two incident weights, one
     groupBy-sum per vertex, one r9 division at the end.
     """
-    from .triangles import _oriented
-
-    o = _oriented(graph).localCheckpoint(eager=True)
-    wedges = (
-        o.alias("e1")
-        .join(o.alias("e2"), F.col("e1.b") == F.col("e2.a"))
-        .select(
-            F.col("e1.a").alias("a"),
-            F.col("e1.b").alias("b"),
-            F.col("e2.b").alias("c"),
-        )
-    )
-    tri = wedges.join(
-        o.select(F.col("a"), F.col("b").alias("c")), ["a", "c"], "left_semi"
-    )
-    half = graph.edges.filter(F.col("src") < F.col("dst")).select(
-        F.col("src").alias("x"), F.col("dst").alias("y"), F.col("weight").alias("w")
-    )
+    half = graph.edges.filter(F.col("src") < F.col("dst"))
+    tri = oriented_triangles(half)[1]
+    half = half.select(F.col("src").alias("x"), F.col("dst").alias("y"), F.col("weight").alias("w"))
 
     def _key(p, q, alias):
         return (
@@ -1142,30 +1085,12 @@ def resource_allocation(
     terms; pa_score is exact int64 (FULL degrees, not capped — the cap
     governs which pairs are candidates, not their endpoint degrees).
     """
-    deg = graph.edges.groupBy(F.col("src").alias("w")).agg(F.count("*").alias("dw"))
-    apex_ok = deg.filter((F.col("dw") >= 2) & (F.col("dw") <= max_apex_degree))
-    nbrs = graph.edges.select(F.col("src").alias("w"), F.col("dst").alias("n")).join(
-        apex_ok, "w"
-    )
-    wedges = (
-        nbrs.alias("l")
-        .join(nbrs.alias("r"), ["w", "dw"])
-        .filter(F.col("l.n") < F.col("r.n"))
-        .select(
-            F.col("l.n").alias("u"),
-            F.col("r.n").alias("v"),
-            (F.lit(1.0) / F.col("dw").cast("double")).alias("contrib"),
-        )
-    )
-    canon = graph.edges.filter(F.col("src") < F.col("dst")).select(
-        F.col("src").alias("u"), F.col("dst").alias("v")
-    )
+    deg, wedges = _open_wedges(graph, max_apex_degree)
     pairs = (
-        wedges.join(canon, ["u", "v"], "left_anti")
-        .groupBy("u", "v")
+        wedges.groupBy("u", "v")
         .agg(
             F.count("*").alias("common_neighbors"),
-            F.round(F.sum("contrib"), 9).alias("ra_r9"),
+            F.round(F.sum(F.lit(1.0) / F.col("dw").cast("double")), 9).alias("ra_r9"),
         )
         .filter(F.col("common_neighbors") >= min_common)
     )

@@ -263,9 +263,9 @@ class _SparkLevel:
         state = sc.broadcast((comm, ctot, moved))
         try:
             moves = driver_round_moves(self.static, state, m, rnd)
+            t = moves.toArrow()
             if rnd <= 1:
                 dump_plan(moves, f"superstep_louvain_round{rnd}")
-            t = moves.toArrow()
         finally:
             state.destroy()
         node = t.column("node").to_numpy()
@@ -712,12 +712,10 @@ def louvain(
             t0 = time.time()
             spark.sparkContext.setJobDescription(f"louvain L{level} R{rnd}")
             q_old = q
-            moves = arrow_round_moves(
+            moves = plan = arrow_round_moves(
                 est, comm_w, m, rnd, level_npart,
                 broadcast_comm_w=n_cw <= bound,
             )
-            if rnd <= 1:
-                dump_plan(moves, f"superstep_louvain_round{rnd}")
             # the kernel runs exactly once per round (the two applies below
             # would otherwise each recompute it). The broadcast decision
             # uses the previous round's move count (vertex count on round
@@ -738,6 +736,9 @@ def louvain(
                     observed(moves, f"louvain L{level} R{rnd} moves",
                              F.count(F.lit(1)).alias("n"))["n"]
                 )
+            if rnd <= 1:
+                # dumped once the kernel ran: AQE's final plan
+                dump_plan(plan, f"superstep_louvain_round{rnd}")
             if n_moves > 0:
                 mv = moves.select("node", F.col("newc").alias("_newc"))
                 if bcast:

@@ -1,9 +1,12 @@
 """Triangle counting over the canonical (src < dst) edge list.
 
-Not in the CUDA reference (SURVEY.md §2.11). Classic two-join plan on the
-degree-ordered orientation: orient every edge from the lower-(degree, id)
-endpoint to the higher one, join wedges (a->b, b->c), then semi-join the
-closing edge (a->c). Degree orientation bounds every vertex's out-degree
+Not in the CUDA reference (SURVEY.md §2.11). Every triangle consumer
+reads one listing, :func:`oriented_triangles`: orient every edge from
+the lower-(degree, id) endpoint to the higher one, join wedges
+(a->b, b->c), then semi-join the closing edge (a->c). The orientation
+is a total order, so each triangle is listed exactly once and the
+closing edge of a wedge a->b->c can only be a->c: the one orientation
+closes every wedge. Degree orientation bounds every vertex's out-degree
 by O(sqrt(m)) on any graph, which is what keeps the wedge join tractable
 on power-law graphs at scale (the hub's 10^6 neighbors never self-join).
 """
@@ -16,51 +19,55 @@ from pyspark.sql import functions as F
 from ..sources.edges import GraphTables
 
 
-def _oriented(graph: GraphTables) -> DataFrame:
-    deg = graph.edges.groupBy(F.col("src").alias("v")).agg(F.count("*").alias("deg"))
-    e = (
-        graph.edges.filter(F.col("src") < F.col("dst"))
-        .join(deg.select(F.col("v").alias("src"), F.col("deg").alias("ds")), "src")
-        .join(deg.select(F.col("v").alias("dst"), F.col("deg").alias("dd")), "dst")
+def _half(graph: GraphTables) -> DataFrame:
+    return graph.edges.filter(F.col("src") < F.col("dst")).select("src", "dst")
+
+
+def _oriented(half: DataFrame) -> DataFrame:
+    """(a, b): each canonical (src < dst) edge of ``half`` pointed from its
+    lower-(degree, id) endpoint to the higher, degree counted over both
+    endpoints of ``half``."""
+    deg = (
+        half.select(F.col("src").alias("v"))
+        .unionByName(half.select(F.col("dst").alias("v")))
+        .groupBy("v")
+        .agg(F.count("*").alias("deg"))
     )
-    keep = (F.col("ds") < F.col("dd")) | (
-        (F.col("ds") == F.col("dd")) & (F.col("src") < F.col("dst"))
+    e = half.join(deg.select(F.col("v").alias("src"), F.col("deg").alias("ds")), "src").join(
+        deg.select(F.col("v").alias("dst"), F.col("deg").alias("dd")), "dst"
     )
-    lo_first = e.filter(keep).select(F.col("src").alias("a"), F.col("dst").alias("b"))
-    hi_first = e.filter(~keep).select(F.col("dst").alias("a"), F.col("src").alias("b"))
-    return lo_first.unionByName(hi_first)
+    # src < dst on every row, so an equal degree keeps the edge as it is
+    lo = F.col("ds") <= F.col("dd")
+    return e.select(
+        F.when(lo, F.col("src")).otherwise(F.col("dst")).alias("a"),
+        F.when(lo, F.col("dst")).otherwise(F.col("src")).alias("b"),
+    )
+
+
+def oriented_triangles(half: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """``(o, tri)`` over a canonical (src < dst) edge table: ``o`` (a, b)
+    is the degree orientation, checkpointed eagerly; ``tri`` (a, b, c) is
+    each triangle once, as its oriented edges a->b, b->c and a->c."""
+    o = _oriented(half).localCheckpoint(eager=True)
+    tri = (
+        o.alias("e1")
+        .join(o.alias("e2"), F.col("e1.b") == F.col("e2.a"))
+        .select(F.col("e1.a").alias("a"), F.col("e1.b").alias("b"), F.col("e2.b").alias("c"))
+        .join(o.select("a", F.col("b").alias("c")), ["a", "c"], "left_semi")
+    )
+    return o, tri
 
 
 def triangle_count(graph: GraphTables) -> int:
     """Total number of triangles in the undirected graph."""
-    o = _oriented(graph).localCheckpoint(eager=True)
-    wedges = (
-        o.alias("e1")
-        .join(o.alias("e2"), F.col("e1.b") == F.col("e2.a"))
-        .select(F.col("e1.a").alias("x"), F.col("e2.b").alias("y"), F.col("e1.b").alias("apex"))
-    )
-    closing = o.select(F.col("a").alias("x"), F.col("b").alias("y")).unionByName(
-        o.select(F.col("b").alias("x"), F.col("a").alias("y"))
-    )
-    return wedges.join(closing, ["x", "y"], "left_semi").count()
+    return oriented_triangles(_half(graph))[1].count()
 
 
 def triangles_per_vertex(graph: GraphTables) -> DataFrame:
     """(id: long, triangles: long) — per-vertex incident triangle counts."""
-    o = _oriented(graph).localCheckpoint(eager=True)
-    wedges = (
-        o.alias("e1")
-        .join(o.alias("e2"), F.col("e1.b") == F.col("e2.a"))
-        .select(F.col("e1.a").alias("x"), F.col("e2.b").alias("y"), F.col("e1.b").alias("apex"))
-    )
-    closing = o.select(F.col("a").alias("x"), F.col("b").alias("y")).unionByName(
-        o.select(F.col("b").alias("x"), F.col("a").alias("y"))
-    )
-    tri = wedges.join(closing, ["x", "y"], "left_semi")
+    tri = oriented_triangles(_half(graph))[1]
     per = (
-        tri.select(F.col("x").alias("id"))
-        .unionByName(tri.select(F.col("y").alias("id")))
-        .unionByName(tri.select(F.col("apex").alias("id")))
+        tri.select(F.explode(F.array("a", "b", "c")).alias("id"))
         .groupBy("id")
         .agg(F.count("*").alias("triangles"))
     )
@@ -74,29 +81,16 @@ def triangles_per_vertex(graph: GraphTables) -> DataFrame:
 def clique4_count(graph: GraphTables) -> DataFrame:
     """One row (n_triangles, n_four_cliques) — exact K3 and K4 counts.
 
-    Chiba-Nishizeki-style listing on the same degree orientation as
-    :func:`triangle_count`: an oriented triangle (a->b, b->c, a->c)
-    lists each K3 once (the orientation is a total order on any
-    vertex set); a K4 is counted once as its orientation-minimal
+    Chiba-Nishizeki-style listing on :func:`oriented_triangles`: each K3
+    is listed once; a K4 is counted once as its orientation-minimal
     triangle extended by the orientation-maximal vertex x with all of
     a->x, b->x, c->x present. Out-degrees are O(sqrt(m)) under the
     degree orientation, so both the wedge join and the extension join
     stay hub-safe on power-law graphs — no per-vertex neighborhood
     ever self-joins at hub scale. All counts exact int64.
     """
-    o = _oriented(graph).localCheckpoint(eager=True)
-    wedges = (
-        o.alias("e1")
-        .join(o.alias("e2"), F.col("e1.b") == F.col("e2.a"))
-        .select(
-            F.col("e1.a").alias("a"),
-            F.col("e1.b").alias("b"),
-            F.col("e2.b").alias("c"),
-        )
-    )
-    tri = wedges.join(
-        o.select(F.col("a"), F.col("b").alias("c")), ["a", "c"], "left_semi"
-    ).localCheckpoint(eager=True)
+    o, tri = oriented_triangles(_half(graph))
+    tri = tri.localCheckpoint(eager=True)
     ext = tri.join(
         o.select(F.col("a").alias("c"), F.col("b").alias("x")), "c"
     )

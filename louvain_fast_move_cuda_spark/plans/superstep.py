@@ -72,10 +72,11 @@ def supersteps(name, state, step, measure, done, max_iter, checkpointer=None, me
     rounds = start
     for it in range(start, max_iter):
         nxt = step(state, metric)
-        if it == start:
-            dump_plan(nxt, f"superstep_{name}")
         state = nxt.localCheckpoint(eager=False)
         prev, metric = metric, measure(state, f"{name} R{it}")
+        if it == start:
+            # the checkpoint ran nxt's own plan: AQE's final plan
+            dump_plan(nxt, f"superstep_{name}")
         metric["done"] = bool(done(metric, prev))
         if checkpointer is not None:
             checkpointer.save(it, state, metric)
@@ -173,9 +174,9 @@ def broadcast_gather(spark, name, ids, key, aggregate):
     def gather(it, **state):
         sc.setJobDescription(f"{name} R{it}")
         out = aggregate(F.broadcast(spark.createDataFrame(pa.table({key: ids, **state}))))
+        t = out.toArrow()
         if it == 0:
             dump_plan(out, f"superstep_{name}")
-        t = out.toArrow()
         return np.searchsorted(ids, t.column(0).to_numpy()), t
 
     return gather

@@ -138,10 +138,20 @@ def test_triangle_count_known_graphs(spark):
 
 
 def test_triangles_per_vertex_sums_to_3x_total(spark):
-    pl = powerlaw_graph(n=100, m_attach=2, seed=5)
-    g = _graph(spark, pl)
-    per = {r.id: r.triangles for r in triangles_per_vertex(g).collect()}
-    assert sum(per.values()) == 3 * _brute_triangles(pl)
+    """Every vertex's count equals a brute-force count, on a power-law
+    graph and on K4 plus a pendant triangle (degree ties broken by id)."""
+    k4_pendant = [(a, b) for a in range(4) for b in range(a + 1, 4)] + [(3, 4), (3, 5), (4, 5)]
+    for edges in (powerlaw_graph(n=100, m_attach=2, seed=5), k4_pendant):
+        adj = defaultdict(set)
+        for a, b in edges:
+            adj[a].add(b)
+            adj[b].add(a)
+        want = {
+            v: sum(1 for x in ns for y in ns if x < y and y in adj[x]) for v, ns in adj.items()
+        }
+        per = {r.id: r.triangles for r in triangles_per_vertex(_graph(spark, edges)).collect()}
+        assert per == want
+        assert sum(per.values()) == 3 * _brute_triangles(edges)
 
 
 def test_directed_pagerank_matches_numpy_with_dangling_mass(spark):

@@ -220,6 +220,19 @@ def test_k_truss_peels_pendant_triangles_and_keeps_k4(spark):
     # 5-truss of this graph is empty, and an empty result is well-formed
     assert k_truss(g, k=5).count() == 0
 
+    # every edge's support on a power-law graph against brute force
+    pl = powerlaw_graph(n=120, m_attach=2, seed=3)
+    nbrs = _adj(pl)
+    want = {
+        (a, b): len(nbrs[a] & nbrs[b])
+        for a, b in {(min(e), max(e)) for e in pl}
+        if nbrs[a] & nbrs[b]
+    }
+    gp = _gt(spark, pl)
+    got = {(r.src, r.dst): r.support for r in edge_support(
+        gp.edges.filter("src < dst").select("src", "dst")).collect()}
+    assert got == want
+
 
 def test_k_truss_truncation_guard_raises_on_deep_peel(spark):
     import pytest

@@ -91,6 +91,26 @@ def test_vertex_programs_dump_their_superstep_plans(spark, tmp_path, monkeypatch
         assert "Physical Plan" in text, name
 
 
+def test_superstep_plan_is_dumped_after_it_ran(spark, tmp_path, monkeypatch):
+    """The DataFrame loop dumps a superstep's plan once the superstep ran,
+    so under AQE the file holds the final plan, not the initial one."""
+    from louvain_fast_move_cuda_spark.operators.components import connected_components
+    from louvain_fast_move_cuda_spark.sources.edges import build_graph
+    from oracle import powerlaw_graph
+
+    out = tmp_path / "plans"
+    monkeypatch.setenv("SPARK_GRAFT_DUMP_PLAN_DIR", str(out))
+    monkeypatch.setattr(debug, "_seen", set())
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+    g = build_graph(
+        spark.createDataFrame(powerlaw_graph(n=60, m_attach=2, seed=2), "a long, b long"),
+        relabel=False,
+    )
+    ck = VertexIterationCheckpointer(str(tmp_path / "ck"), algo="cc")
+    connected_components(g, checkpointer=ck).collect()
+    assert "isFinalPlan=true" in (out / "superstep_cc.txt").read_text()
+
+
 def test_sql_conf_restores_settings(spark):
     """The conf scope puts back a set key after a normal return and after
     an exception, and leaves a key that was unset unset."""
